@@ -1804,7 +1804,8 @@ object SparkEntry {
       val ev = evOf("val", col("k") <= 50)
         .unionByName(ddlRow)
         .unionByName(evOf("val2", col("k") > 50))
-      val staged = Staged.parquetStage(ev, Staged.tempDir("q107-stage"))
+      val staged = WireReplicaJob.stageRouted(ev,
+        Staged.tempDir("q107-stage"))
       val root = Staged.tempDir("q107-target")
       WireReplicaJob.applyRoutedWithDdl(staged,
         Seq(WireReplicaJob.TableTarget("app", "orders",

@@ -90,9 +90,11 @@ object LiveReplicaJob {
     * semantics). The per-DN cursor is the ONE shared source position:
     * it advances only after every table applied, and each table's own
     * committed-TSO gate makes the replayed prefix idempotent when a
-    * crash lands between tables. With more than one target the decoded
-    * rows are staged once (`stagingDir`_decoded) so routing never
-    * re-runs the wire decode per table. */
+    * crash lands between tables. With more than one target (or DDL in
+    * stream) the decoded rows are staged once (`stagingDir`_decoded,
+    * [[WireReplicaJob.stageRouted]]) so routing never re-runs the wire
+    * decode per table; `onDdl` then receives the trigger's DDL rows,
+    * observed by that staging write, in fold order. */
   def pollApplyOnceRouted(spark: SparkSession, endpoints: Seq[Endpoint],
       tableCols: Map[(String, String), Seq[String]],
       targets: Seq[WireReplicaJob.TableTarget], stagingDir: String,
@@ -101,7 +103,9 @@ object LiveReplicaJob {
       soTimeoutMs: Int = 30000,
       maxBytesPerPoll: Long = Long.MaxValue,
       ddlInStream: Boolean = false,
-      onPoll: PollNote => Unit = _ => ()): Seq[Endpoint] = {
+      onPoll: PollNote => Unit = _ => (),
+      onDdl: Seq[(Long, String, String)] => Unit = _ => ())
+      : Seq[Endpoint] = {
     import spark.implicits._
     WireReplicaJob.validateTargets(targets)
     val polled = spark.createDataset(endpoints)
@@ -138,9 +142,8 @@ object LiveReplicaJob {
     // one target consumes the decode once anyway; N targets (or the
     // DDL fold's extra passes) read a decoded stage so the wire decode
     // never re-runs per table
-    val decoded =
-      if (targets.size == 1 && !ddlInStream) changes
-      else Staged.parquetStage(changes, stagingDir + "_decoded")
+    val decoded = routedInput(changes, targets, ddlInStream,
+      stagingDir, onDdl)
     // the apply and the cursor collect are independent consumers of the
     // already-materialized stages (disjoint outputs) — overlap them
     // (guide §2.6). onPoll stays AFTER both: a failed apply must not
@@ -170,6 +173,21 @@ object LiveReplicaJob {
     }
   }
 
+  /** A poll's decoded rows as the routed apply's input: staged with
+    * the routing probe unless one target and no DDL need no stage. */
+  private def routedInput(changes: org.apache.spark.sql.DataFrame,
+      targets: Seq[WireReplicaJob.TableTarget], ddlInStream: Boolean,
+      stagingDir: String, onDdl: Seq[(Long, String, String)] => Unit)
+      : WireReplicaJob.RoutedBatch =
+    if (targets.size == 1 && !ddlInStream)
+      WireReplicaJob.RoutedBatch.unstaged(changes, targets.head)
+    else {
+      val staged = WireReplicaJob.stageRouted(changes,
+        stagingDir + "_decoded")
+      onDdl(staged.ddls)
+      staged
+    }
+
   /** A DN endpoint whose cursor is its executed GTID SET — the
     * failover-proof replica position (see
     * [[graft.sources.BinlogDumpClient.dumpSegmentGtid]]). */
@@ -195,7 +213,9 @@ object LiveReplicaJob {
       soTimeoutMs: Int = 30000,
       maxBytesPerPoll: Long = Long.MaxValue,
       ddlInStream: Boolean = false,
-      onPoll: PollNote => Unit = _ => ()): Seq[GtidEndpoint] = {
+      onPoll: PollNote => Unit = _ => (),
+      onDdl: Seq[(Long, String, String)] => Unit = _ => ())
+      : Seq[GtidEndpoint] = {
     import spark.implicits._
     WireReplicaJob.validateTargets(targets)
     val eps = endpoints.map(e =>
@@ -230,9 +250,8 @@ object LiveReplicaJob {
     val changes = ChangeEventSource.fromWireSegments(
       staged.filter(length(col("payload")) > 0).select("dn", "payload"),
       "dn", "payload", tableCols)
-    val decoded =
-      if (targets.size == 1 && !ddlInStream) changes
-      else Staged.parquetStage(changes, stagingDir + "_decoded")
+    val decoded = routedInput(changes, targets, ddlInStream,
+      stagingDir, onDdl)
     if (ddlInStream)
       WireReplicaJob.applyRoutedWithDdl(decoded, targets, txnsPerCommit,
         fromTso)
@@ -397,36 +416,21 @@ object LiveReplicaJob {
       (saved -- initial.keySet)
   }
 
-  /** One batch's registry evolution: fold the decoded batch's DDL
-    * statements into `reg` — the cross-trigger half of the decoder's
-    * in-segment schema tracking, shared by the standing runner and
-    * streaming (graft-cdc foreachBatch) consumers. Ordered by
-    * (tso, ddl) — the SAME tie-break as applyRoutedWithDdl's
-    * target-side fold, so equal-tso statements cannot fold differently
-    * into registry vs target schema across a restart. */
-  def evolveRegistryFromBatch(decoded: org.apache.spark.sql.DataFrame,
+  /** One batch's registry evolution: fold the batch's DDL rows
+    * (tso, schemaName, ddl) into `reg` — the cross-trigger half of the
+    * decoder's in-segment schema tracking, shared by the standing runner
+    * and streaming (graft-cdc foreachBatch) consumers. The rows come
+    * from the batch's staging write ([[WireReplicaJob.stageRouted]], or
+    * the Global Binlog's own stage observation) in (tso, ddl) order —
+    * the SAME order as applyRoutedWithDdl's target-side fold, so
+    * equal-tso statements cannot fold differently into registry vs
+    * target schema across a restart. */
+  def evolveRegistryFromBatch(ddls: Seq[(Long, String, String)],
       reg: Map[(String, String), Seq[String]])
-      : Map[(String, String), Seq[String]] = {
-    val spark = decoded.sparkSession
-    import spark.implicits._
-    val ddls = decoded
-      .filter(col("op") === "DDL" && col("ddl").isNotNull)
-      .select(col("tso").cast("long"), col("schemaName"), col("ddl"))
-      .orderBy(col("tso"), col("ddl"))
-      .as[(Long, String, String)].collect()
+      : Map[(String, String), Seq[String]] =
     ddls.foldLeft(reg) { case (r, (_, sch, stmt)) =>
       graft.sinks.BinlogWire.evolveRegistry(r, sch, stmt)
     }
-  }
-
-  /** [[evolveRegistryFromBatch]] over a staged decoded trigger. */
-  private def evolveFromStage(spark: SparkSession, decodedStage: String,
-      reg: Map[(String, String), Seq[String]])
-      : Map[(String, String), Seq[String]] = {
-    val root = new org.apache.hadoop.fs.Path(decodedStage)
-    if (!graft.util.HadoopIo.fsOf(root).exists(root)) reg
-    else evolveRegistryFromBatch(spark.read.parquet(decodedStage), reg)
-  }
 
   // ---- the standing-loop runner ----
 
@@ -486,14 +490,15 @@ object LiveReplicaJob {
     val c1236 = scala.collection.mutable.Map.empty[String, Int]
     while (!shouldStop() && n < maxTriggers) {
       val notes = scala.collection.mutable.ArrayBuffer.empty[PollNote]
+      var ddls = Seq.empty[(Long, String, String)]
       val next = pollApplyOnceRouted(spark, eps, reg, targets,
         stagingDir, txnsPerCommit, fromTso, serverId, soTimeoutMs,
-        maxBytesPerPoll, ddlInStream, notes += _)
+        maxBytesPerPoll, ddlInStream, notes += _, ddls = _)
       note1236(c1236,
         notes.flatMap(x => x.skip1236.map(x.dn -> _)).toMap,
         eps.map(_.dn), loopId)
       if (ddlInStream) {
-        val evolved = evolveFromStage(spark, stagingDir + "_decoded", reg)
+        val evolved = evolveRegistryFromBatch(ddls, reg)
         if (evolved != reg) { reg = evolved; saveRegistry(cursorDir, reg) }
       }
       saveCursors(cursorDir, next)
@@ -554,14 +559,15 @@ object LiveReplicaJob {
     val c1236 = scala.collection.mutable.Map.empty[String, Int]
     while (!shouldStop() && n < maxTriggers) {
       val notes = scala.collection.mutable.ArrayBuffer.empty[PollNote]
+      var ddls = Seq.empty[(Long, String, String)]
       val next = pollApplyOnceGtid(spark, eps, reg, targets,
         stagingDir, txnsPerCommit, fromTso, serverId, soTimeoutMs,
-        maxBytesPerPoll, ddlInStream, notes += _)
+        maxBytesPerPoll, ddlInStream, notes += _, ddls = _)
       note1236(c1236,
         notes.flatMap(x => x.skip1236.map(x.dn -> _)).toMap,
         eps.map(_.dn), loopId)
       if (ddlInStream) {
-        val evolved = evolveFromStage(spark, stagingDir + "_decoded", reg)
+        val evolved = evolveRegistryFromBatch(ddls, reg)
         if (evolved != reg) { reg = evolved; saveRegistry(cursorDir, reg) }
       }
       saveGtidCursors(cursorDir, next)

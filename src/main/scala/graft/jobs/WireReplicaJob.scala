@@ -56,6 +56,70 @@ object WireReplicaJob {
     def table: (String, String) = (schemaName, tableName)
   }
 
+  /** One routed trigger's input: the decoded frame plus the routing
+    * facts its staging write observed ([[stageRouted]]) — every
+    * (schemaName, tableName) pair its rows carry, and its DDL rows as
+    * (tso, schemaName, ddl) in (tso, ddl) order. */
+  final case class RoutedBatch(frame: DataFrame,
+      tables: Set[(String, String)], ddls: Seq[(Long, String, String)])
+
+  object RoutedBatch {
+    /** The single-target, no-DDL trigger that skips staging: its one
+      * target is taken as present (an absent table's apply finds no
+      * rows and commits nothing) and no DDL folds. */
+    def unstaged(frame: DataFrame, target: TableTarget): RoutedBatch =
+      RoutedBatch(frame, Set(target.table), Seq.empty)
+  }
+
+  /** Stage a decoded trigger to parquet under `dir` (overwritten per
+    * call) and read it back, with the routing facts riding the staging
+    * write as observed metrics: the (schemaName, tableName) set over all
+    * rows and the DDL rows. A Binlog-X fan-out stream carries only the
+    * tables hashed (or pinned) to it, so a consumer routing the full
+    * registry would otherwise pay a staged image pass per absent table
+    * (measured ~6 s × absent table per trigger at the sf1 rehearsal);
+    * the probe is bounded by table and DDL-statement counts, never by
+    * rows, and costs no job beyond the write itself. */
+  def stageRouted(batch: DataFrame, dir: String): RoutedBatch = {
+    val probe = org.apache.spark.sql.Observation()
+    // a frame without a ddl column (row-only producers) carries no DDL
+    val ddls =
+      if (batch.columns.contains("ddl")) Seq(ddlProbe.as("ddls")) else Nil
+    val staged = graft.operators.Staged.parquetStage(
+      batch.observe(probe,
+        collect_set(struct(col("schemaName"), col("tableName")))
+          .as("tables"), ddls: _*),
+      dir)
+    val m = probe.get
+    RoutedBatch(staged,
+      m("tables").asInstanceOf[Seq[org.apache.spark.sql.Row]]
+        .map(r => (r.getString(0), r.getString(1))).toSet,
+      m.get("ddls").map(ddlsOf).getOrElse(Seq.empty))
+  }
+
+  /** The observed-metric aggregate that lists a decoded batch's DDL
+    * rows; [[ddlsOf]] reads its value back. Shared by [[stageRouted]]
+    * and the Global Binlog's registry path, which observes its own
+    * stage write. */
+  private[graft] def ddlProbe: Column =
+    collect_list(when(col("op") === "DDL" && col("ddl").isNotNull,
+      struct(col("tso").cast("long"), col("schemaName"), col("ddl"))))
+
+  /** [[ddlProbe]]'s value as (tso, schemaName, ddl) rows, ordered by
+    * (tso, ddl) as Spark orders them (ddl by UTF-8 bytes) — the
+    * deterministic fold order of both the target-side DDL fold and the
+    * registry evolution, so equal-tso statements never fold differently
+    * into the two across a restart. */
+  private[graft] def ddlsOf(observed: Any): Seq[(Long, String, String)] = {
+    import org.apache.spark.unsafe.types.UTF8String
+    observed.asInstanceOf[Seq[org.apache.spark.sql.Row]]
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      .sortWith { case ((t1, _, d1), (t2, _, d2)) =>
+        t1 < t2 || (t1 == t2 &&
+          UTF8String.fromString(d1).compareTo(UTF8String.fromString(d2)) < 0)
+      }
+  }
+
   /** Route one decoded multi-table batch to per-table `TxnApplier`
     * targets — the reference's SplitApplier restated: the decode side
     * already emits every table's rows (`fromWireSegments` takes the
@@ -72,17 +136,20 @@ object WireReplicaJob {
     * (skipped, at-or-below its lastTso) and applies to B — per-table
     * exactly-once without cross-table coordination.
     *
-    * `decoded` is consumed once per target — CALLERS with more than
-    * one target must pass a materialized frame (staged parquet; the
-    * routed entry points below do) or each target re-runs the wire
-    * decode. */
-  def applyRouted(decoded: DataFrame, targets: Seq[TableTarget],
+    * `batch.frame` is consumed once per target — callers with more
+    * than one target stage it through [[stageRouted]] (the routed entry
+    * points below do), so no target re-runs the wire decode. Only the
+    * targets whose table the batch carries apply: skipping an absent
+    * table is safe, its committed lastTso gate only moves when rows
+    * apply. */
+  def applyRouted(batch: RoutedBatch, targets: Seq[TableTarget],
       txnsPerCommit: Int = 8, fromTso: Option[Long] = None,
       maxParallelTables: Int = 4,
       applyMode: TxnApplier.ApplyMode = TxnApplier.ApplyMode.Cow,
       compactAfter: Int = 32,
       compactMaxBuckets: Int = Int.MaxValue): Unit = {
     validateTargets(targets)
+    val decoded = batch.frame
     // configured-but-quiet targets still bootstrap (metadata-only,
     // limit 0) on the FIRST batch: the schema sidecar must exist before
     // a table's first rows arrive, because maintenance cadences
@@ -98,7 +165,8 @@ object WireReplicaJob {
           t.keyCols, t.targetDir, t.nBuckets,
           initialTso = fromTso.getOrElse(0L))
       }
-    inParallel(presentTargets(decoded, targets), maxParallelTables) { t =>
+    inParallel(targets.filter(t => batch.tables(t.table)),
+        maxParallelTables) { t =>
       // the target's CURRENT schema and persisted rename lineage, not
       // the caller's snapshot: after an evolution/rebuild in an earlier
       // batch, a stale TableTarget (or a stale decode registry naming a
@@ -110,24 +178,6 @@ object WireReplicaJob {
         TxnApplier.renameLineage(t.targetDir), applyMode, compactAfter,
         compactMaxBuckets)
     }
-  }
-
-  /** The targets THIS batch actually carries rows for — one tiny
-    * distinct job (bounded by table count) instead of a full staged
-    * image pass per absent table. A Binlog-X fan-out stream carries
-    * only the tables hashed (or pinned) to it, so a consumer routing
-    * the full registry would otherwise pay most of its trigger in
-    * staging provably-empty frames (measured ~6 s × absent-table per
-    * trigger at the sf1 rehearsal). Skipping an absent table is safe:
-    * its committed lastTso gate only moves when rows apply. */
-  private def presentTargets(decoded: DataFrame,
-      targets: Seq[TableTarget]): Seq[TableTarget] = {
-    if (targets.size <= 1) return targets
-    val present = decoded
-      .select(col("schemaName"), col("tableName")).distinct()
-      .collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    targets.filter(t => present.contains((t.schemaName, t.tableName)))
   }
 
   private def applyOne(decoded: DataFrame, t: TableTarget,
@@ -233,15 +283,16 @@ object WireReplicaJob {
     *  - DDL for tables nobody routes: ignored, like their row events.
     *
     * The DDL stream is folded DRIVER-SIDE in TSO order — DDL is
-    * human-scale (schema changes per trigger, not rows), the one
-    * bounded collect this path adds. Idempotent across batch replays:
-    * re-adding an identical column or re-dropping an absent one
-    * no-ops, so the foreachBatch replay story is unchanged. Targets
+    * human-scale (schema changes per trigger, not rows), so its rows
+    * arrive in `batch.ddls`, observed by the staging write
+    * ([[stageRouted]]) at no job of their own. Idempotent across batch
+    * replays: re-adding an identical column or re-dropping an absent
+    * one no-ops, so the foreachBatch replay story is unchanged. Targets
     * are bootstrapped (schema-only) BEFORE the fold so evolution
     * always has a sidecar to evolve; row apply then shapes each table
     * with its target's CURRENT (possibly evolved) schema — the target
     * IS the schema state, callers never track evolution. */
-  def applyRoutedWithDdl(decoded: DataFrame, targets: Seq[TableTarget],
+  def applyRoutedWithDdl(batch: RoutedBatch, targets: Seq[TableTarget],
       txnsPerCommit: Int = 8, fromTso: Option[Long] = None,
       maxParallelTables: Int = 4,
       applyMode: TxnApplier.ApplyMode = TxnApplier.ApplyMode.Cow,
@@ -249,8 +300,8 @@ object WireReplicaJob {
       compactMaxBuckets: Int = Int.MaxValue): Unit = {
     import graft.operators.DdlParser
     validateTargets(targets)
+    val decoded = batch.frame
     val spark = decoded.sparkSession
-    import spark.implicits._
     val byTable = targets.map(t => t.table -> t).toMap
     targets.foreach { t =>
       if (TxnApplier.currentCommit(t.targetDir).isEmpty) {
@@ -261,11 +312,6 @@ object WireReplicaJob {
           initialTso = fromTso.getOrElse(0L))
       }
     }
-    val ddls = decoded
-      .filter(col("op") === "DDL" && col("ddl").isNotNull)
-      .select(col("tso").cast("long"), col("schemaName"), col("ddl"))
-      .orderBy(col("tso"), col("ddl")) // ddl tie-break: deterministic fold
-      .as[(Long, String, String)].collect()
     // DDL honors a position gate like the rows do: a statement at or
     // below max(committed row TSO, committed DDL TSO) already took
     // effect in some earlier trigger and skips — so a replayed batch
@@ -289,7 +335,7 @@ object WireReplicaJob {
       targets.map(t =>
         t.table -> TxnApplier.renameLineage(t.targetDir)): _*)
       .withDefaultValue(Map.empty)
-    ddls.foreach { case (tso, defaultSchema, stmt) =>
+    batch.ddls.foreach { case (tso, defaultSchema, stmt) =>
       DdlParser.parseAll(stmt, defaultSchema).foreach { parsed =>
       parsed match {
         // renaming a ROUTED TABLE refuses loudly: the decode registry
@@ -443,7 +489,8 @@ object WireReplicaJob {
       }
       }
     }
-    inParallel(presentTargets(decoded, targets), maxParallelTables) { t =>
+    inParallel(targets.filter(t => batch.tables(t.table)),
+        maxParallelTables) { t =>
       val evolved = TxnApplier.targetSchema(t.targetDir).get.fields
         .toSeq.map(f => f.name -> f.dataType.sql)
       applyOne(decoded, t, evolved, txnsPerCommit, fromTso,
@@ -490,12 +537,13 @@ object WireReplicaJob {
 
   /** Start the wire replica for a SET of replicated tables off one
     * stream — each micro-batch decodes the wire files once and routes
-    * per-table through [[applyRouted]]. With more than one target the
-    * decoded batch is staged to parquet first (under the checkpoint
-    * dir) so N targets read the stage, never re-run the wire decode; a
-    * replayed trigger overwrites the stage byte-identically, and every
-    * target's own position gate drops what it already applied — see
-    * [[applyRouted]] for the crash-safety argument. */
+    * per-table through [[applyRouted]]. With more than one target (or
+    * DDL in stream) the decoded batch is staged through [[stageRouted]]
+    * (under the checkpoint dir) so N targets read the stage, never
+    * re-run the wire decode; a replayed trigger overwrites the stage
+    * byte-identically, and every target's own position gate drops what
+    * it already applied — see [[applyRouted]] for the crash-safety
+    * argument. */
   def startRouted(spark: SparkSession, wireDir: String,
       tableCols: Map[(String, String), Seq[String]],
       targets: Seq[TableTarget], checkpointDir: String,
@@ -523,9 +571,9 @@ object WireReplicaJob {
         // time just to count; bootstrap is schema-only (limit 0) and
         // applyBatch's own staged probe short-circuits an empty batch
         val input =
-          if (targets.size == 1 && !ddlInStream) batch
-          else graft.operators.Staged.parquetStage(batch,
-            s"$checkpointDir/_route_stage")
+          if (targets.size == 1 && !ddlInStream)
+            RoutedBatch.unstaged(batch, targets.head)
+          else stageRouted(batch, s"$checkpointDir/_route_stage")
         if (ddlInStream)
           applyRoutedWithDdl(input, targets, txnsPerCommit, fromTso)
         else applyRouted(input, targets, txnsPerCommit, fromTso)

@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.ArrayBinarySearch
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Transaction-preserving apply: the target only ever exposes states that
@@ -52,6 +54,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * micro-batch is still two shuffles. `txnsPerCommit` > 1 is the
   * reference's own small-transaction merging — every commit boundary is
   * still a transaction boundary.
+  *
+  * The per-trigger plan is sized for a standing replica, where a trigger
+  * carries tens of rows and fixed cost dominates: the commit groups and
+  * each bucket's writer groups reach the executors as literal arrays
+  * bounded by commit groups (never a broadcast join, which costs a Spark
+  * job of its own per join), and the replay gate reads the committed TSO
+  * through a function reference, so each trigger runs the generated
+  * classes the previous one compiled.
   *
   * All target IO goes through the Hadoop FileSystem API: `dir` may be any
   * configured scheme (file://, hdfs://, s3a://, oss://). The pointer swap
@@ -586,18 +596,6 @@ object TxnApplier {
     c
   }
 
-  /** Apply a change batch preserving transaction atomicity: transactions
-    * (grouped by `tsoCol`, the commit TSO) are applied in TSO order,
-    * `txnsPerCommit` consecutive transactions per atomic target commit.
-    * Exactly-once across batch replays: transactions at or below the
-    * committed `lastTso` are skipped, so a foreachBatch replay after a
-    * crash resumes at the first unapplied transaction — a half-applied
-    * batch never doubles.
-    *
-    * Cost shape (see object doc): one staged image job + one cumulative
-    * per-commit-contents job, then metadata-only publication per commit.
-    * A crash mid-publication leaves a committed prefix of whole commit
-    * groups; the rest replays. */
   /** Phase timing to stderr when GRAFT_PROF is set (perf triage aid). */
   private def profTimed[T](label: String)(body: => T): T =
     if (!sys.env.contains("GRAFT_PROF")) body
@@ -607,6 +605,37 @@ object TxnApplier {
         f"[txnapplier] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       r
     }
+
+  /** The replay gate: rows past the committed `lastTso`. The TSO is
+    * read through the function's closure, not inlined as a literal, so
+    * every trigger's gate compiles to the same generated class — an
+    * inlined literal makes each new TSO new source, compiled once per
+    * table per trigger and evicting stable classes from the codegen
+    * cache. */
+  private def pastTso(tsoCol: String, lastTso: Long): Column =
+    udf((t: Long) => t > lastTso).apply(col(tsoCol).cast("long"))
+
+  /** Each transaction's commit group: the index of the last group whose
+    * first TSO is at or below it (groups are consecutive runs of the
+    * sorted TSOs). One binary search per row over a literal array of
+    * group-start TSOs — O(#groups) driver data, no join. */
+  private def groupOf(groups: Seq[Array[Long]], tso: Column): Column = {
+    val i = ColumnBridge.column(ArrayBinarySearch(
+      ColumnBridge.expression(typedLit(groups.map(_.head))),
+      ColumnBridge.expression(tso.cast("long"))))
+    when(i >= 0, i).otherwise(-i - 2)
+  }
+
+  /** The probe's (tso, bucket) pairs as the ordered commit groups
+    * (`txnsPerCommit` consecutive TSOs each) and each group's touched
+    * buckets, indexed by group. */
+  private def commitGroups(tsoBuckets: Array[(Long, Int)],
+      txnsPerCommit: Int): (Vector[Array[Long]], Vector[Set[Int]]) = {
+    val groups = tsoBuckets.map(_._1).distinct.sorted
+      .grouped(math.max(1, txnsPerCommit)).toVector
+    val bucketsOf = tsoBuckets.groupMap(_._1)(_._2)
+    (groups, groups.map(_.flatMap(bucketsOf).toSet))
+  }
 
   /** Job 1 of both apply modes — ONE scan of the source batch: final
     * image per (transaction, key), staged so everything downstream
@@ -653,6 +682,20 @@ object TxnApplier {
       }
     }
 
+  /** Apply a change batch preserving transaction atomicity: transactions
+    * (grouped by `tsoCol`, the commit TSO) are applied in TSO order,
+    * `txnsPerCommit` consecutive transactions per atomic target commit.
+    * Exactly-once across batch replays: transactions at or below the
+    * committed `lastTso` are skipped, so a foreachBatch replay after a
+    * crash resumes at the first unapplied transaction — a half-applied
+    * batch never doubles.
+    *
+    * Cost shape (see object doc): one staged image job + one cumulative
+    * per-commit-contents job, then metadata-only publication per commit.
+    * Neither job joins against driver-built frames: the (tso → commit
+    * group) and (bucket → writer groups) maps ride the plan as literal
+    * arrays. A crash mid-publication leaves a committed prefix of whole
+    * commit groups; the rest replays. */
   def applyBatch(batch: DataFrame, keyCols: Seq[String], seqCol: String,
       opCol: String, tsoCol: String, dir: String, nBuckets: Int = 64,
       txnsPerCommit: Int = 1): Seq[Commit] = {
@@ -669,7 +712,7 @@ object TxnApplier {
         readPointer(root).get
       } else (start0, schemaV0)
     val fs = fsOf(root)
-    val fresh = batch.filter(col(tsoCol) > start.lastTso)
+    val fresh = batch.filter(pastTso(tsoCol, start.lastTso))
     val staging = new Path(root, "_batchstage")
     if (fs.exists(staging)) fs.delete(staging, true)
     def timed[T](label: String)(body: => T): T = profTimed(label)(body)
@@ -677,27 +720,17 @@ object TxnApplier {
       val (images, tsoBuckets) = stageFinalImages(fresh, keyCols, seqCol,
         opCol, tsoCol, nBuckets, staging)
       if (tsoBuckets.isEmpty) return Seq.empty
-      val tsos = tsoBuckets.map(_._1).distinct.sorted
-      val groups = tsos.grouped(math.max(1, txnsPerCommit)).toVector
-      import spark.implicits._
-      val grpOfTso = groups.zipWithIndex
-        .flatMap { case (g, i) => g.map(t => (t, i)) }.toMap
-      val grpDf = grpOfTso.toSeq.toDF("__gtso", "__grp")
-      val imagesG = images
-        .join(broadcast(grpDf), col(tsoCol).cast("long") === col("__gtso"))
-        .drop("__gtso")
-      val touchedByGrp = tsoBuckets
-        .groupBy { case (t, _) => grpOfTso(t) }
-        .map { case (g, pairs) => g -> pairs.map(_._2).toSet }
+      val (groups, touchedByGrp) = commitGroups(tsoBuckets, txnsPerCommit)
+      val imagesG = images.withColumn("__grp", groupOf(groups, col(tsoCol)))
 
       // job 2 — every commit's rewritten-bucket contents in one pass.
       // Rows in play: the touched buckets' current target rows (pseudo
-      // txn order -1) plus all image rows. A (bucket, writing-group) pair
-      // list replicates each row to every commit that rewrites its bucket
-      // and could see it (group <= writer); per (writer, key) the newest
-      // txn wins; DELETE images erase.
+      // txn order -1) plus all image rows. Each bucket's writer-group list
+      // replicates each row to every commit that rewrites its bucket and
+      // could see it (group <= writer); per (writer, key) the newest txn
+      // wins; DELETE images erase.
       val manifest = readManifest(root, start.version)
-      val allTouched = touchedByGrp.values.flatten.toSet
+      val allTouched = touchedByGrp.flatten.toSet
       val targetPaths = allTouched.toSeq.sorted.flatMap(manifest.get)
         .map(rel => new Path(root, rel).toString)
       val targetSchema = readTargetSchema(root)
@@ -717,9 +750,10 @@ object TxnApplier {
             .select(targetCols.map(col) ++ Seq(
               lit("KEEP").as("effective_op"), lit(-1).as("__grp"),
               lit(-1L).as("__tso_ord"), col("__bucket")): _*))
-      val writersOfBucket = touchedByGrp.toSeq
-        .flatMap { case (g, bs) => bs.map(b => (b, g)) }
-        .toDF("__bucket", "__wv")
+      // bucket -> the groups that rewrite it, ascending: one list per
+      // bucket, so the array is bounded by groups x buckets, never rows
+      val writersOfBucket: Seq[Seq[Int]] = Seq.tabulate(nBuckets)(b =>
+        touchedByGrp.indices.filter(g => touchedByGrp(g)(b)))
       val outPath = new Path(staging, "out")
       // newest-wins per (writer, key) as a WINDOW, not an aggregate: a
       // max_by(struct) carries a struct buffer, which no hash-based
@@ -732,15 +766,14 @@ object TxnApplier {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("__wv") +: keyCols.map(col): _*)
         .orderBy(col("__tso_ord").desc)
-      val bulk = unioned.join(broadcast(writersOfBucket), Seq("__bucket"))
-        .filter(col("__grp") <= col("__wv"))
+      val bulk = unioned
+        .withColumn("__wv", explode(filter(
+          element_at(typedLit(writersOfBucket), col("__bucket") + 1),
+          wv => wv >= col("__grp"))))
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1 && col("effective_op") =!= "DELETE")
         .select(targetCols.map(col) ++ Seq(col("__wv"), col("__bucket")): _*)
         .repartition(col("__wv"), col("__bucket"))
-      if (sys.env.contains("GRAFT_EXPLAIN"))
-        System.err.println(bulk.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
       timed("bulk-write") {
         bulk.write.partitionBy("__wv", "__bucket").mode(SaveMode.Overwrite)
           .parquet(outPath.toString)
@@ -763,7 +796,7 @@ object TxnApplier {
         } else fs.mkdirs(dst) // group deleted every row it touched
         val newDirs = listBucketDirs(fs, dst)
           .map { case (b, _) => b -> s"${versionRel(v)}/__bucket=$b" }
-        entries = (entries -- touchedByGrp.getOrElse(i, Set.empty)) ++ newDirs
+        entries = (entries -- touchedByGrp(i)) ++ newDirs
         writeManifest(root, v, entries)
         val c = Commit(v, g.last)
         commitPointer(root, c, schemaV)
@@ -807,22 +840,14 @@ object TxnApplier {
       .getOrElse(sys.error(s"txn target $dir: bootstrap first"))
     val fs = fsOf(root)
     if (!fs.exists(keysFile(root))) writeKeyCols(root, keyCols, nBuckets)
-    val fresh = batch.filter(col(tsoCol) > start.lastTso)
+    val fresh = batch.filter(pastTso(tsoCol, start.lastTso))
     val staging = new Path(root, "_batchstage")
     if (fs.exists(staging)) fs.delete(staging, true)
     try {
       val (images, tsoBuckets) = stageFinalImages(fresh, keyCols, seqCol,
         opCol, tsoCol, nBuckets, staging)
       if (tsoBuckets.isEmpty) return Seq.empty
-      val tsos = tsoBuckets.map(_._1).distinct.sorted
-      val groups = tsos.grouped(math.max(1, txnsPerCommit)).toVector
-      import spark.implicits._
-      val grpOfTso = groups.zipWithIndex
-        .flatMap { case (g, i) => g.map(t => (t, i)) }.toMap
-      val grpDf = grpOfTso.toSeq.toDF("__gtso", "__wv")
-      val touchedByGrp = tsoBuckets
-        .groupBy { case (t, _) => grpOfTso(t) }
-        .map { case (g, pairs) => g -> pairs.map(_._2).toSet }
+      val (groups, touchedByGrp) = commitGroups(tsoBuckets, txnsPerCommit)
       val manifest = readManifest(root, start.version)
       val targetCols = targetColsOf(spark, root, manifest, images)
       // the ONLY data job: the images themselves, clustered by commit
@@ -835,10 +860,9 @@ object TxnApplier {
       val outPath = new Path(staging, "out")
       profTimed("delta-write") {
         images
-          .join(broadcast(grpDf), col(tsoCol).cast("long") === col("__gtso"))
           .select(targetCols.map(col) ++ Seq(col("effective_op"),
             col(tsoCol).cast("long").as("__delta_tso"),
-            col("__wv"), col("__bucket")): _*)
+            groupOf(groups, col(tsoCol)).as("__wv"), col("__bucket")): _*)
           .repartition(col("__wv"))
           .write.partitionBy("__wv").mode(SaveMode.Overwrite)
           .parquet(outPath.toString)
@@ -859,7 +883,7 @@ object TxnApplier {
             if (!fs.rename(src, dst))
               sys.error(s"txn target: rename $src -> $dst failed")
           } else fs.mkdirs(dst)
-          entries = touchedByGrp.getOrElse(i, Set.empty)
+          entries = touchedByGrp(i)
             .foldLeft(entries) { case (m, b) =>
               val rel = deltaVersionRel(v)
               m.updated(b, m.get(b).map(_ + ";" + rel).getOrElse(rel))

@@ -353,18 +353,21 @@ object CdcBinlog {
     // frontier maxes RIDE the stage write as observed metrics (one
     // conditional max per DN — DN count is operator config, O(dozens)),
     // so the decision input costs no second pass over the batch; a
-    // very wide fan-in falls back to the separate aggregate.
+    // very wide fan-in falls back to the separate aggregate. With a
+    // registryDir, the batch's DDL rows ride the same write.
     val maxObs = org.apache.spark.sql.Observation()
     val observeMax = dns.nonEmpty && dns.size <= 256
+    val aggs =
+      (if (observeMax) dns.zipWithIndex.map { case (dn, i) =>
+        max(when(col("partitionId") === dn, col("tso"))).as(s"m$i")
+      } else Seq.empty) ++
+        registryDir.map(_ => graft.jobs.WireReplicaJob.ddlProbe.as("ddls"))
     val staged =
-      if (observeMax) {
-        val aggs = dns.zipWithIndex.map { case (dn, i) =>
-          max(when(col("partitionId") === dn, col("tso"))).as(s"m$i")
-        }
+      if (aggs.nonEmpty)
         Staged.parquetStage(
           batch.observe(maxObs, aggs.head, aggs.tail: _*),
           s"$workDir/stage")
-      } else Staged.parquetStage(batch, s"$workDir/stage")
+      else Staged.parquetStage(batch, s"$workDir/stage")
 
     // in-stream DDL inside THIS batch: decode evolves names inline
     // (BinlogWire.decodeStream), so post-DDL rows arrive keyed by the
@@ -372,7 +375,8 @@ object CdcBinlog {
     // registry is the EVOLVED one, and renamed keys in older rows are
     // re-keyed to it — otherwise the re-encode would null their cells.
     val evolved = registryDir.map { _ =>
-      graft.jobs.LiveReplicaJob.evolveRegistryFromBatch(staged, reg0)
+      graft.jobs.LiveReplicaJob.evolveRegistryFromBatch(
+        graft.jobs.WireReplicaJob.ddlsOf(maxObs.get("ddls")), reg0)
     }.getOrElse(reg0)
 
     // frontiers: highest TSO each DN has EVER delivered (heartbeats

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.jobs.{LiveReplicaJob, WireReplicaJob}
-import graft.operators.{Staged, TxnApplier}
+import graft.operators.TxnApplier
 
 /** THE streaming deployment call: the `graft-cdc` source wired to the
   * routed transaction-preserving apply as ONE checkpointed
@@ -13,14 +13,18 @@ import graft.operators.{Staged, TxnApplier}
   * offsets, restart recovery, progress metrics, and the streaming UI.
   *
   * Per micro-batch: the decoded multi-table change batch stages once
-  * (so the multi-pass DDL-aware routing never re-reads the source),
-  * applies through [[WireReplicaJob.applyRoutedWithDdl]] (per-table
-  * committed-TSO gates make replayed batches exactly-once; in-stream
-  * ADD/DROP evolve metadata-only, MODIFY/CHANGE/RENAME rebuild in
-  * place), the wire name registry's evolution persists to the
-  * `registryDir` sidecar (the NEXT batch's decode reads it through the
-  * source's registryDir option), and an optional vacuum schedule
-  * reclaims rebuild-superseded target versions.
+  * ([[WireReplicaJob.stageRouted]], so the multi-pass DDL-aware routing
+  * never re-reads the source), and that one staging write also observes
+  * the batch's tables and DDL rows, so routing and both DDL folds run
+  * no job of their own. The batch applies through
+  * [[WireReplicaJob.applyRoutedWithDdl]] (per-table committed-TSO gates
+  * make replayed batches exactly-once; in-stream ADD/DROP evolve
+  * metadata-only, MODIFY/CHANGE/RENAME rebuild in place), the wire name
+  * registry's evolution persists to the `registryDir` sidecar (the NEXT
+  * batch's decode reads it through the source's registryDir option),
+  * and an optional vacuum schedule reclaims rebuild-superseded target
+  * versions. What remains per trigger is the source poll, the staging
+  * write and each present table's row work.
   *
   * Restart story: kill the query, start it again with the same
   * `checkpointDir` — the offset log holds the per-DN executed GTID
@@ -85,7 +89,7 @@ object CdcReplica {
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val staged = Staged.parquetStage(batch, stagingDir)
+        val staged = WireReplicaJob.stageRouted(batch, stagingDir)
         // applyMode defaults AUTO here — the standing consumer is
         // exactly the workload whose COW applies go O(n²) once the
         // target grows (uniform keys touch every bucket every trigger;
@@ -97,7 +101,8 @@ object CdcReplica {
           compactAfter = compactAfter,
           compactMaxBuckets = compactMaxBuckets)
         val reg0 = LiveReplicaJob.resumeRegistry(registryDir, tableCols)
-        val evolved = LiveReplicaJob.evolveRegistryFromBatch(staged, reg0)
+        val evolved = LiveReplicaJob.evolveRegistryFromBatch(staged.ddls,
+          reg0)
         if (evolved != reg0) LiveReplicaJob.saveRegistry(registryDir, evolved)
         // cadence off Spark's MONOTONIC batchId (not a closure counter,
         // which would reset on every query restart and drift the

@@ -1,12 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one per JVM). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** A decoded change batch staged the way every routed caller stages
+    * it, with its routing probe. */
+  def routed(decoded: DataFrame): graft.jobs.WireReplicaJob.RoutedBatch =
+    graft.jobs.WireReplicaJob.stageRouted(decoded,
+      graft.operators.Staged.tempDir("routed"))
 }
 
 object SparkSpec {

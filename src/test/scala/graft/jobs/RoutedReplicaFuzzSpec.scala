@@ -26,14 +26,14 @@ class RoutedReplicaFuzzSpec extends SparkSpec {
         case (state, (_, _, _, _, k, v)) => state + (k -> v)
       }
 
-  private def decodedOf(ops: Seq[Op]) =
+  private def decodedOf(ops: Seq[Op]) = routed(
     ops.map { case (tso, seq, table, op, k, v) =>
       val img = Map("k" -> k.toString, "seq" -> seq.toString, "v" -> v)
       val (before, after) =
         if (op == "DELETE") (img, Map.empty[String, String])
         else (Map.empty[String, String], img)
       (tso, op, "db", table, before, after)
-    }.toDF("tso", "op", "schemaName", "tableName", "before", "after")
+    }.toDF("tso", "op", "schemaName", "tableName", "before", "after"))
 
   test("random two-table streams in random txn batches with replays == sequential fold (5 rounds)") {
     val rnd = new scala.util.Random(20260814L)
@@ -154,7 +154,7 @@ class RoutedReplicaFuzzSpec extends SparkSpec {
       val batches = batchesB.result()
 
       def decodedOf(ops: Seq[(Long, Long, String, String, Long, String,
-          String, String)]) =
+          String, String)]) = routed(
         ops.map { case (tso, seqN, table, op, k, v, ddl, valName) =>
           val img =
             if (op == "DDL") Map.empty[String, String]
@@ -165,7 +165,7 @@ class RoutedReplicaFuzzSpec extends SparkSpec {
             else (Map.empty[String, String], img)
           (tso, op, "db", table, before, after, ddl)
         }.toDF("tso", "op", "schemaName", "tableName", "before",
-          "after", "ddl")
+          "after", "ddl"))
 
       var prev = Option.empty[Seq[(Long, Long, String, String, Long,
         String, String, String)]]

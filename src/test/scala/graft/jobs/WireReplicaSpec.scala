@@ -384,10 +384,10 @@ class WireReplicaSpec extends SparkSpec {
 
     // a LATER plain batch (no DDL anywhere near it) with another
     // stale-named row: applyRouted reads the persisted lineage too
-    WireReplicaJob.applyRouted(
+    WireReplicaJob.applyRouted(routed(
       Seq((4L, "INSERT", "bank", "accounts", Map.empty[String, String],
         Map("acct" -> "3", "seq" -> "1", "v" -> "300")))
-        .toDF("tso", "op", "schemaName", "tableName", "before", "after"),
+        .toDF("tso", "op", "schemaName", "tableName", "before", "after")),
       targets, txnsPerCommit = 2)
     assert(TxnApplier.readCurrent(spark, s"$root/t")
       .select($"acct", $"v2").as[(Long, String)].collect().toMap
@@ -395,7 +395,7 @@ class WireReplicaSpec extends SparkSpec {
 
     // reusing the old NAME for a brand-new column evicts it from the
     // chain — images named "v" now feed the NEW column only
-    WireReplicaJob.applyRoutedWithDdl(
+    WireReplicaJob.applyRoutedWithDdl(routed(
       Seq((5L, "DDL", "bank", "accounts", Map.empty[String, String],
         Map.empty[String, String],
         "ALTER TABLE accounts ADD COLUMN v VARCHAR(10)"),
@@ -403,7 +403,7 @@ class WireReplicaSpec extends SparkSpec {
           Map("acct" -> "4", "seq" -> "1", "v" -> "nv", "v2" -> "400"),
           null: String))
         .toDF("tso", "op", "schemaName", "tableName", "before", "after",
-          "ddl"),
+          "ddl")),
       targets, txnsPerCommit = 2)
     assert(TxnApplier.renameLineage(s"$root/t") == Map("v2" -> Seq.empty))
     val last = TxnApplier.readCurrent(spark, s"$root/t")
@@ -415,12 +415,12 @@ class WireReplicaSpec extends SparkSpec {
     // renaming ONTO an existing column refuses — a duplicate-name
     // schema would misbind cells
     intercept[IllegalArgumentException] {
-      WireReplicaJob.applyRoutedWithDdl(
+      WireReplicaJob.applyRoutedWithDdl(routed(
         Seq((7L, "DDL", "bank", "accounts", Map.empty[String, String],
           Map.empty[String, String],
           "ALTER TABLE accounts RENAME COLUMN v TO v2"))
           .toDF("tso", "op", "schemaName", "tableName", "before",
-            "after", "ddl"),
+            "after", "ddl")),
         targets)
     }
   }
@@ -432,10 +432,10 @@ class WireReplicaSpec extends SparkSpec {
       Seq("acct" -> "long", "seq" -> "long", "balance" -> "long"),
       Seq("acct"), "seq", target, 2))
     def decodedOf(rows: Seq[(Long, String, Map[String, String], String)]) =
-      rows.map { case (tso, op, after, ddl) =>
+      routed(rows.map { case (tso, op, after, ddl) =>
         (tso, op, "bank", "accounts", Map.empty[String, String], after, ddl)
       }.toDF("tso", "op", "schemaName", "tableName", "before", "after",
-        "ddl")
+        "ddl"))
 
     // batch 1: rows STRADDLE an ADD COLUMN in one batch — pre-DDL rows
     // apply with NULL for the new column, post-DDL rows carry values
@@ -568,11 +568,11 @@ class WireReplicaSpec extends SparkSpec {
         Seq("id"), "seq", s"$root/t_audit", 2))
     def rowsFor(table: String,
         rows: Seq[(Long, Map[String, String])]) =
-      rows.map { case (tso, after) =>
+      routed(rows.map { case (tso, after) =>
         (tso, "INSERT", "bank", table, Map.empty[String, String], after,
           null.asInstanceOf[String])
       }.toDF("tso", "op", "schemaName", "tableName", "before", "after",
-        "ddl")
+        "ddl"))
 
     // batch 1 carries rows ONLY for accounts — audit is quiet, but the
     // non-DDL routed apply must still bootstrap its schema sidecar
@@ -593,24 +593,24 @@ class WireReplicaSpec extends SparkSpec {
     assert(TxnApplier.compact(spark, s"$root/t_nowhere").isEmpty)
 
     // an ALTER for the never-carried-rows table evolves its sidecar
-    WireReplicaJob.applyRoutedWithDdl(Seq(
+    WireReplicaJob.applyRoutedWithDdl(routed(Seq(
       (2L, "DDL", "bank", "audit", Map.empty[String, String],
         Map.empty[String, String],
         "ALTER TABLE audit ADD COLUMN severity VARCHAR(8)"))
       .toDF("tso", "op", "schemaName", "tableName", "before", "after",
-        "ddl"),
+        "ddl")),
       targets, txnsPerCommit = 1, applyMode = TxnApplier.ApplyMode.Delta)
     assert(TxnApplier.targetSchema(s"$root/t_audit").get
       .fieldNames.contains("severity"))
 
     // audit's FIRST rows arrive after the DDL — they apply with the
     // evolved shape, and accounts' earlier state is untouched
-    WireReplicaJob.applyRouted(Seq(
+    WireReplicaJob.applyRouted(routed(Seq(
       (3L, "INSERT", "bank", "audit", Map.empty[String, String],
         Map("id" -> "7", "seq" -> "1", "note" -> "n", "severity" -> "hi"),
         null.asInstanceOf[String]))
       .toDF("tso", "op", "schemaName", "tableName", "before", "after",
-        "ddl"),
+        "ddl")),
       targets, txnsPerCommit = 1, applyMode = TxnApplier.ApplyMode.Delta)
     assert(TxnApplier.readCurrent(spark, s"$root/t_audit")
       .select($"id", $"severity").as[(Long, String)].collect().toSeq

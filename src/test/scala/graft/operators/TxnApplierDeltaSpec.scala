@@ -12,7 +12,7 @@ import graft.SparkSpec
   * Everything here asserts EQUIVALENCE with the COW mode's contract:
   * same states, same per-version transaction boundaries, same replay
   * gate, chains fold away without moving any boundary. */
-class TxnApplierDeltaSpec extends SparkSpec {
+class TxnApplierDeltaSpec extends SparkSpec with TxnGroupingCheck {
   import spark.implicits._
 
   private val nAccounts = 8L
@@ -190,7 +190,7 @@ class TxnApplierDeltaSpec extends SparkSpec {
           map(lit("acct"), $"acct".cast("string"),
             lit("seq"), $"seq".cast("string"),
             lit("balance"), $"balance".cast("string")).as("after"))
-      graft.jobs.WireReplicaJob.applyRouted(slice, Seq(target),
+      graft.jobs.WireReplicaJob.applyRouted(routed(slice), Seq(target),
         txnsPerCommit = 1, applyMode = TxnApplier.ApplyMode.Delta, compactAfter = 3)
       assert(TxnApplier.maxChainLength(target.targetDir) <= 3 + 1,
         s"chain unbounded after trigger $i")
@@ -255,7 +255,8 @@ class TxnApplierDeltaSpec extends SparkSpec {
 
   test("Auto mode: small targets stay COW, targets past the crossover flip to delta, live chains are sticky") {
     val root = java.nio.file.Files.createTempDirectory("graft-delta-auto")
-    def routedSlice(lo: Long) = transferBatch(1L, 12L)
+    def routedSlice(lo: Long) = routed(sliceRows(lo))
+    def sliceRows(lo: Long) = transferBatch(1L, 12L)
       .filter($"tso" >= lo && $"tso" <= lo + 1L)
       .withColumn("op", lit("UPDATE"))
       .withColumn("schemaName", lit("bank"))
@@ -325,14 +326,20 @@ class TxnApplierDeltaSpec extends SparkSpec {
     // both Auto paths land on the same state as a straight COW apply
     // of the same six transactions
     val ref = mkTarget("ref")
-    graft.jobs.WireReplicaJob.applyRouted(
-      routedSlice(1L).unionByName(routedSlice(3L))
-        .unionByName(routedSlice(5L)),
+    graft.jobs.WireReplicaJob.applyRouted(routed(
+      sliceRows(1L).unionByName(sliceRows(3L))
+        .unionByName(sliceRows(5L))),
       Seq(ref), txnsPerCommit = 1,
       applyMode = TxnApplier.ApplyMode.Cow)
     def st(t: graft.jobs.WireReplicaJob.TableTarget) =
       TxnApplier.readCurrent(spark, t.targetDir)
         .select($"acct", $"balance").as[(Long, Long)].collect().toMap
     assert(st(small) == st(ref) && st(big) == st(ref))
+  }
+
+  test("txnsPerCommit = 3: shared and emptied buckets, replayed TSO — every version is its group's state through the merge-on-read") {
+    groupingHolds((batch, dir) => TxnApplier.applyBatchDelta(batch,
+      Seq("acct"), "seq", "op", "tso", dir, nBuckets = 4,
+      txnsPerCommit = 3))
   }
 }

@@ -9,7 +9,7 @@ import graft.SparkSpec
   * reference's own QA for this consumer class asserts SUM(balance) is
   * constant at every observable target state
   * (polardbx-cdc-transfer/.../Bank.java:90-92,175-198). */
-class TxnApplierSpec extends SparkSpec {
+class TxnApplierSpec extends SparkSpec with TxnGroupingCheck {
   import spark.implicits._
 
   private val nAccounts = 8L
@@ -289,5 +289,10 @@ class TxnApplierSpec extends SparkSpec {
     assert(TxnApplier.readCurrent(spark, dir)
       .select($"acct", $"bal").as[(Long, Long)].collect()
       .toMap == stateBefore)
+  }
+
+  test("txnsPerCommit = 3: shared and emptied buckets, replayed TSO — every version is its group's state") {
+    groupingHolds((batch, dir) => TxnApplier.applyBatch(batch, Seq("acct"),
+      "seq", "op", "tso", dir, nBuckets = 4, txnsPerCommit = 3))
   }
 }

@@ -166,13 +166,14 @@ class CdcSourceFuzzSpec extends SparkSpec {
           .writeStream
           .option("checkpointLocation", s"$root/ckpt")
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val staged = graft.operators.Staged.parquetStage(
+            val staged = WireReplicaJob.stageRouted(
               batch, s"$root/stage")
             WireReplicaJob.applyRoutedWithDdl(staged, targets,
               txnsPerCommit = 1 + rnd.nextInt(3))
             val reg0 = LiveReplicaJob.resumeRegistry(registryDir,
               regAt(renamed = false))
-            val evolved = LiveReplicaJob.evolveRegistryFromBatch(staged, reg0)
+            val evolved = LiveReplicaJob.evolveRegistryFromBatch(staged.ddls,
+              reg0)
             if (evolved != reg0)
               LiveReplicaJob.saveRegistry(registryDir, evolved)
             ()

@@ -135,12 +135,13 @@ class CdcSourceSpec extends SparkSpec {
         .writeStream
         .option("checkpointLocation", s"$root/ckpt")
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, n: Long) =>
-          val staged = graft.operators.Staged.parquetStage(
+          val staged = WireReplicaJob.stageRouted(
             batch, s"$root/stage_decoded")
           WireReplicaJob.applyRoutedWithDdl(staged, targets,
             txnsPerCommit = 2, fromTso = None)
           val reg0 = LiveReplicaJob.resumeRegistry(registryDir, regV1)
-          val evolved = LiveReplicaJob.evolveRegistryFromBatch(staged, reg0)
+          val evolved = LiveReplicaJob.evolveRegistryFromBatch(staged.ddls,
+            reg0)
           if (evolved != reg0)
             LiveReplicaJob.saveRegistry(registryDir, evolved)
           targets.foreach(t => TxnApplier.vacuum(t.targetDir))
