@@ -8,7 +8,6 @@ import graft.sources.Tables
 import graft.operators._
 import graft.text.{DedupApprox, TextAnalysis}
 import graft.ml.{Multimodal, Similarity}
-import graft.streaming.Pipeline
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *

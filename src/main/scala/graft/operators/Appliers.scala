@@ -1,88 +1,21 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.util.HadoopIo
-
-/** RPL appliers: apply a change batch to a target table, preserving
-  * per-key order, with the reference's applier strategies re-expressed as
-  * set-based batch transforms.
+/** Set-based merge primitives of the RPL appliers: last-image collapse,
+  * upsert onto a target snapshot, and the key-hash bucket id.
   *
-  * Reference semantics (polardbx-cdc-rpl/.../applier/):
-  *  - MysqlApplier: serial row-at-a-time SQL (ApplyHelper.java:56-61);
-  *  - SplitApplier: per-PK parallel queues with serial fallback when a
-  *    primary key value changes (SplitApplier.java:43-146);
-  *  - MergeApplier: collapse the batch to final images per PK, then batch
-  *    REPLACE INTO / DELETE (MergeApplier.java:46-156);
-  *  - TransactionApplier / SplitTransactionApplier: transaction-preserving
-  *    variants.
-  *
-  * In Spark the batch IS the parallel unit: `repartition(pk)` gives
-  * per-key ordering lanes (SplitApplier), last-image dedup gives
-  * MergeApplier, and the final upsert is one set-based merge — the shape
-  * that scales to 100 TB targets (Delta/Iceberg MERGE INTO or storage-side
-  * upsert), with no row-at-a-time path anywhere.
+  * Reference semantics (polardbx-cdc-rpl/.../applier/): MergeApplier
+  * collapses the batch to final images per PK, then batch REPLACE INTO /
+  * DELETE (MergeApplier.java:46-156). The replica applier itself is
+  * TxnApplier (transaction-preserving, bucketed, manifest-versioned),
+  * which stages `mergeToFinalImages` per transaction and partitions by
+  * `bucketOf`; SplitApplier's PK-change fallback is the DELETE(before) +
+  * INSERT(after) split in WireReplicaJob.shape.
   */
 object Appliers {
-
-  /** SplitApplier semantics: lay the batch out so each key's changes are
-    * contiguous and ordered — one shuffle on the key, local sort on seq.
-    * A downstream per-partition writer sees strictly per-key-ordered rows
-    * (the reference's per-PK queue, without the serial fallback: keys
-    * can't migrate between partitions mid-batch in a shuffled layout). */
-  def splitByKey(batch: DataFrame, keyCols: Seq[String], seqCol: String,
-      lanes: Int): DataFrame =
-    batch.repartition(lanes, keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols :+ seqCol).map(col): _*)
-
-  /** Detect PK-change rows (before-image key != after-image key), the
-    * case where SplitApplier falls back to serial apply: such a change
-    * touches two lanes. Returns the batch with a `pk_changed` flag the
-    * caller can branch on (reference: SplitApplier.java:95-146). */
-  def flagKeyChanges(batch: DataFrame, beforeKey: Column, afterKey: Column): DataFrame =
-    batch.withColumn("pk_changed",
-      beforeKey.isNotNull && afterKey.isNotNull && !(beforeKey <=> afterKey))
-
-  /** SplitApplier WITH the serial fallback: every key that participates in
-    * any PK-change row (either as before- or after-image) routes through
-    * one serial lane, so the delete-half and insert-half of a key change
-    * can never reorder across lanes; unaffected keys keep their parallel
-    * hash lanes (reference: SplitApplier.java:95-146 falls back to serial
-    * apply exactly when serialExecute is triggered by a PK change).
-    *
-    * PK changes are rare, so the affected-key set is tiny and broadcast;
-    * the output contract matches splitByKey: per-partition iteration sees
-    * each key's rows contiguous and seq-ordered, and all PK-change-affected
-    * rows land in one lane in global seq order. */
-  def splitByKeyWithSerialFallback(batch: DataFrame, beforeKey: Column,
-      afterKey: Column, seqCol: String, lanes: Int): DataFrame = {
-    val flagged = flagKeyChanges(batch, beforeKey, afterKey)
-    val affectedKeys = flagged.filter(col("pk_changed"))
-      .select(explode(array(beforeKey, afterKey)).as("__affected_key"))
-      .filter(col("__affected_key").isNotNull)
-      .distinct()
-    // semi/anti split (never a plain left join: a PK-change row matches
-    // BOTH its keys and would duplicate)
-    val touchCond = beforeKey <=> col("__affected_key") ||
-      afterKey <=> col("__affected_key")
-    val serial = flagged.join(broadcast(affectedKeys), touchCond, "left_semi")
-      .withColumn("__lane", lit(lanes))
-    val parallel = flagged.join(broadcast(affectedKeys), touchCond, "left_anti")
-      .withColumn("__lane", pmod(hash(coalesce(afterKey, beforeKey)), lit(lanes)))
-    val marked = serial.unionByName(parallel)
-    // serial lane sorts by seq alone (strict log order across keys, the
-    // point of the fallback); parallel lanes sort (key, seq) for per-key
-    // contiguity. Expressed as one sort: the key component is null-ed out
-    // for serial rows, so they collate purely by seq.
-    val keyOrder = when(col("__lane") === lanes, lit(null).cast("string"))
-      .otherwise(coalesce(afterKey, beforeKey).cast("string"))
-    marked.repartition(lanes + 1, col("__lane"))
-      .sortWithinPartitions(col("__lane"), keyOrder, col(seqCol))
-      .drop("__lane")
-  }
 
   /** MergeApplier semantics: collapse a change batch to one final action
     * per key. Input rows: (key, seq, op, payload...). Output: last image
@@ -119,139 +52,9 @@ object Appliers {
     untouched.unionByName(upserts)
   }
 
-  /** Full MergeApplier batch cycle against a FLAT parquet target — reads
-    * the whole snapshot, merges, rewrites. Correct and atomic, but a full
-    * target rewrite per batch: use `applyBatchToBucketedParquet` for
-    * targets that outgrow a single rewrite (the 100 TB path). */
-  def applyBatchToParquet(batch: DataFrame, keyCols: Seq[String],
-      seqCol: String, opCol: String, targetDir: String): Unit = {
-    val spark = batch.sparkSession
-    val finalImages = mergeToFinalImages(batch, keyCols, seqCol, opCol)
-    val d = new Path(targetDir)
-    val fs = HadoopIo.fsOf(d)
-    val merged =
-      if (fs.exists(d)) {
-        val target = spark.read.parquet(targetDir)
-        upsert(target, finalImages, keyCols)
-      } else {
-        finalImages.filter(col("effective_op") =!= "DELETE")
-          .drop("effective_op")
-      }
-    // write-to-temp + checked atomic swap (mirrors OrderedSink.compact):
-    // never delete the only surviving copy on a failed rename
-    val t = new Path(targetDir + "__staging")
-    merged.write.mode(SaveMode.Overwrite).parquet(t.toString)
-    if (fs.exists(d)) {
-      val old = new Path(targetDir + "__old")
-      HadoopIo.deleteIfExists(old) // stale leftover: target is authoritative
-      if (!fs.rename(d, old)) sys.error(s"apply: cannot stage out $targetDir")
-      if (!fs.rename(t, d)) {
-        fs.rename(old, d) // roll back — target stays the pre-batch snapshot
-        sys.error(s"apply: cannot swap in $t")
-      }
-      fs.delete(old, true)
-    } else if (!fs.rename(t, d)) sys.error(s"apply: cannot move $t to $targetDir")
-  }
-
   /** Key-hash bucket id — the bucketed target's partition column. Stable
     * across batches/sessions (Murmur3, fixed seed), so a key always lands
     * in the same bucket directory. */
   def bucketOf(keyCols: Seq[String], nBuckets: Int): Column =
     pmod(hash(keyCols.map(col): _*), lit(nBuckets))
-
-  /** MergeApplier batch cycle against a BUCKETED parquet target: the
-    * target is partitioned by key-hash bucket (`__bucket=k/` directories)
-    * and a batch rewrites ONLY the buckets containing touched keys —
-    * MERGE INTO semantics at lake scale (reference batch-merge:
-    * MergeApplier.java:46-156). Cost per batch is
-    * O(touched_buckets × bucket_size), not O(target): at a 100 TB target
-    * with 4096 buckets, a batch touching 1% of buckets reads and rewrites
-    * ~1 TB instead of everything. Untouched bucket files are never opened
-    * (partition pruning) nor replaced (dynamic partition overwrite).
-    *
-    * Idempotent per batch: replaying the same batch re-derives the same
-    * bucket contents. Readers see per-bucket directory replaces; a reader
-    * spanning the commit observes a consistent pre/post state per bucket
-    * (same guarantee granularity as the reference's per-batch REPLACE). */
-  def applyBatchToBucketedParquet(batch: DataFrame, keyCols: Seq[String],
-      seqCol: String, opCol: String, targetDir: String,
-      nBuckets: Int = 64): Unit = {
-    val spark = batch.sparkSession
-    val finalImages = mergeToFinalImages(batch, keyCols, seqCol, opCol)
-      .withColumn("__bucket", bucketOf(keyCols, nBuckets))
-    // a target with no bucket directories (e.g. a bootstrap batch that was
-    // all deletes wrote only _SUCCESS) has no schema to read — treat it as
-    // absent and bootstrap again
-    val targetPath = new Path(targetDir)
-    val targetFs = HadoopIo.fsOf(targetPath)
-    val hasData = targetFs.exists(targetPath) &&
-      targetFs.listStatus(targetPath).exists(st =>
-        st.isDirectory && st.getPath.getName.startsWith("__bucket="))
-    if (!hasData) {
-      finalImages.filter(col("effective_op") =!= "DELETE")
-        .drop("effective_op")
-        // cluster on the partition column: an unclustered dynamic write
-        // multiplies files by the upstream task count (tasks x buckets)
-        .repartition(col("__bucket"))
-        .write.partitionBy("__bucket").mode(SaveMode.Overwrite)
-        .parquet(targetDir)
-    } else {
-      // the batch's merge plan feeds three actions (touched-bucket list,
-      // survivor list, final write): stage each expensive frame ONCE so the
-      // window agg over the batch and the touched-bucket target read each
-      // execute exactly once per batch — re-deriving them per action is
-      // 2-3× read amplification on the hot RPL path at scale. Staging also
-      // removes the lazy-plan re-read trap (a plan collected after the
-      // write would re-read the replaced target files).
-      val staging = new Path(targetDir + "__batchstage")
-      HadoopIo.deleteIfExists(staging)
-      try {
-        val fi = Staged.parquetStage(finalImages,
-          new Path(staging, "final_images").toString)
-        // touched bucket ids: bounded by nBuckets, safe to collect
-        val touched = fi.select("__bucket").distinct()
-          .collect().map(_.getInt(0))
-        if (touched.nonEmpty) {
-          val target = spark.read.parquet(targetDir)
-            .filter(col("__bucket").isin(touched.map(Integer.valueOf): _*))
-          val merged = Staged.parquetStage(upsert(target, fi, keyCols),
-            new Path(staging, "merged").toString)
-          // dynamic overwrite only replaces partitions PRESENT in the
-          // output: a touched bucket whose keys were all deleted emits no
-          // rows, so its stale directory must be dropped explicitly
-          // (idempotent on replay — the same batch re-derives the same
-          // empty set)
-          val survivors = merged.select("__bucket").distinct()
-            .collect().map(_.getInt(0)).toSet
-          merged.repartition(col("__bucket"))
-            .write.mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__bucket").parquet(targetDir)
-          (touched.toSet -- survivors).foreach { b =>
-            HadoopIo.deleteIfExists(new Path(targetPath, s"__bucket=$b"))
-          }
-        }
-      } finally {
-        HadoopIo.deleteIfExists(staging)
-      }
-    }
-  }
-
-  /** Transaction-preserving apply (TransactionApplier /
-    * SplitTransactionApplier analog — see TxnApplier): whole transactions
-    * in TSO order against a manifest-versioned target, `txnsPerCommit`
-    * per atomic commit, so readers only ever observe transaction-boundary
-    * states. Use when downstream audits transactional consistency; use
-    * `applyBatchToBucketedParquet` (merge semantics) when eventual
-    * per-batch convergence suffices. */
-  def applyBatchTxnPreserving(batch: DataFrame, keyCols: Seq[String],
-      seqCol: String, opCol: String, tsoCol: String, targetDir: String,
-      nBuckets: Int = 64, txnsPerCommit: Int = 1): Seq[TxnApplier.Commit] =
-    TxnApplier.applyBatch(batch, keyCols, seqCol, opCol, tsoCol, targetDir,
-      nBuckets, txnsPerCommit)
-
-  /** Read a bucketed target as a plain table (partition column dropped). */
-  def readBucketed(spark: org.apache.spark.sql.SparkSession,
-      targetDir: String): DataFrame =
-    spark.read.parquet(targetDir).drop("__bucket")
 }

@@ -19,9 +19,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * (SplitTransactionApplier.java:38-95). The mode exists for consumers
   * that audit transactional consistency — the reference's bank-transfer
   * QA asserts a constant total balance at every observable target state
-  * (polardbx-cdc-transfer/.../Bank.java:90-92,175-198). A merge-applied
-  * target (Appliers.applyBatchToBucketedParquet) converges to the same
-  * final state but can expose half of txn A with half of txn B mid-batch.
+  * (polardbx-cdc-transfer/.../Bank.java:90-92,175-198). A plain merge
+  * apply (Appliers.mergeToFinalImages + upsert over a batch) converges to
+  * the same final state but can expose half of txn A with half of txn B
+  * when a batch boundary splits a transaction.
   *
   * Spark restatement — a manifest-versioned bucketed target (the
   * version-pointer indirection every table format uses):

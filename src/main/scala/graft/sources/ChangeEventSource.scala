@@ -13,7 +13,8 @@ import graft.model.ChangeEvent
   * MemoryStream in tests — anything producing a streaming DataFrame of
   * per-record payloads), and this adapter is the normalization step: a
   * declarative column mapping into `ChangeEvent.schema` that the §3.1
-  * DAG (`GlobalBinlogStream.startFrom`, Pipeline.*) consumes unchanged.
+  * operators (Pipeline.*, OrderedSink) consume unchanged; LiveReplicaJob
+  * and CdcSource decode their DN segments through it.
   *
   * Scale shape: pure per-row projection (from_json + casts, zero UDFs,
   * stays in whole-stage codegen), so ingress parallelism is the source's

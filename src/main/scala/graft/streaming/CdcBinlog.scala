@@ -161,12 +161,10 @@ object CdcBinlog {
     * outgrew would sort binlog.1000000.* before binlog.999999.* and
     * silently break every name-ordered contract (serve start,
     * executed-set fold, purge prefixes); refuse loudly at the edge
-    * rather than wrap. ONE owner for pad policy: CdcBinlog.emitBatch
-    * and GlobalBinlogStream.startWire both name through here. */
-  private[streaming] def batchFilePrefix(batchId: Long,
-      who: String): String = {
+    * rather than wrap. */
+  private[streaming] def batchFilePrefix(batchId: Long): String = {
     require(batchId >= 0 && batchId < 1000000000000L,
-      s"$who: batchId $batchId outside the zero-padded file-name " +
+      s"CdcBinlog: batchId $batchId outside the zero-padded file-name " +
         "range [0, 1e12) — the name-order-is-TSO-order contract would " +
         "break")
     f"binlog.$batchId%012d."
@@ -180,7 +178,7 @@ object CdcBinlog {
     * between migration and the replayed write leaves the legacy names
     * live). The trailing '.' keeps the narrow prefix from matching a
     * different batch's wide name (binlog.000001. does NOT prefix
-    * binlog.000001000000.*). Shared by both wire-file pipelines. */
+    * binlog.000001000000.*). */
   private[streaming] def deleteBatchFiles(dir: String,
       batchId: Long): Unit = {
     val prefix = f"binlog.$batchId%012d."
@@ -698,11 +696,8 @@ object CdcBinlog {
     // the batch's wire files: delete this batch's prefix first so a
     // replayed attempt fully supersedes the one it replaces (range
     // partitioner sampling is not stable across attempts) — the pad
-    // policy and dual-width replay delete are the shared helpers below
-    // (ONE owner for both wire-file pipelines).
-    val prefix = batchFilePrefix(batchId, "CdcBinlog")
-    def deleteByPrefix(dir: String): Unit =
-      deleteBatchFiles(dir, batchId)
+    // policy and dual-width replay delete are the helpers above.
+    val prefix = batchFilePrefix(batchId)
     // with a sid, the produced log(s) carry their OWN GTID stream
     // (gno := commit TSO — decoded rows all carry the txn's CTS, and
     // TSOs are globally unique) with cumulative PREVIOUS_GTIDS, read
@@ -711,7 +706,7 @@ object CdcBinlog {
     // FIRST-CLASS auto-position-servable binlog a downstream replica
     // can dump with the graft-cdc source
     def writeLog(rows: DataFrame, dir: String, parts: Int): Unit = {
-      deleteByPrefix(dir)
+      deleteBatchFiles(dir, batchId)
       val ordered = MergeSort.sortedRunsGrouped(rows, parts,
         Seq("__commit_tso", "txnId"), Seq("tso", "traceId"))
         .drop("__commit_tso")

@@ -113,20 +113,4 @@ object Pipeline {
         sum(col("__n_src_events")).as("n_events"),
         count(lit(1)).as("n_sources"))
       .withColumn("complete", col("n_sources") === expectedSources)
-
-  /** The batch restatement of the whole Global-Binlog flow over the
-    * `events` fixture (event_id=TSO, user_id=PK): filter system rows →
-    * assemble per-key envelopes in order → globally ordered output.
-    * This is SparkEntry.entry's flagship. */
-  def globalBinlogBatch(events: DataFrame): DataFrame = {
-    val filtered = events.filter(col("event_type").isNotNull)
-    filtered
-      .groupBy(col("user_id").as("txn_key"))
-      .agg(
-        max(col("event_id")).as("commit_tso"),
-        count(lit(1)).as("n_events"),
-        sort_array(collect_list(struct(col("event_id"), col("event_type"),
-          col("value")))).as("events"))
-      .orderBy(col("commit_tso"))
-  }
 }

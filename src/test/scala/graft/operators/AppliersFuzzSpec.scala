@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Randomized applier fuzz — the qatest/random analog (polardbx-cdc-test/
@@ -44,91 +43,6 @@ class AppliersFuzzSpec extends SparkSpec {
       val got = Appliers.upsert(target, images, Seq("pk"))
         .as[(Long, String)].collect().toMap
       assert(got == expected, s"round $round diverged (seed-fixed)")
-    }
-  }
-
-  test("bucketed parquet apply == sequential fold (5 rounds, multi-batch)") {
-    val rnd = new scala.util.Random(4242L)
-    (1 to 5).foreach { round =>
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-bfuzz$round")
-        .resolve("t").toString
-      val nKeys = 5 + rnd.nextInt(25)
-      var seq = 0L
-      var expected = Map.empty[Long, String]
-      (1 to 3).foreach { _ => // three successive batches against one target
-        val ops = (1 to 1 + rnd.nextInt(60)).map { _ =>
-          seq += 1
-          val pk = rnd.nextInt(nKeys).toLong
-          val op = rnd.nextInt(3) match {
-            case 0 => "INSERT"; case 1 => "UPDATE"; case 2 => "DELETE"
-          }
-          (pk, seq, op, s"v$seq")
-        }
-        expected = naiveApply(expected, ops)
-        Appliers.applyBatchToBucketedParquet(ops.toDF("pk", "seq", "op", "v"),
-          Seq("pk"), "seq", "op", dir, nBuckets = 8)
-      }
-      val got = Appliers.readBucketed(spark, dir).select("pk", "v")
-        .as[(Long, String)].collect().toMap
-      assert(got == expected, s"bucketed round $round diverged (seed-fixed)")
-    }
-  }
-
-  /** PK-change semantics: a row (bk, ak, seq, op, v) with bk != ak deletes
-    * bk and writes ak — the SplitApplier serial-fallback case. The lane
-    * layout is correct iff folding the partitions in ANY order equals the
-    * global sequential fold (keys confined to one lane; PK-change groups
-    * serialized). */
-  private def foldPkOps(state0: Map[Long, String],
-      ops: Seq[(Long, Long, Long, String, String)]): Map[Long, String] =
-    ops.foldLeft(state0) { case (state, (bk, ak, _, op, v)) =>
-      op match {
-        case "DELETE" => state - bk
-        case _ if bk != ak => state - bk + (ak -> v)
-        case _ => state + (ak -> v)
-      }
-    }
-
-  test("serial-fallback lanes: any partition apply order == sequential fold") {
-    val rnd = new scala.util.Random(77L)
-    (1 to 10).foreach { round =>
-      val nKeys = 10
-      var seq = 0L
-      var nextKey = nKeys.toLong
-      val ops = (1 to 1 + rnd.nextInt(80)).map { _ =>
-        seq += 1
-        val pk = rnd.nextInt(nKeys).toLong
-        rnd.nextInt(10) match {
-          case 0 => // PK change to a fresh key id
-            nextKey += 1
-            (pk, nextKey, seq, "UPDATE", s"v$seq")
-          case n if n <= 3 => (pk, pk, seq, "DELETE", s"v$seq")
-          case _ => (pk, pk, seq, "UPDATE", s"v$seq")
-        }
-      }
-      val expected = foldPkOps(Map.empty, ops.sortBy(_._3))
-
-      val laid = Appliers.splitByKeyWithSerialFallback(
-        ops.toDF("bk", "ak", "seq", "op", "v"), $"bk", $"ak", "seq", lanes = 3)
-      val parts: Seq[Seq[(Long, Long, Long, String, String)]] =
-        laid.select("bk", "ak", "seq", "op", "v").rdd
-          .mapPartitionsWithIndex { (i, it) =>
-            Iterator.single(i -> it.map(r => (r.getLong(0), r.getLong(1),
-              r.getLong(2), r.getString(3), r.getString(4))).toVector)
-          }.collect().sortBy(_._1).map(_._2).filter(_.nonEmpty).toSeq
-      // every row routed exactly once
-      assert(parts.map(_.size).sum == ops.size)
-      // partitions applied in identity, reversed, and shuffled order must
-      // all reach the sequential-fold state
-      val orders = Seq(parts, parts.reverse,
-        rnd.shuffle(parts), rnd.shuffle(parts))
-      orders.zipWithIndex.foreach { case (ord, i) =>
-        val got = ord.foldLeft(Map.empty[Long, String]) { (st, part) =>
-          foldPkOps(st, part)
-        }
-        assert(got == expected,
-          s"round $round order $i diverged from sequential fold (seed-fixed)")
-      }
     }
   }
 }

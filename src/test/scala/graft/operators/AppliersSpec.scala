@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 class AppliersSpec extends SparkSpec {
@@ -33,164 +32,5 @@ class AppliersSpec extends SparkSpec {
     val got = Appliers.upsert(target, images, Seq("pk"))
       .as[(Long, String)].collect().toSet
     assert(got == Set((1L, "a2"), (3L, "c1"), (4L, "d2"), (9L, "keep")))
-  }
-
-  test("splitByKey keeps each key in one partition, ordered by seq") {
-    val laid = Appliers.splitByKey(batch, Seq("pk"), "seq", 3)
-    val perPart = laid.select("pk", "seq").rdd.mapPartitionsWithIndex {
-      (i, it) => it.map(r => (i, r.getLong(0), r.getLong(1)))
-    }.collect()
-    // no key spans two partitions
-    val keyParts = perPart.groupBy(_._2).view.mapValues(_.map(_._1).toSet)
-    assert(keyParts.values.forall(_.size == 1))
-    // within a partition, rows of one key are seq-ascending
-    perPart.groupBy(x => (x._1, x._2)).foreach { case (_, rows) =>
-      val seqs = rows.map(_._3).toSeq
-      assert(seqs == seqs.sorted)
-    }
-  }
-
-  test("flagKeyChanges marks before/after key mismatches") {
-    val df = Seq((1L, 1L), (2L, 5L)).toDF("bk", "ak")
-    val got = Appliers.flagKeyChanges(df, $"bk", $"ak")
-      .select("bk", "pk_changed").as[(Long, Boolean)].collect().toMap
-    assert(got == Map(1L -> false, 2L -> true))
-  }
-
-  test("bucketed apply rewrites only touched buckets; untouched files are byte-identical") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bapply")
-      .resolve("target").toString
-    val n = 8
-    Appliers.applyBatchToBucketedParquet(batch, Seq("pk"), "seq", "op", dir, n)
-    val after1 = Appliers.readBucketed(spark, dir).select("pk", "v")
-      .as[(Long, String)].collect().toSet
-    assert(after1 == Set((1L, "a2"), (3L, "c1"), (4L, "d2")))
-
-    // fingerprint every data file (path -> (size, mtime, checksum))
-    def files(): Map[String, (Long, String)] = {
-      val base = new java.io.File(dir)
-      org.apache.commons.io.FileUtils.listFiles(base, Array("parquet"), true)
-        .toArray(Array.empty[java.io.File]).map { f =>
-          f.getAbsolutePath -> (f.length(),
-            java.util.Arrays.hashCode(
-              java.nio.file.Files.readAllBytes(f.toPath)).toString)
-        }.toMap
-    }
-    val before = files()
-    val touchedBucket = Appliers.bucketOf(Seq("pk"), n)
-    // batch 2 touches ONLY pk=3 — exactly one bucket
-    val b2 = Seq((3L, 11L, "UPDATE", "c9")).toDF("pk", "seq", "op", "v")
-    Appliers.applyBatchToBucketedParquet(b2, Seq("pk"), "seq", "op", dir, n)
-    val after2 = Appliers.readBucketed(spark, dir).select("pk", "v")
-      .as[(Long, String)].collect().toSet
-    assert(after2 == Set((1L, "a2"), (3L, "c9"), (4L, "d2")))
-    val bucket3 = Seq(3L).toDF("pk").select(touchedBucket).as[Int].head()
-    val after = files()
-    // every file outside pk=3's bucket survives byte-identical at its path
-    val untouchedBefore = before.filterNot(_._1.contains(s"__bucket=$bucket3"))
-    untouchedBefore.foreach { case (path, fp) =>
-      assert(after.get(path).contains(fp), s"untouched file rewritten: $path")
-    }
-    // and the touched bucket's files did change
-    assert(before.keys.filter(_.contains(s"__bucket=$bucket3")).toSet !=
-      after.keys.filter(_.contains(s"__bucket=$bucket3")).toSet)
-  }
-
-  test("bucketed target reads prune partitions (plan-level proof)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bprune")
-      .resolve("target").toString
-    Appliers.applyBatchToBucketedParquet(batch, Seq("pk"), "seq", "op", dir, 8)
-    // the exact read the next batch performs: filter on the partition col
-    val read = spark.read.parquet(dir).filter(col("__bucket").isin(1, 2))
-    val plan = read.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), plan.take(500))
-    assert(plan.contains("__bucket"), plan.take(500))
-    // and no pushed data filter needed — pruning happens at the dir level
-    val scanned = read.queryExecution.executedPlan.collectLeaves()
-      .map(_.toString).mkString
-    assert(scanned.contains("__bucket"), "partition column absent from scan")
-  }
-
-  test("bucketed apply handles DELETE and new-key INSERT across batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bapply2")
-      .resolve("target").toString
-    Appliers.applyBatchToBucketedParquet(batch, Seq("pk"), "seq", "op", dir, 4)
-    val b2 = Seq((1L, 10L, "DELETE", "a2"), (3L, 11L, "UPDATE", "c9"),
-      (7L, 12L, "INSERT", "g1")).toDF("pk", "seq", "op", "v")
-    Appliers.applyBatchToBucketedParquet(b2, Seq("pk"), "seq", "op", dir, 4)
-    val got = Appliers.readBucketed(spark, dir).select("pk", "v")
-      .as[(Long, String)].collect().toSet
-    assert(got == Set((3L, "c9"), (4L, "d2"), (7L, "g1")))
-  }
-
-  test("bucketed apply evaluates the batch merge plan exactly once (staged)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bstage")
-      .resolve("target").toString
-    Appliers.applyBatchToBucketedParquet(batch, Seq("pk"), "seq", "op", dir, 4)
-    // instrument the second batch: an accumulator counts every evaluation
-    // of its rows. The touched-list, survivor-list, and final write used
-    // to each re-derive the merge from the batch (3× evaluation); staging
-    // must bring it to exactly one pass.
-    val acc = spark.sparkContext.longAccumulator("batch-evals")
-    val rows = Seq(
-      org.apache.spark.sql.Row(1L, 20L, "UPDATE", "a9"),
-      org.apache.spark.sql.Row(7L, 21L, "INSERT", "g1"))
-    val rdd = spark.sparkContext.parallelize(rows, 2).map { r => acc.add(1); r }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("pk", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("seq", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("op", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.StringType)))
-    val b2 = spark.createDataFrame(rdd, schema)
-    Appliers.applyBatchToBucketedParquet(b2, Seq("pk"), "seq", "op", dir, 4)
-    assert(acc.value == rows.size.toLong,
-      s"batch rows evaluated ${acc.value} times for ${rows.size} rows — " +
-        "the merge plan must execute once (staged), not per action")
-    val got = Appliers.readBucketed(spark, dir).select("pk", "v")
-      .as[(Long, String)].collect().toSet
-    assert(got == Set((1L, "a9"), (3L, "c1"), (4L, "d2"), (7L, "g1")))
-  }
-
-  test("splitByKeyWithSerialFallback: affected keys serialize in seq order") {
-    // pk change 2→5 at seq 3: keys 2 and 5 must share a lane in seq order
-    val b = Seq(
-      (1L, 1L, 1L, "a"),          // normal rows: before==after
-      (2L, 2L, 2L, "b"),
-      (2L, 5L, 3L, "pkchange"),   // key 2 becomes key 5
-      (5L, 5L, 4L, "c"),
-      (9L, 9L, 5L, "d")
-    ).toDF("bk", "ak", "seq", "v")
-    val laid = Appliers.splitByKeyWithSerialFallback(b, $"bk", $"ak", "seq", 3)
-    val perPart = laid.select("bk", "ak", "seq").rdd.mapPartitionsWithIndex {
-      (i, it) => it.map(r => (i, r.getLong(0), r.getLong(1), r.getLong(2)))
-    }.collect()
-    val affected = perPart.filter(r => Set(2L, 5L).contains(r._2) ||
-      Set(2L, 5L).contains(r._3))
-    // all affected rows in ONE partition…
-    assert(affected.map(_._1).toSet.size == 1)
-    // …in strict seq order within it
-    val seqs = affected.sortBy(_._4).map(_._4).toSeq
-    val inPartOrder = perPart.filter(_._1 == affected.head._1)
-      .filter(r => Set(2L, 5L).contains(r._2) || Set(2L, 5L).contains(r._3))
-      .map(_._4).toSeq
-    assert(inPartOrder == seqs)
-    // unaffected keys still present and per-key contiguous
-    assert(perPart.count(r => r._2 == 1L) == 1)
-  }
-
-  test("applyBatchToParquet round-trips through a parquet target") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-apply")
-      .resolve("target").toString
-    Appliers.applyBatchToParquet(batch, Seq("pk"), "seq", "op", dir)
-    val after1 = spark.read.parquet(dir).select("pk", "v")
-      .as[(Long, String)].collect().toSet
-    assert(after1 == Set((1L, "a2"), (3L, "c1"), (4L, "d2")))
-    // second batch: delete pk=1, update pk=3, insert pk=7
-    val b2 = Seq((1L, 10L, "DELETE", "a2"), (3L, 11L, "UPDATE", "c9"),
-      (7L, 12L, "INSERT", "g1")).toDF("pk", "seq", "op", "v")
-    Appliers.applyBatchToParquet(b2, Seq("pk"), "seq", "op", dir)
-    val after2 = spark.read.parquet(dir).select("pk", "v")
-      .as[(Long, String)].collect().toSet
-    assert(after2 == Set((3L, "c9"), (4L, "d2"), (7L, "g1")))
   }
 }

@@ -69,21 +69,6 @@ class EdgeCasesSpec extends SparkSpec {
     assert(Appliers.upsert(target, delAll, Seq("pk")).count() == 0)
   }
 
-  test("bucketed applier: delete-only FIRST batch then insert recovers") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bedge")
-      .resolve("t").toString
-    // bootstrap batch contains only deletes → nothing survives to write
-    Appliers.applyBatchToBucketedParquet(
-      Seq((1L, 1L, "DELETE", "x")).toDF("pk", "seq", "op", "v"),
-      Seq("pk"), "seq", "op", dir, 4)
-    // a later real batch must still apply cleanly
-    Appliers.applyBatchToBucketedParquet(
-      Seq((2L, 2L, "INSERT", "b")).toDF("pk", "seq", "op", "v"),
-      Seq("pk"), "seq", "op", dir, 4)
-    assert(Appliers.readBucketed(spark, dir).select($"pk", $"v")
-      .as[(Long, String)].collect().toSet == Set((2L, "b")))
-  }
-
   test("dedup: all-duplicate frame collapses to one representative") {
     val df = Seq(("t", 3L), ("t", 1L), ("t", 2L)).toDF("k", "id")
     val got = Dedup.exactDedup(df, Seq("k"), "id").as[(String, Long)].collect()

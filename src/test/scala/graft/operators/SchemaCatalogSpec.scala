@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.functions.lit
+
 import graft.SparkSpec
 
 class SchemaCatalogSpec extends SparkSpec {
@@ -54,5 +56,39 @@ class SchemaCatalogSpec extends SparkSpec {
     assert(got(120L).contains("""{"cols":["a"]}"""))
     assert(got(250L).contains("""{"cols":["a","b"]}"""))
     assert(got(90L).isEmpty) // before first DDL: unresolved
+  }
+
+  test("schema evolution driven FROM the wire: DDL events resolve rows as-of") {
+    // the full consume-side composition: a binlog file carries DDL (as
+    // QUERY statement events) interleaved with row events; the decoder
+    // splits them back and the as-of schema join resolves each row
+    // against the schema current at its TSO
+    val dir = java.nio.file.Files.createTempDirectory("graft-schwire").toString
+    val ev = Seq(
+      (10L, 1L, "DDL", "app", "t1", Map.empty[String, String],
+        Map.empty[String, String],
+        "CREATE TABLE t1 (id BIGINT, a INT)", 1700000000L),
+      (20L, 2L, "INSERT", "app", "t1", Map.empty[String, String],
+        Map("id" -> "1"), null.asInstanceOf[String], 1700000001L),
+      (30L, 3L, "DDL", "app", "t1", Map.empty[String, String],
+        Map.empty[String, String],
+        "ALTER TABLE t1 ADD COLUMN b TEXT", 1700000002L),
+      (40L, 4L, "INSERT", "app", "t1", Map.empty[String, String],
+        Map("id" -> "2"), null.asInstanceOf[String], 1700000003L))
+      .toDF("tso", "txnId", "op", "schemaName", "tableName", "before",
+        "after", "ddl", "tsoTime")
+      .coalesce(1).sortWithinPartitions("tso")
+    graft.sinks.BinlogWire.writeChangeStreamBinlogFiles(ev,
+      Map(("app", "t1") -> Seq("id")), s"$dir/wire", checksummed = true)
+    val decoded = graft.sinks.BinlogWire.readBinlogFiles(spark, s"$dir/wire",
+      Map(("app", "t1") -> Seq("id")))
+    val rawDdl = decoded.filter($"op" === "DDL")
+      .select($"tso", $"schemaName", $"ddl")
+    val rows = decoded.filter($"op" =!= "DDL")
+      .select($"tso", $"schemaName", lit("t1").as("tableName"))
+    val resolved = graft.operators.SchemaCatalog.resolveDdlText(rows, rawDdl)
+      .select($"tso", $"colNames").as[(Long, String)].collect().toMap
+    assert(resolved(20L) == "id,a")    // between CREATE and ALTER
+    assert(resolved(40L) == "id,a,b")  // after the ALTER
   }
 }

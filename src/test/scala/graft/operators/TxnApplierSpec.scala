@@ -71,13 +71,47 @@ class TxnApplierSpec extends SparkSpec with TxnGroupingCheck {
     // lands between its per-bucket replaces, or if the batch boundary
     // splits a transaction
     val torn = transferBatch.filter($"seq" <= 6)
-    val dir = java.nio.file.Files.createTempDirectory("graft-torn")
-      .resolve("target").toString
-    Appliers.applyBatchToParquet(accounts.withColumn("tso", lit(0L))
-      .unionByName(torn), Seq("acct"), "seq", "op", dir)
-    val s = spark.read.parquet(dir).agg(sum($"balance")).head().getLong(0)
+    val images = Appliers.mergeToFinalImages(torn, Seq("acct"), "seq", "op")
+    val s = Appliers.upsert(accounts.select($"acct", $"balance"), images,
+      Seq("acct")).agg(sum($"balance")).head().getLong(0)
     assert(s != total, "torn prefix should break the invariant")
     assert(s == total - 30L) // txn 3's in-flight amount
+  }
+
+  test("replica from nothing: empty bootstrap, delete-only first batch, txn-boundary states, replay exactly-once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-txnnothing")
+      .resolve("target").toString
+    def batch(rows: (Long, Long, String, String, Long)*) =
+      rows.toDF("pk", "seq", "op", "v", "tso")
+    // txn 5 only deletes a key the target never held; txn 10 inserts
+    // pks 1,2; txn 20 updates pk1 and inserts pk3
+    val deleteOnly = batch((9L, 1L, "DELETE", "x", 5L))
+    val rest = batch((1L, 2L, "INSERT", "a1", 10L),
+      (2L, 3L, "INSERT", "b1", 10L), (1L, 4L, "UPDATE", "a2", 20L),
+      (3L, 5L, "INSERT", "c1", 20L))
+    // no full copy: version 1 is the empty state at position 0, shaped
+    // like the batch rows (the standing replica's first-trigger bootstrap)
+    TxnApplier.bootstrap(deleteOnly.limit(0).drop("op", "tso"), Seq("pk"),
+      dir, nBuckets = 4)
+    TxnApplier.applyBatch(deleteOnly, Seq("pk"), "seq", "op", "tso", dir, 4)
+    TxnApplier.applyBatch(rest, Seq("pk"), "seq", "op", "tso", dir, 4)
+    def state(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
+      df.select($"pk", $"v").as[(Long, String)].collect().toSet
+    assert(state(TxnApplier.readCurrent(spark, dir)) ==
+      Set((1L, "a2"), (2L, "b1"), (3L, "c1")))
+    // every observable state is a transaction boundary — never a
+    // half-txn mix
+    val boundaries = Seq(Set.empty[(Long, String)],
+      Set((1L, "a1"), (2L, "b1")), Set((1L, "a2"), (2L, "b1"), (3L, "c1")))
+    val states = TxnApplier.versions(dir)
+      .map(v => state(TxnApplier.readVersion(spark, dir, v)))
+    assert(states.distinct == boundaries, states)
+    assert(TxnApplier.currentCommit(dir).exists(_.lastTso == 20L))
+    // a replay of both batches is exactly-once
+    val vs = TxnApplier.versions(dir)
+    assert(TxnApplier.applyBatch(deleteOnly.unionByName(rest), Seq("pk"),
+      "seq", "op", "tso", dir, 4).isEmpty)
+    assert(TxnApplier.versions(dir) == vs)
   }
 
   test("txnsPerCommit amortizes commits; boundaries stay transactional") {

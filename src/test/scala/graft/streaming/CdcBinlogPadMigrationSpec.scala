@@ -14,7 +14,8 @@ import graft.sinks.BinlogWire
   * rename mapping (including the legacy `%06d` pad's silent overflow
   * forms), idempotency, conflict handling (byte-identical duplicate
   * dropped, divergent content refused loudly), stream-subdir coverage
-  * BEYOND the configured fan-out range, and the end-to-end upgrade:
+  * BEYOND the configured fan-out range, the dual-width replay delete
+  * (CdcBinlog.deleteBatchFiles), and the end-to-end upgrade:
   * a live query restarted over a legacy-named dir — with a crash
   * replay pending across the upgrade — migrates, replays without
   * duplicating a transaction, and keeps every already-served byte
@@ -96,6 +97,29 @@ class CdcBinlogPadMigrationSpec extends SparkSpec {
     // both copies left in place for the operator to adjudicate
     assert(text(d, "binlog.000008.x") == "old-attempt")
     assert(text(d, "binlog.000000000008.x") == "new-attempt")
+  }
+
+  test("replay supersede: deleteBatchFiles drops the whole batch prefix (orphan partition and 6-digit legacy name included), no other batch's files") {
+    val d = java.nio.file.Files.createTempDirectory("graft-padmig5")
+    // batch 7's earlier attempt: its partitioning differed from the
+    // replay's, so partition 000099 is an orphan no rewrite would touch;
+    // one file still carries the pre-upgrade 6-digit pad
+    seed(d, "binlog.000000000007.000000", "A")
+    seed(d, "binlog.000000000007.000001", "B")
+    seed(d, "binlog.000000000007.000099", "ORPHAN")
+    seed(d, "binlog.000007.000002", "LEGACY")
+    // other batches, including the wide name of batch 7000000 that the
+    // narrow prefix binlog.000007 would match without its trailing '.'
+    val others = Set("binlog.000000000006.000000",
+      "binlog.000000000008.000000", "binlog.000008.000000",
+      "binlog.000007000000.000000", "manifest.txt")
+    others.foreach(n => seed(d, n, n))
+    CdcBinlog.deleteBatchFiles(d.toString, 7L)
+    assert(names(d) == others)
+    others.foreach(n => assert(text(d, n) == n))
+    // absent dir: nothing to supersede, nothing created
+    CdcBinlog.deleteBatchFiles(s"$d/never-created", 7L)
+    assert(!java.nio.file.Files.exists(d.resolve("never-created")))
   }
 
   // ---- end-to-end: live production restarted over a legacy-named dir,

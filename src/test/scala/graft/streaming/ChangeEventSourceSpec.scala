@@ -2,11 +2,14 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.SparkSpec
 import graft.operators.MergeSort
+import graft.sinks.OrderedSink
 import graft.sources.ChangeEventSource
 
 /** Live-feed ingress (socket/Kafka shape, MemoryStream as transport):
@@ -15,6 +18,19 @@ import graft.sources.ChangeEventSource
   * behaving exactly as they do for file sources. */
 class ChangeEventSourceSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The §3.1 DAG's sink: each micro-batch appends TSO-ordered and
+    * position-idempotent (OrderedSink.appendSince) under a checkpoint. */
+  private def startOrdered(src: DataFrame, outDir: String, ckpt: String,
+      numPartitions: Int,
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    src.writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        OrderedSink.appendSince(batch, "tso", outDir, numPartitions)
+      }
+      .start()
 
   private def packet(tso: Long, dn: String, op: String,
       table: String = "t", hb: Boolean = false): String = {
@@ -45,9 +61,8 @@ class ChangeEventSourceSpec extends SparkSpec {
     input.addData(
       packet(30L, "dn2", "INSERT"), packet(10L, "dn1", "INSERT"),
       packet(40L, "dn2", "UPDATE"), packet(20L, "dn1", "INSERT"))
-    val q1 = GlobalBinlogStream.startFrom(envelope, "tso", outDir, ckpt,
-      numPartitions = 2,
-      transform = df => df.filter(col("op") =!= "HEARTBEAT"))
+    val q1 = startOrdered(envelope.filter(col("op") =!= "HEARTBEAT"),
+      outDir, ckpt, numPartitions = 2)
     q1.processAllAvailable(); q1.stop() // KILL mid-stream
 
     val out1 = spark.read.parquet(outDir)
@@ -55,12 +70,11 @@ class ChangeEventSourceSpec extends SparkSpec {
     assert(MergeSort.disorderCount(out1.orderBy($"tso"), "tso") == 0)
 
     // wave 2: RESUME from the same checkpoint — only the delta lands,
-    // heartbeats are filtered by the transform, nothing duplicates
+    // heartbeats are filtered out, nothing duplicates
     input.addData(
       packet(50L, "dn1", "HEARTBEAT"), packet(60L, "dn2", "DELETE"))
-    val q2 = GlobalBinlogStream.startFrom(envelope, "tso", outDir, ckpt,
-      numPartitions = 2,
-      transform = df => df.filter(col("op") =!= "HEARTBEAT"))
+    val q2 = startOrdered(envelope.filter(col("op") =!= "HEARTBEAT"),
+      outDir, ckpt, numPartitions = 2)
     q2.processAllAvailable(); q2.stop()
 
     val out2 = spark.read.parquet(outDir)
@@ -160,11 +174,11 @@ class ChangeEventSourceSpec extends SparkSpec {
     val input = MemoryStream[(String, Array[Byte])]
     val outDir = Files.createTempDirectory("graft-seg-out").toString
     input.addData(("dn7", bytes))
-    val q = GlobalBinlogStream.startFrom(
+    val q = startOrdered(
       ChangeEventSource.fromWireSegments(
         input.toDF().toDF("dn", "payload"), "dn", "payload",
         Map(("app", "t") -> Seq("id", "v"))),
-      "tso", outDir, Files.createTempDirectory("graft-seg-ck").toString, 1)
+      outDir, Files.createTempDirectory("graft-seg-ck").toString, 1)
     q.processAllAvailable(); q.stop()
     assert(spark.read.parquet(outDir).count() == 3)
   }
@@ -313,8 +327,8 @@ class ChangeEventSourceSpec extends SparkSpec {
         "dn", "payload", Map(("app", "t") -> Seq("id", "v")))
       // a socket feed has no "drained" state — run as a STANDING query
       // (AvailableNow would see an empty just-connected source and stop)
-      GlobalBinlogStream.startFrom(envelope, "tso", outDir, ckpt,
-        numPartitions = 2, continuous = Some("500 milliseconds"))
+      startOrdered(envelope, outDir, ckpt, numPartitions = 2,
+        trigger = Trigger.ProcessingTime("500 milliseconds"))
     }
     def awaitRows(n: Long): Long = {
       val deadline = System.currentTimeMillis() + 60000
@@ -351,15 +365,15 @@ class ChangeEventSourceSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[String]
     // the malformed record must be AVAILABLE before the query starts:
-    // startFrom runs Trigger.AvailableNow, which snapshots the offsets
+    // the query runs Trigger.AvailableNow, which snapshots the offsets
     // at start — data added after the snapshot is not processed, and
     // the test would race query startup (it won that race only while
     // startup was slow)
     input.addData("""{"tso": NOT_JSON""")
-    val q = GlobalBinlogStream.startFrom(
+    val q = startOrdered(
       ChangeEventSource.fromJson(
         input.toDF().withColumnRenamed("value", "v"), "v"),
-      "tso", Files.createTempDirectory("graft-ff-out").toString,
+      Files.createTempDirectory("graft-ff-out").toString,
       Files.createTempDirectory("graft-ff-ck").toString, 1)
     val ex = intercept[Exception] { q.processAllAvailable() }
     q.stop()

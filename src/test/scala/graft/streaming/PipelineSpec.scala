@@ -158,20 +158,4 @@ class PipelineSpec extends SparkSpec {
     assert(events.head.getString(0) == "000000000")
     assert(events.last.getString(0) == "000199999")
   }
-
-  test("globalBinlogBatch produces ordered per-key envelopes") {
-    val events = graft.sources.Tables.events(spark, sf)
-    val out = Pipeline.globalBinlogBatch(events)
-    assert(out.count() > 0)
-    // commit_tso ordered ascending
-    val tsos = out.select("commit_tso").as[Long].collect()
-    assert(tsos.toSeq == tsos.sorted.toSeq)
-    // envelope event lists are sorted by event_id
-    val firstEvents = out.select($"events").limit(20)
-      .as[Seq[(Long, String, Double)]].collect()
-    firstEvents.foreach { evs =>
-      val ids = evs.map(_._1)
-      assert(ids == ids.sorted)
-    }
-  }
 }
