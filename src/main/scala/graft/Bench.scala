@@ -9,53 +9,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Scratch (shuffle spill + per-query staged targets) on tmpfs: the
-    // host disk has intermittent multi-second fsync stalls that inflate
-    // write-heavy queries 1.5-2x run-to-run with zero code change —
-    // the bench should measure the engine, not disk weather. Real
-    // deployments address durable targets through the Hadoop FS API
-    // (HDFS/S3/OSS); correctness runs (Verify) keep default paths.
-    val scratch = new java.io.File(
-      sys.env.getOrElse("SPARK_GRAFT_SCRATCH",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-bench"
-        else System.getProperty("java.io.tmpdir")))
-    scratch.mkdirs()
-    System.setProperty("java.io.tmpdir", scratch.getAbsolutePath)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", s"${scratch.getAbsolutePath}/spark-local")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // local FS without per-path chmod forks (see NoChmodLocalFs doc):
-      // measures the engine, not the no-native-hadoop fork path
-      .config("spark.hadoop.fs.file.impl", "graft.util.NoChmodLocalFs")
-      .config("spark.sql.adaptive.enabled", "true")
-      // NOTE (r22, measured): coalescePartitions.parallelismFirst=false
-      // (size-targeted AQE coalescing) was A/B'd over the shuffle-
-      // bound query family at sf0.1 and REGRESSED it (12-query subset
-      // 9.44s -> 10.68s, q93 1.42 -> 1.96): at this SF every shuffle
-      // is under the advisory size, so it collapses to ONE reduce task
-      // and serializes compute-heavy stages. Kept at the default
-      // (parallelism-first); see OPTIMIZATION_r22.md.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the streaming harnesses (q109/q111) are lifecycle-bound, not
-      // dataflow-bound: shrink the micro-batch planner's idle poll so
-      // a contended driver window inflates them less
-      .config("spark.sql.streaming.pollingDelay", "1")
-      // streaming offset/commit/sink-manifest logs default to the
-      // FileContext API, which IGNORES fs.file.impl and so bypasses
-      // NoChmodLocalFs — every WAL file creation forks a chmod process
-      // (measured: walCommit+commitOffsets 0.7-1.5 s per micro-batch on
-      // a tmpfs checkpoint). The FileSystem-based manager routes through
-      // the configured fs.file.impl; rename is atomic on local FS. Real
-      // deployments on HDFS/S3 keep the default manager.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (scratch, localDir) = GraftSession.scratch("graft-bench",
+      sys.env.get("SPARK_GRAFT_SCRATCH"))
+    val spark = GraftSession.build("graft-bench", GraftSession.cores,
+      Some(localDir))
     val failed = scala.collection.mutable.LinkedHashSet[String]()
     def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()

@@ -14,10 +14,8 @@ import graft.functions.{HashedShingles, MinHashSignature, NfcNormalize, SimHash6
   * wiring in polardbx-cdc-common; here the Spark-idiomatic analog is
   * `spark.sql.extensions`).
   *
+  * Every [[GraftSession]] sets it; then
   * {{{
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")
-  *     ...
   *   spark.sql("SELECT simhash64(hashed_shingles(body, 3)) FROM docs")
   * }}}
   *

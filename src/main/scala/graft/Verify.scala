@@ -1,28 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // local FS without per-path chmod forks (see NoChmodLocalFs doc):
-      // measures the engine, not the no-native-hadoop fork path
-      .config("spark.hadoop.fs.file.impl", "graft.util.NoChmodLocalFs")
-      // streaming checkpoint WALs through the FileSystem API too —
-      // FileContext ignores fs.file.impl (see Bench.scala)
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-verify", GraftSession.cores, None)
     new java.io.File(outDir).mkdirs()
     // local iteration aid: SPARK_GRAFT_ONLY=q57,q39 runs a prefix subset
     // (driver never sets it → full run)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.GraftSession
 import graft.model.GtidSet
 import graft.operators.TxnApplier
 import graft.sinks.{BinlogRetention, BinlogWire}
@@ -921,15 +922,9 @@ object ScaleRehearsalJob {
     * ALL `consumers` streams consumed by concurrent ProcessingTime
     * queries. `mode` is cow|delta|auto (the consumers' apply mode). */
   def main(args: Array[String]): Unit = {
+    val cpus = GraftSession.cores
     if (args.headOption.contains("straggler")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-      val spark = SparkSession.builder()
-        .appName("graft-straggler-rehearsal")
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus.toString)
-        .config("spark.ui.enabled", "false")
-        .config("spark.hadoop.fs.file.impl", "graft.util.NoChmodLocalFs")
-        .getOrCreate()
+      val spark = GraftSession.build("graft-straggler-rehearsal", cpus, None)
       try println(runStraggler(spark, args(1), args(2).toInt,
         args(3).toLong, args(4).toInt,
         triggerMs = if (args.length > 5) args(5).toLong else 500L,
@@ -940,14 +935,7 @@ object ScaleRehearsalJob {
       return
     }
     if (args.headOption.contains("runF")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-      val spark = SparkSession.builder()
-        .appName("graft-run-f")
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus.toString)
-        .config("spark.ui.enabled", "false")
-        .config("spark.hadoop.fs.file.impl", "graft.util.NoChmodLocalFs")
-        .getOrCreate()
+      val spark = GraftSession.build("graft-run-f", cpus, None)
       try println(runF(spark, args(1), args(2).toInt, args(3).toLong,
         streams = if (args.length > 4) args(4).toInt else 4,
         streamsAfter = if (args.length > 5) args(5).toInt else 6,
@@ -978,19 +966,7 @@ object ScaleRehearsalJob {
     val compactAfter = if (args.length > 8) args(8).toInt else 32
     val compactMaxBuckets =
       if (args.length > 9) args(9).toInt else Int.MaxValue
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .appName("graft-scale-rehearsal")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      // local FS without per-path chmod forks (NoChmodLocalFs doc):
-      // the rehearsal's publish loops are METADATA-heavy (a manifest
-      // write + pointer swap per commit group), and a forked chmod per
-      // FS op turns them into the measurement's bottleneck — run D's
-      // first launch read 15-30 s per delta-publish from exactly this
-      .config("spark.hadoop.fs.file.impl", "graft.util.NoChmodLocalFs")
-      .getOrCreate()
+    val spark = GraftSession.build("graft-scale-rehearsal", cpus, None)
     try {
       val r = run(spark, root, dns, rowsPerDn, streams, waves,
         consumers, numPartitions = math.min(cpus, 16),

@@ -597,16 +597,6 @@ object TxnApplier {
     c
   }
 
-  /** Phase timing to stderr when GRAFT_PROF is set (perf triage aid). */
-  private def profTimed[T](label: String)(body: => T): T =
-    if (!sys.env.contains("GRAFT_PROF")) body
-    else {
-      val t0 = System.nanoTime(); val r = body
-      System.err.println(
-        f"[txnapplier] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   /** The replay gate: rows past the committed `lastTso`. The TSO is
     * read through the function's closure, not inlined as a literal, so
     * every trigger's gate compiles to the same generated class — an
@@ -655,12 +645,10 @@ object TxnApplier {
         .withColumn("__bucket", Appliers.bucketOf(keyCols, nBuckets))
     val stagedSchema = stagedImages.schema
     val probe = org.apache.spark.sql.Observation("txnapplier-probe")
-    profTimed("stage-images+probe") {
-      stagedImages.observe(probe,
-          collect_set(struct(col(tsoCol).cast("long").as("__tso"),
-            col("__bucket"))).as("pairs"))
-        .write.mode(SaveMode.Overwrite).parquet(imagesPath)
-    }
+    stagedImages.observe(probe,
+        collect_set(struct(col(tsoCol).cast("long").as("__tso"),
+          col("__bucket"))).as("pairs"))
+      .write.mode(SaveMode.Overwrite).parquet(imagesPath)
     val images = spark.read.schema(stagedSchema).parquet(imagesPath)
     val tsoBuckets = probe.get("pairs")
       .asInstanceOf[Seq[org.apache.spark.sql.Row]]
@@ -716,7 +704,6 @@ object TxnApplier {
     val fresh = batch.filter(pastTso(tsoCol, start.lastTso))
     val staging = new Path(root, "_batchstage")
     if (fs.exists(staging)) fs.delete(staging, true)
-    def timed[T](label: String)(body: => T): T = profTimed(label)(body)
     try {
       val (images, tsoBuckets) = stageFinalImages(fresh, keyCols, seqCol,
         opCol, tsoCol, nBuckets, staging)
@@ -775,16 +762,13 @@ object TxnApplier {
         .filter(col("__rn") === 1 && col("effective_op") =!= "DELETE")
         .select(targetCols.map(col) ++ Seq(col("__wv"), col("__bucket")): _*)
         .repartition(col("__wv"), col("__bucket"))
-      timed("bulk-write") {
-        bulk.write.partitionBy("__wv", "__bucket").mode(SaveMode.Overwrite)
-          .parquet(outPath.toString)
-      }
+      bulk.write.partitionBy("__wv", "__bucket").mode(SaveMode.Overwrite)
+        .parquet(outPath.toString)
 
       // publication — metadata only, in TSO order: rename each group's
       // staged dir into place, write its manifest, swing the pointer
       var entries = manifest
       val commits = Seq.newBuilder[Commit]
-      timed("publish") {
       groups.zipWithIndex.foreach { case (g, i) =>
         val v = start.version + 1 + i
         val dst = new Path(root, versionRel(v))
@@ -802,7 +786,7 @@ object TxnApplier {
         val c = Commit(v, g.last)
         commitPointer(root, c, schemaV)
         commits += c
-      } }
+      }
       commits.result()
     } finally {
       if (fs.exists(staging)) fs.delete(staging, true)
@@ -859,41 +843,37 @@ object TxnApplier {
       // DATA column (no read path prunes delta buckets — compaction
       // restores the bucket-pruned layout)
       val outPath = new Path(staging, "out")
-      profTimed("delta-write") {
-        images
-          .select(targetCols.map(col) ++ Seq(col("effective_op"),
-            col(tsoCol).cast("long").as("__delta_tso"),
-            groupOf(groups, col(tsoCol)).as("__wv"), col("__bucket")): _*)
-          .repartition(col("__wv"))
-          .write.partitionBy("__wv").mode(SaveMode.Overwrite)
-          .parquet(outPath.toString)
-      }
+      images
+        .select(targetCols.map(col) ++ Seq(col("effective_op"),
+          col(tsoCol).cast("long").as("__delta_tso"),
+          groupOf(groups, col(tsoCol)).as("__wv"), col("__bucket")): _*)
+        .repartition(col("__wv"))
+        .write.partitionBy("__wv").mode(SaveMode.Overwrite)
+        .parquet(outPath.toString)
       // publication — metadata only, in TSO order: each group's staged
       // dir becomes a `.delta` version appended to the chain of EVERY
       // bucket it touches (readers dedupe the shared rel)
       var entries = manifest
       val commits = Seq.newBuilder[Commit]
-      profTimed("delta-publish") {
-        groups.zipWithIndex.foreach { case (g, i) =>
-          val v = start.version + 1 + i
-          val dst = new Path(root, deltaVersionRel(v))
-          fs.mkdirs(dst.getParent)
-          if (fs.exists(dst)) fs.delete(dst, true) // crash debris
-          val src = new Path(outPath, s"__wv=$i")
-          if (fs.exists(src)) {
-            if (!fs.rename(src, dst))
-              sys.error(s"txn target: rename $src -> $dst failed")
-          } else fs.mkdirs(dst)
-          entries = touchedByGrp(i)
-            .foldLeft(entries) { case (m, b) =>
-              val rel = deltaVersionRel(v)
-              m.updated(b, m.get(b).map(_ + ";" + rel).getOrElse(rel))
-            }
-          writeManifest(root, v, entries)
-          val c = Commit(v, g.last)
-          commitPointer(root, c, schemaV)
-          commits += c
-        }
+      groups.zipWithIndex.foreach { case (g, i) =>
+        val v = start.version + 1 + i
+        val dst = new Path(root, deltaVersionRel(v))
+        fs.mkdirs(dst.getParent)
+        if (fs.exists(dst)) fs.delete(dst, true) // crash debris
+        val src = new Path(outPath, s"__wv=$i")
+        if (fs.exists(src)) {
+          if (!fs.rename(src, dst))
+            sys.error(s"txn target: rename $src -> $dst failed")
+        } else fs.mkdirs(dst)
+        entries = touchedByGrp(i)
+          .foldLeft(entries) { case (m, b) =>
+            val rel = deltaVersionRel(v)
+            m.updated(b, m.get(b).map(_ + ";" + rel).getOrElse(rel))
+          }
+        writeManifest(root, v, entries)
+        val c = Commit(v, g.last)
+        commitPointer(root, c, schemaV)
+        commits += c
       }
       commits.result()
     } finally {

@@ -25,7 +25,7 @@ object Pipeline {
   /** Session configs for big-state pipelines: RocksDB-backed streaming
     * state (the TxnBuffer→RocksDB spill analog, storage/LogEventStorage
     * .java:51 — in Spark it's one provider switch; state no longer bounded
-    * by executor heap). Apply via SparkSession.builder.config(...). */
+    * by executor heap). Apply with `spark.conf.set`. */
   val rocksDbStateStore: Map[String, String] = Map(
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Dump `.explain("formatted")` for declared queries to files — the
   * plan evidence artifacts for optimization rounds (plans/rNN).
@@ -18,18 +16,8 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.hadoop.fs.file.impl", "graft.util.NoChmodLocalFs")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.pollingDelay", "1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-plandump", GraftSession.cores,
+      None)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -1,9 +1,8 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Per-job profiler for a declared query under the Bench config: runs a
   * warm pass, then one timed pass with a listener recording every Spark
@@ -16,27 +15,9 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val scratch = new java.io.File(
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-prof"
-      else System.getProperty("java.io.tmpdir"))
-    scratch.mkdirs()
-    System.setProperty("java.io.tmpdir", scratch.getAbsolutePath)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", s"${scratch.getAbsolutePath}/spark-local")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.hadoop.fs.file.impl", "graft.util.NoChmodLocalFs")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.pollingDelay", "1")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (_, localDir) = GraftSession.scratch("graft-prof", None)
+    val spark = GraftSession.build("graft-profile", GraftSession.cores,
+      Some(localDir))
 
     final case class Job(id: Int, desc: String, start: Long,
       var end: Long = 0L, var stages: Int = 0, var tasks: Int = 0)

@@ -17,21 +17,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // skip per-path chmod forks on local FS (see NoChmodLocalFs doc)
-      .config("spark.hadoop.fs.file.impl", "graft.util.NoChmodLocalFs")
-      // streaming checkpoint WALs through the FileSystem API too —
-      // FileContext ignores fs.file.impl (see Bench.scala)
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.build("graft-test", cores = 4, localDir = None)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
