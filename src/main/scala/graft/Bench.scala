@@ -109,8 +109,7 @@ object Bench {
       String.format(java.util.Locale.ROOT, "%.4f", Double.box(v)),
       withMedians = repeat > 1))
     spark.stop()
-    if (scratch.getAbsolutePath.startsWith("/dev/shm/"))
-      org.apache.commons.io.FileUtils.deleteQuietly(scratch) // free the RAM
+    GraftSession.dropScratch(scratch)
     if (failed.nonEmpty) sys.exit(1)
   }
 }

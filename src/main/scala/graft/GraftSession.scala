@@ -83,4 +83,11 @@ object GraftSession {
     System.setProperty("java.io.tmpdir", f.getAbsolutePath)
     (f, s"${f.getAbsolutePath}/spark-local")
   }
+
+  /** Remove a [[scratch]] dir once its session has stopped, when it sits
+    * on tmpfs (shared memory stays held until the files go); a scratch
+    * dir the caller chose elsewhere is theirs to keep. */
+  def dropScratch(dir: File): Unit =
+    if (dir.getAbsolutePath.startsWith("/dev/shm/"))
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
 }

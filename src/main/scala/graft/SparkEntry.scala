@@ -670,8 +670,9 @@ object SparkEntry {
       val (accounts, _, batch) = bankLedger(s, d)
       val dir = Staged.tempDir("q60-txn") // fresh target per invocation
       TxnApplier.bootstrap(accounts, Seq("acct"), dir, nBuckets = 4)
-      TxnApplier.applyBatch(batch, Seq("acct"), "seq", "op", "tso", dir,
-        nBuckets = 4, txnsPerCommit = 32)
+      TxnApplier.applyBatch(TxnApplier.stage(batch, Seq("acct"), "tso", 4,
+          Staged.tempDir("q60-batch")), Seq("acct"), "seq", "op", "tso",
+        dir, nBuckets = 4, txnsPerCommit = 32)
       TxnApplier.readCurrent(s, dir)
         .select(col("acct").cast("bigint").as("account_id"),
           col("balance").cast("bigint").as("balance"))
@@ -831,8 +832,9 @@ object SparkEntry {
       val dir = Staged.tempDir("q61-handoff")
       TxnApplier.bootstrap(snapshot, Seq("acct"), dir, nBuckets = 4,
         initialTso = 64L)
-      TxnApplier.applyBatch(batch, Seq("acct"), "seq", "op", "tso", dir,
-        nBuckets = 4, txnsPerCommit = 32)
+      TxnApplier.applyBatch(TxnApplier.stage(batch, Seq("acct"), "tso", 4,
+          Staged.tempDir("q61-batch")), Seq("acct"), "seq", "op", "tso",
+        dir, nBuckets = 4, txnsPerCommit = 32)
       TxnApplier.readCurrent(s, dir)
         .select(col("acct").cast("bigint").as("account_id"),
           col("balance").cast("bigint").as("balance"))
@@ -1803,14 +1805,12 @@ object SparkEntry {
       val ev = evOf("val", col("k") <= 50)
         .unionByName(ddlRow)
         .unionByName(evOf("val2", col("k") > 50))
-      val staged = WireReplicaJob.stageRouted(ev,
-        Staged.tempDir("q107-stage"))
       val root = Staged.tempDir("q107-target")
-      WireReplicaJob.applyRoutedWithDdl(staged,
-        Seq(WireReplicaJob.TableTarget("app", "orders",
-          Seq("k" -> "long", "seq" -> "long", "val" -> "string"),
-          Seq("k"), "seq", root, 4)),
-        txnsPerCommit = 64)
+      val targets = Seq(WireReplicaJob.TableTarget("app", "orders",
+        Seq("k" -> "long", "seq" -> "long", "val" -> "string"),
+        Seq("k"), "seq", root, 4))
+      WireReplicaJob.applyRoutedWithDdl(WireReplicaJob.stageRouted(ev,
+        Staged.tempDir("q107-stage"), targets), targets, txnsPerCommit = 64)
       TxnApplier.readCurrent(s, root)
         .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("key_sum"),
           count(col("val2")).as("n_vals"),

@@ -214,24 +214,29 @@ object GapRepairJob {
           .getOrElse(sys.error(
             s"repair target ${t.targetDir}: not bootstrapped"))
           .lastTso
-        // O(gap)-bounded stage: the recon batch is read twice (counts +
-        // apply); without it the scoped diff would re-run per pass. The
-        // per-op counts ride the stage write as observed metrics (the
-        // recon op vocabulary is closed: INSERT/UPDATE/DELETE), so the
-        // outcome report costs no separate aggregate job.
+        // O(gap)-bounded stage: the apply reads the recon batch once it
+        // is counted; without it the scoped diff would re-run. The
+        // per-op counts and the apply's (tso, bucket) probe ride the
+        // stage write as observed metrics (the recon op vocabulary is
+        // closed: INSERT/UPDATE/DELETE), so neither the outcome report
+        // nor the commit plan costs a separate job.
         val opObs = org.apache.spark.sql.Observation()
         val ops = Seq("INSERT", "UPDATE", "DELETE")
         val opAggs = ops.map(o =>
           count(when(col("op") === o, lit(1))).as(o))
         val staged = Staged.parquetStage(
           recon.withColumn("tso", lit(lastTso + 1L))
-            .observe(opObs, opAggs.head, opAggs.tail: _*),
+            .observe(opObs, opAggs.head, opAggs.tail :+
+              TxnApplier.pairsProbe(t.keyCols.map(col), col("tso"),
+                t.nBuckets).as("pairs"): _*),
           s"${t.targetDir}/_gap-repair-stage")
         val byOp = ops.map(o =>
           o -> opObs.get(o).asInstanceOf[Long]).toMap
         if (byOp.valuesIterator.sum > 0L)
-          TxnApplier.applyBatch(staged, t.keyCols, t.seqCol, "op", "tso",
-            t.targetDir, t.nBuckets, txnsPerCommit)
+          TxnApplier.applyBatch(TxnApplier.Probed(staged,
+              TxnApplier.pairsOf(opObs.get("pairs"))),
+            t.keyCols, t.seqCol, "op", "tso", t.targetDir, t.nBuckets,
+            txnsPerCommit)
         TableRepair(t.schemaName, t.tableName, nAffected,
           missing = byOp.getOrElse("INSERT", 0L),
           orphans = byOp.getOrElse("DELETE", 0L),

@@ -65,10 +65,11 @@ object HandoffJob {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // no isEmpty pre-check: that is an extra scan of every micro-batch;
-        // applyBatch's own staged probe short-circuits an empty batch
+        // an empty stage probes no pair, so the apply runs no job
         val filtered = Filters.replicaFilter(batch, spec, dbCol, tableCol)
-        TxnApplier.applyBatch(filtered, keyCols, seqCol, opCol, tsoCol,
-          targetDir, nBuckets, txnsPerCommit)
+        TxnApplier.applyBatch(TxnApplier.stage(filtered, keyCols, tsoCol,
+            nBuckets, s"$checkpointDir/_apply_stage"),
+          keyCols, seqCol, opCol, tsoCol, targetDir, nBuckets, txnsPerCommit)
         ()
       }
       .start()

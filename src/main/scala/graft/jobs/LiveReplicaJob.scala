@@ -90,11 +90,11 @@ object LiveReplicaJob {
     * semantics). The per-DN cursor is the ONE shared source position:
     * it advances only after every table applied, and each table's own
     * committed-TSO gate makes the replayed prefix idempotent when a
-    * crash lands between tables. With more than one target (or DDL in
-    * stream) the decoded rows are staged once (`stagingDir`_decoded,
-    * [[WireReplicaJob.stageRouted]]) so routing never re-runs the wire
-    * decode per table; `onDdl` then receives the trigger's DDL rows,
-    * observed by that staging write, in fold order. */
+    * crash lands between tables. The decoded rows are staged once
+    * (`stagingDir`_decoded, [[WireReplicaJob.stageRouted]]), whose write
+    * observes every table's apply input, so routing never re-runs the
+    * wire decode per table; `onDdl` then receives the trigger's DDL
+    * rows, observed by that staging write, in fold order. */
   def pollApplyOnceRouted(spark: SparkSession, endpoints: Seq[Endpoint],
       tableCols: Map[(String, String), Seq[String]],
       targets: Seq[WireReplicaJob.TableTarget], stagingDir: String,
@@ -139,11 +139,10 @@ object LiveReplicaJob {
     val changes = ChangeEventSource.fromWireSegments(
       staged.filter(length(col("payload")) > 0).select("dn", "payload"),
       "dn", "payload", tableCols)
-    // one target consumes the decode once anyway; N targets (or the
-    // DDL fold's extra passes) read a decoded stage so the wire decode
-    // never re-runs per table
-    val decoded = routedInput(changes, targets, ddlInStream,
-      stagingDir, onDdl)
+    // the tables (and the DDL fold) read a decoded stage, whose write
+    // observes each table's apply input, so the wire decode never
+    // re-runs per table
+    val decoded = routedInput(changes, targets, stagingDir, onDdl)
     // the apply and the cursor collect are independent consumers of the
     // already-materialized stages (disjoint outputs) — overlap them
     // (guide §2.6). onPoll stays AFTER both: a failed apply must not
@@ -174,19 +173,16 @@ object LiveReplicaJob {
   }
 
   /** A poll's decoded rows as the routed apply's input: staged with
-    * the routing probe unless one target and no DDL need no stage. */
+    * the routing probe, whose DDL rows `onDdl` receives. */
   private def routedInput(changes: org.apache.spark.sql.DataFrame,
-      targets: Seq[WireReplicaJob.TableTarget], ddlInStream: Boolean,
-      stagingDir: String, onDdl: Seq[(Long, String, String)] => Unit)
-      : WireReplicaJob.RoutedBatch =
-    if (targets.size == 1 && !ddlInStream)
-      WireReplicaJob.RoutedBatch.unstaged(changes, targets.head)
-    else {
-      val staged = WireReplicaJob.stageRouted(changes,
-        stagingDir + "_decoded")
-      onDdl(staged.ddls)
-      staged
-    }
+      targets: Seq[WireReplicaJob.TableTarget], stagingDir: String,
+      onDdl: Seq[(Long, String, String)] => Unit)
+      : WireReplicaJob.RoutedBatch = {
+    val staged = WireReplicaJob.stageRouted(changes,
+      stagingDir + "_decoded", targets)
+    onDdl(staged.ddls)
+    staged
+  }
 
   /** A DN endpoint whose cursor is its executed GTID SET — the
     * failover-proof replica position (see
@@ -250,8 +246,7 @@ object LiveReplicaJob {
     val changes = ChangeEventSource.fromWireSegments(
       staged.filter(length(col("payload")) > 0).select("dn", "payload"),
       "dn", "payload", tableCols)
-    val decoded = routedInput(changes, targets, ddlInStream,
-      stagingDir, onDdl)
+    val decoded = routedInput(changes, targets, stagingDir, onDdl)
     if (ddlInStream)
       WireReplicaJob.applyRoutedWithDdl(decoded, targets, txnsPerCommit,
         fromTso)

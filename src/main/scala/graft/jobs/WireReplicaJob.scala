@@ -57,45 +57,72 @@ object WireReplicaJob {
   }
 
   /** One routed trigger's input: the decoded frame plus the routing
-    * facts its staging write observed ([[stageRouted]]) — every
-    * (schemaName, tableName) pair its rows carry, and its DDL rows as
-    * (tso, schemaName, ddl) in (tso, ddl) order. */
+    * facts its staging write observed ([[stageRouted]]) — the distinct
+    * (tso, bucket) pairs of each routed table whose row events the batch
+    * carries (an absent table has no entry), and its DDL rows as (tso,
+    * schemaName, ddl) in (tso, ddl) order. */
   final case class RoutedBatch(frame: DataFrame,
-      tables: Set[(String, String)], ddls: Seq[(Long, String, String)])
-
-  object RoutedBatch {
-    /** The single-target, no-DDL trigger that skips staging: its one
-      * target is taken as present (an absent table's apply finds no
-      * rows and commits nothing) and no DDL folds. */
-    def unstaged(frame: DataFrame, target: TableTarget): RoutedBatch =
-      RoutedBatch(frame, Set(target.table), Seq.empty)
-  }
+      pairs: Map[(String, String), Seq[(Long, Int)]],
+      ddls: Seq[(Long, String, String)])
 
   /** Stage a decoded trigger to parquet under `dir` (overwritten per
     * call) and read it back, with the routing facts riding the staging
-    * write as observed metrics: the (schemaName, tableName) set over all
-    * rows and the DDL rows. A Binlog-X fan-out stream carries only the
-    * tables hashed (or pinned) to it, so a consumer routing the full
-    * registry would otherwise pay a staged image pass per absent table
-    * (measured ~6 s × absent table per trigger at the sf1 rehearsal);
-    * the probe is bounded by table and DDL-statement counts, never by
-    * rows, and costs no job beyond the write itself. */
-  def stageRouted(batch: DataFrame, dir: String): RoutedBatch = {
+    * write as observed metrics: each target's (tso, bucket) pairs and the
+    * DDL rows. A Binlog-X fan-out stream carries only the tables hashed
+    * (or pinned) to it, so a consumer routing the full registry would
+    * otherwise pay an apply per absent table (measured ~6 s × absent
+    * table per trigger at the sf1 rehearsal), and the pairs are every
+    * present table's apply input ([[TxnApplier.Probed]]): its commit
+    * groups and touched buckets, known before its one write query is
+    * planned. Each row's buckets come from the typed keys of its
+    * effective images exactly as [[shape]] builds them (a PK-changing
+    * UPDATE yields two), typed by the target's current schema. The probe
+    * is bounded by tables, transactions, buckets and DDL statements,
+    * never by rows, and costs no job beyond the write itself. */
+  def stageRouted(batch: DataFrame, dir: String,
+      targets: Seq[TableTarget]): RoutedBatch = {
+    validateTargets(targets)
     val probe = org.apache.spark.sql.Observation()
     // a frame without a ddl column (row-only producers) carries no DDL
     val ddls =
       if (batch.columns.contains("ddl")) Seq(ddlProbe.as("ddls")) else Nil
+    val aggs = targets.zipWithIndex.map { case (t, i) =>
+      targetPairs(t).as(s"pairs$i") } ++ ddls
     val staged = graft.operators.Staged.parquetStage(
-      batch.observe(probe,
-        collect_set(struct(col("schemaName"), col("tableName")))
-          .as("tables"), ddls: _*),
-      dir)
+      batch.observe(probe, aggs.head, aggs.tail: _*), dir)
     val m = probe.get
     RoutedBatch(staged,
-      m("tables").asInstanceOf[Seq[org.apache.spark.sql.Row]]
-        .map(r => (r.getString(0), r.getString(1))).toSet,
+      targets.zipWithIndex
+        .map { case (t, i) => t.table -> TxnApplier.pairsOf(m(s"pairs$i")) }
+        .filter(_._2.nonEmpty).toMap,
       m.get("ddls").map(ddlsOf).getOrElse(Seq.empty))
   }
+
+  /** A target's (tso, bucket) pairs over decoded rows, as its apply will
+    * see them: the rows [[shape]] keeps, each of its images' key cells
+    * read through the persisted rename lineage and cast to the target's
+    * current key types. Plain aggregates, no lambda: an observed
+    * metric ships its expressions with the task result, and a lambda
+    * variable would carry its last bound image along. */
+  private def targetPairs(t: TableTarget): Column = {
+    val types = colTypesOf(t).toMap
+    val aliases = TxnApplier.renameLineage(t.targetDir)
+    val rows = rowsOf(t.schemaName, t.tableName)
+    def pairs(image: Column, of: Column) = TxnApplier.pairsProbe(
+      t.keyCols.map(k => imgGet(image, k, aliases).cast(types(k))),
+      col("tso"), t.nBuckets, of)
+    // the effective image of every row, plus the before image of an
+    // UPDATE whose key changed (its DELETE half, see imagesOf)
+    array_union(pairs(effectiveImage, rows),
+      pairs(col("before"), rows && keyChanged(t.keyCols, aliases)))
+  }
+
+  /** The target's current (column, type) pairs — the committed schema
+    * once bootstrapped, else the routing's own. */
+  private def colTypesOf(t: TableTarget): Seq[(String, String)] =
+    TxnApplier.targetSchema(t.targetDir)
+      .map(_.fields.toSeq.map(f => f.name -> f.dataType.sql))
+      .getOrElse(t.colTypes)
 
   /** The observed-metric aggregate that lists a decoded batch's DDL
     * rows; [[ddlsOf]] reads its value back. Shared by [[stageRouted]]
@@ -136,12 +163,11 @@ object WireReplicaJob {
     * (skipped, at-or-below its lastTso) and applies to B — per-table
     * exactly-once without cross-table coordination.
     *
-    * `batch.frame` is consumed once per target — callers with more
-    * than one target stage it through [[stageRouted]] (the routed entry
-    * points below do), so no target re-runs the wire decode. Only the
-    * targets whose table the batch carries apply: skipping an absent
-    * table is safe, its committed lastTso gate only moves when rows
-    * apply. */
+    * `batch` comes from [[stageRouted]]: each target reads the staged
+    * frame once in its one write query, so no target re-runs the wire
+    * decode. Only the targets whose table the batch carries apply:
+    * skipping an absent table is safe, its committed lastTso gate only
+    * moves when rows apply. */
   def applyRouted(batch: RoutedBatch, targets: Seq[TableTarget],
       txnsPerCommit: Int = 8, fromTso: Option[Long] = None,
       maxParallelTables: Int = 4,
@@ -165,23 +191,20 @@ object WireReplicaJob {
           t.keyCols, t.targetDir, t.nBuckets,
           initialTso = fromTso.getOrElse(0L))
       }
-    inParallel(targets.filter(t => batch.tables(t.table)),
+    inParallel(targets.filter(t => batch.pairs.contains(t.table)),
         maxParallelTables) { t =>
       // the target's CURRENT schema and persisted rename lineage, not
       // the caller's snapshot: after an evolution/rebuild in an earlier
       // batch, a stale TableTarget (or a stale decode registry naming a
       // renamed column by its old name) must not drop or null values
-      val colTypes = TxnApplier.targetSchema(t.targetDir)
-        .map(_.fields.toSeq.map(f => f.name -> f.dataType.sql))
-        .getOrElse(t.colTypes)
-      applyOne(decoded, t, colTypes, txnsPerCommit, fromTso,
-        TxnApplier.renameLineage(t.targetDir), applyMode, compactAfter,
-        compactMaxBuckets)
+      applyOne(decoded, batch.pairs(t.table), t, colTypesOf(t),
+        txnsPerCommit, fromTso, TxnApplier.renameLineage(t.targetDir),
+        applyMode, compactAfter, compactMaxBuckets)
     }
   }
 
-  private def applyOne(decoded: DataFrame, t: TableTarget,
-      colTypes: Seq[(String, String)], txnsPerCommit: Int,
+  private def applyOne(decoded: DataFrame, pairs: Seq[(Long, Int)],
+      t: TableTarget, colTypes: Seq[(String, String)], txnsPerCommit: Int,
       fromTso: Option[Long],
       aliases: Map[String, Seq[String]] = Map.empty,
       applyMode: TxnApplier.ApplyMode = TxnApplier.ApplyMode.Cow,
@@ -193,25 +216,31 @@ object WireReplicaJob {
       TxnApplier.bootstrap(typed.limit(0).drop("op", "tso"),
         t.keyCols, t.targetDir, t.nBuckets,
         initialTso = fromTso.getOrElse(0L))
+    val input = TxnApplier.Probed(typed, pairs)
     val delta = TxnApplier.useDelta(t.targetDir, applyMode)
     TxnApplier.recordModeDecision(t.targetDir, delta)
-    if (delta) {
-      // the standing-consumer shape: O(batch) delta commits, chains
-      // folded once they reach compactAfter (amortized O(target /
-      // compactAfter) per trigger — never the COW mode's every-trigger
-      // touched-bucket rewrite, which is O(target) against a uniform
-      // key stream and O(n²) over a long run). compactMaxBuckets < all
-      // bounds the fold PAUSE per trigger (rolling per-bucket
-      // incremental compaction) at the cost of chains riding a little
-      // above compactAfter while the fold sweeps.
-      if (TxnApplier.maxChainLength(t.targetDir) >= compactAfter)
-        TxnApplier.compactBuckets(decoded.sparkSession, t.targetDir,
-          compactMaxBuckets)
-      TxnApplier.applyBatchDelta(typed, t.keyCols, t.seqCol, "op", "tso",
-        t.targetDir, t.nBuckets, txnsPerCommit)
-    } else
-      TxnApplier.applyBatch(typed, t.keyCols, t.seqCol, "op", "tso",
-        t.targetDir, t.nBuckets, txnsPerCommit)
+    try {
+      if (delta) {
+        // the standing-consumer shape: O(batch) delta commits, chains
+        // folded once they reach compactAfter (amortized O(target /
+        // compactAfter) per trigger — never the COW mode's every-trigger
+        // touched-bucket rewrite, which is O(target) against a uniform
+        // key stream and O(n²) over a long run). compactMaxBuckets < all
+        // bounds the fold PAUSE per trigger (rolling per-bucket
+        // incremental compaction) at the cost of chains riding a little
+        // above compactAfter while the fold sweeps.
+        if (TxnApplier.maxChainLength(t.targetDir) >= compactAfter)
+          TxnApplier.compactBuckets(decoded.sparkSession, t.targetDir,
+            compactMaxBuckets)
+        TxnApplier.applyBatchDelta(input, t.keyCols, t.seqCol, "op", "tso",
+          t.targetDir, t.nBuckets, txnsPerCommit)
+      } else
+        TxnApplier.applyBatch(input, t.keyCols, t.seqCol, "op", "tso",
+          t.targetDir, t.nBuckets, txnsPerCommit)
+    } catch { case e: TxnApplier.ProbeMiss =>
+      throw new IllegalStateException(
+        s"routed table ${t.schemaName}.${t.tableName}: ${e.getMessage}", e)
+    }
     ()
   }
 
@@ -489,11 +518,10 @@ object WireReplicaJob {
       }
       }
     }
-    inParallel(targets.filter(t => batch.tables(t.table)),
+    inParallel(targets.filter(t => batch.pairs.contains(t.table)),
         maxParallelTables) { t =>
-      val evolved = TxnApplier.targetSchema(t.targetDir).get.fields
-        .toSeq.map(f => f.name -> f.dataType.sql)
-      applyOne(decoded, t, evolved, txnsPerCommit, fromTso,
+      applyOne(decoded, batch.pairs(t.table), t, colTypesOf(t),
+        txnsPerCommit, fromTso,
         renameAliases(t.table), applyMode, compactAfter,
         compactMaxBuckets)
     }
@@ -537,12 +565,12 @@ object WireReplicaJob {
 
   /** Start the wire replica for a SET of replicated tables off one
     * stream — each micro-batch decodes the wire files once and routes
-    * per-table through [[applyRouted]]. With more than one target (or
-    * DDL in stream) the decoded batch is staged through [[stageRouted]]
-    * (under the checkpoint dir) so N targets read the stage, never
-    * re-run the wire decode; a replayed trigger overwrites the stage
-    * byte-identically, and every target's own position gate drops what
-    * it already applied — see [[applyRouted]] for the crash-safety
+    * per-table through [[applyRouted]]. The decoded batch is staged
+    * through [[stageRouted]] (under the checkpoint dir), whose write
+    * observes every target's apply input, so N targets read the stage,
+    * never re-run the wire decode; a replayed trigger overwrites the
+    * stage byte-identically, and every target's own position gate drops
+    * what it already applied — see [[applyRouted]] for the crash-safety
     * argument. */
   def startRouted(spark: SparkSession, wireDir: String,
       tableCols: Map[(String, String), Seq[String]],
@@ -568,12 +596,10 @@ object WireReplicaJob {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // no isEmpty pre-check: it would decode every wire file a first
-        // time just to count; bootstrap is schema-only (limit 0) and
-        // applyBatch's own staged probe short-circuits an empty batch
+        // time just to count; bootstrap is schema-only (limit 0) and an
+        // empty stage probes no table, so no apply runs
         val input =
-          if (targets.size == 1 && !ddlInStream)
-            RoutedBatch.unstaged(batch, targets.head)
-          else stageRouted(batch, s"$checkpointDir/_route_stage")
+          stageRouted(batch, s"$checkpointDir/_route_stage", targets)
         if (ddlInStream)
           applyRoutedWithDdl(input, targets, txnsPerCommit, fromTso)
         else applyRouted(input, targets, txnsPerCommit, fromTso)
@@ -617,31 +643,47 @@ object WireReplicaJob {
   def shape(decoded: DataFrame, schemaName: String, tableName: String,
       colTypes: Seq[(String, String)],
       aliases: Map[String, Seq[String]] = Map.empty,
-      keyCols: Seq[String] = Seq.empty): DataFrame = {
-    def imgGet(m: Column, n: String): Column = {
-      val names = n +: aliases.getOrElse(n, Seq.empty)
-      coalesce(names.map(a => element_at(m, a)): _*)
-    }
-    val keyChanged =
-      if (keyCols.isEmpty) lit(false)
-      else col("op") === "UPDATE" && size(col("before")) > 0 &&
-        keyCols.map(k =>
-          !(imgGet(col("before"), k) <=> imgGet(col("after"), k)))
-          .reduce(_ || _)
-    val entries = when(keyChanged,
+      keyCols: Seq[String] = Seq.empty): DataFrame =
+    decoded
+      .filter(rowsOf(schemaName, tableName))
+      .select(explode(imagesOf(keyCols, aliases)).as("__e"), col("tso"))
+      .select(colTypes.map { case (n, t) =>
+        imgGet(col("__e.m"), n, aliases).cast(t).as(n)
+      } ++ Seq(col("__e.o").as("op"), col("tso")): _*)
+
+  /** The decoded rows [[shape]] keeps: one table's row events. */
+  private def rowsOf(schemaName: String, tableName: String): Column =
+    col("schemaName") === schemaName && col("tableName") === tableName &&
+      col("op").isin("INSERT", "UPDATE", "DELETE")
+
+  /** A row event's effective images as (o: op, m: image) structs: the
+    * [[effectiveImage]], or DELETE(before) + INSERT(after) for an UPDATE
+    * whose key changed. */
+  private def imagesOf(keyCols: Seq[String],
+      aliases: Map[String, Seq[String]]): Column =
+    when(keyChanged(keyCols, aliases),
       array(
         struct(lit("DELETE").as("o"), col("before").as("m")),
         struct(lit("INSERT").as("o"), col("after").as("m"))))
-      .otherwise(array(struct(col("op").as("o"),
-        when(col("op") === "DELETE", col("before"))
-          .otherwise(col("after")).as("m"))))
-    decoded
-      .filter(col("schemaName") === schemaName &&
-        col("tableName") === tableName &&
-        col("op").isin("INSERT", "UPDATE", "DELETE"))
-      .select(explode(entries).as("__e"), col("tso"))
-      .select(colTypes.map { case (n, t) =>
-        imgGet(col("__e.m"), n).cast(t).as(n)
-      } ++ Seq(col("__e.o").as("op"), col("tso")): _*)
-  }
+      .otherwise(array(struct(col("op").as("o"), effectiveImage.as("m"))))
+
+  /** The image a row event applies: the before image for a DELETE, the
+    * after image otherwise. */
+  private def effectiveImage: Column =
+    when(col("op") === "DELETE", col("before")).otherwise(col("after"))
+
+  /** An UPDATE whose before and after images carry different keys. */
+  private def keyChanged(keyCols: Seq[String],
+      aliases: Map[String, Seq[String]]): Column =
+    if (keyCols.isEmpty) lit(false)
+    else col("op") === "UPDATE" && size(col("before")) > 0 &&
+      keyCols.map(k => !(imgGet(col("before"), k, aliases) <=>
+        imgGet(col("after"), k, aliases))).reduce(_ || _)
+
+  /** Column `n` of a string image, read through its old names, newest
+    * first, when the image predates a rename. */
+  private def imgGet(m: Column, n: String,
+      aliases: Map[String, Seq[String]]): Column =
+    coalesce((n +: aliases.getOrElse(n, Seq.empty)).map(a =>
+      element_at(m, a)): _*)
 }

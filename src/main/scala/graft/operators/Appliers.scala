@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * collapses the batch to final images per PK, then batch REPLACE INTO /
   * DELETE (MergeApplier.java:46-156). The replica applier itself is
   * TxnApplier (transaction-preserving, bucketed, manifest-versioned),
-  * which stages `mergeToFinalImages` per transaction and partitions by
-  * `bucketOf`; SplitApplier's PK-change fallback is the DELETE(before) +
-  * INSERT(after) split in WireReplicaJob.shape.
+  * which merges per transaction (`mergeToFinalImages` in its delta
+  * mode) and partitions by `bucketOf`; SplitApplier's PK-change fallback
+  * is the DELETE(before) + INSERT(after) split in WireReplicaJob.shape.
   */
 object Appliers {
 
@@ -56,5 +56,10 @@ object Appliers {
     * across batches/sessions (Murmur3, fixed seed), so a key always lands
     * in the same bucket directory. */
   def bucketOf(keyCols: Seq[String], nBuckets: Int): Column =
-    pmod(hash(keyCols.map(col): _*), lit(nBuckets))
+    bucketOfKeys(keyCols.map(col), nBuckets)
+
+  /** [[bucketOf]] over key expressions: the routing probe buckets typed
+    * keys it reads out of decoded images, before any typed column exists. */
+  def bucketOfKeys(keys: Seq[Column], nBuckets: Int): Column =
+    pmod(hash(keys: _*), lit(nBuckets))
 }

@@ -43,23 +43,27 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * version, never a torn mix, and in-flight commits are invisible until
   * the pointer lands.
   *
-  * The batch apply is TWO distributed jobs + a metadata-only commit loop:
-  * job 1 collapses the batch to per-transaction final images (staged);
-  * job 2 computes EVERY commit's rewritten-bucket contents in one
-  * cumulative pass (for commit group g and bucket b, each key's newest
-  * image at-or-before g, else its carried target row) and writes them
-  * `partitionBy(group, bucket)`. The driver then publishes commits in TSO
-  * order by renaming each group's staged dir into place and swinging the
-  * pointer — serial transaction order lives in O(#commits) metadata
-  * renames, not O(#commits) serial Spark jobs, so a 10k-transaction
-  * micro-batch is still two shuffles. `txnsPerCommit` > 1 is the
-  * reference's own small-transaction merging — every commit boundary is
-  * still a transaction boundary.
+  * The batch apply is ONE write query + a metadata-only commit loop. Its
+  * input is [[Probed]]: the batch plus the (tso, bucket) pairs that the
+  * write which materialized it observed, so the driver knows the commit
+  * groups and their touched buckets before it plans. The write computes
+  * EVERY commit's rewritten-bucket contents in one cumulative pass (for
+  * commit group g and bucket b, each key's newest transaction's final
+  * image at-or-before g, else its carried target row) over one exchange
+  * on the bucket, and writes them `partitionBy(group, bucket)`. The
+  * driver then publishes commits in TSO order by renaming each group's
+  * staged dir into place and swinging the pointer — serial transaction
+  * order lives in O(#commits) metadata renames, not O(#commits) serial
+  * Spark jobs, so a 10k-transaction micro-batch is still one shuffle.
+  * `txnsPerCommit` > 1 is the reference's own small-transaction merging
+  * — every commit boundary is still a transaction boundary. The same
+  * write counts the rows whose pair the probe missed (they would
+  * publish nowhere) and the apply fails before publishing any of them.
   *
   * The per-trigger plan is sized for a standing replica, where a trigger
   * carries tens of rows and fixed cost dominates: the commit groups and
   * each bucket's writer groups reach the executors as literal arrays
-  * bounded by commit groups (never a broadcast join, which costs a Spark
+  * bounded by transactions (never a broadcast join, which costs a Spark
   * job of its own per join), and the replay gate reads the committed TSO
   * through a function reference, so each trigger runs the generated
   * classes the previous one compiled.
@@ -606,68 +610,140 @@ object TxnApplier {
   private def pastTso(tsoCol: String, lastTso: Long): Column =
     udf((t: Long) => t > lastTso).apply(col(tsoCol).cast("long"))
 
-  /** Each transaction's commit group: the index of the last group whose
-    * first TSO is at or below it (groups are consecutive runs of the
-    * sorted TSOs). One binary search per row over a literal array of
-    * group-start TSOs — O(#groups) driver data, no join. */
-  private def groupOf(groups: Seq[Array[Long]], tso: Column): Column = {
-    val i = ColumnBridge.column(ArrayBinarySearch(
-      ColumnBridge.expression(typedLit(groups.map(_.head))),
-      ColumnBridge.expression(tso.cast("long"))))
-    when(i >= 0, i).otherwise(-i - 2)
+  /** A change batch ready to apply: `frame` holds the typed rows (the
+    * target's columns plus the op, seq and tso columns) and `pairs` the
+    * distinct (tso, bucket) pair of every row, observed by the write
+    * that materialized `frame`. The pairs are the driver's whole view
+    * of the batch — its commit groups and each group's touched buckets,
+    * bounded by txns × buckets-per-txn, never by rows — so the apply
+    * plans its one write without reading the batch first. [[stage]]
+    * builds one; callers that already write the batch observe
+    * [[pairsProbe]] on that write instead (`WireReplicaJob.stageRouted`,
+    * `GapRepairJob`). `frame` must read the same rows every time (a
+    * staged table, or a pure view of one). */
+  final case class Probed(frame: DataFrame, pairs: Seq[(Long, Int)])
+
+  /** The probe aggregate: every distinct (tso, bucket) pair of the rows
+    * that satisfy `where` and whose key columns are `keys`, bucketed as
+    * the target buckets them. */
+  def pairsProbe(keys: Seq[Column], tso: Column, nBuckets: Int,
+      where: Column = lit(true)): Column =
+    collect_set(when(where, struct(tso.cast("long"),
+      Appliers.bucketOfKeys(keys, nBuckets))))
+
+  /** An observed pair array as (tso, bucket) pairs. */
+  def pairsOf(observed: Any): Seq[(Long, Int)] =
+    observed.asInstanceOf[Seq[org.apache.spark.sql.Row]]
+      .map(r => (r.getLong(0), r.getInt(1)))
+
+  /** Stage a typed change batch under `dir` (overwritten per call) with
+    * [[pairsProbe]] riding the write: the input of [[applyBatch]] and
+    * [[applyBatchDelta]] for callers that hold a plain frame. */
+  def stage(batch: DataFrame, keyCols: Seq[String], tsoCol: String,
+      nBuckets: Int, dir: String): Probed = {
+    val probe = org.apache.spark.sql.Observation()
+    val staged = Staged.parquetStage(batch.observe(probe,
+      pairsProbe(keyCols.map(col), col(tsoCol), nBuckets).as("pairs")), dir)
+    Probed(staged, pairsOf(probe.get("pairs")))
   }
+
+  /** Crash points on the apply's durable steps, armed only by tests:
+    * called with the target dir and the step — "written" once the one
+    * write landed and before any publish, then "published <i>" after
+    * commit group i's pointer swap. A no-op otherwise. */
+  @volatile private[graft] var onStep: (String, String) => Unit =
+    (_, _) => ()
+
+  /** An apply's image rows whose (tso, bucket) pair no commit group
+    * writes: the probe missed them, and publishing would drop them. */
+  final class ProbeMiss(val dir: String, val rows: Long, val fromTso: Long,
+      val toTso: Long) extends IllegalStateException(
+    s"txn target $dir: $rows row(s) in TSO range [$fromTso, $toTso] " +
+      "have no commit group for their (tso, bucket) pair; nothing was " +
+      "published")
 
   /** The probe's (tso, bucket) pairs as the ordered commit groups
     * (`txnsPerCommit` consecutive TSOs each) and each group's touched
     * buckets, indexed by group. */
-  private def commitGroups(tsoBuckets: Array[(Long, Int)],
+  private def commitGroups(tsoBuckets: Seq[(Long, Int)],
       txnsPerCommit: Int): (Vector[Array[Long]], Vector[Set[Int]]) = {
     val groups = tsoBuckets.map(_._1).distinct.sorted
-      .grouped(math.max(1, txnsPerCommit)).toVector
+      .grouped(math.max(1, txnsPerCommit)).map(_.toArray).toVector
     val bucketsOf = tsoBuckets.groupMap(_._1)(_._2)
     (groups, groups.map(_.flatMap(bucketsOf).toSet))
   }
 
-  /** Job 1 of both apply modes — ONE scan of the source batch: final
-    * image per (transaction, key), staged so everything downstream
-    * reads the small image table, never the source again. The SAME job
-    * carries the driver's metadata probe as an observed metric: the
-    * distinct (tso, bucket) pairs — the ordered commit groups AND each
-    * group's touched-bucket set, bounded by txns × buckets-per-txn,
-    * never row count — so no second collect job re-reads the staging. */
-  private def stageFinalImages(fresh: DataFrame, keyCols: Seq[String],
-      seqCol: String, opCol: String, tsoCol: String, nBuckets: Int,
-      staging: Path): (DataFrame, Array[(Long, Int)]) = {
-    val spark = fresh.sparkSession
-    val imagesPath = new Path(staging, "images").toString
-    val stagedImages =
-      Appliers.mergeToFinalImages(fresh, tsoCol +: keyCols, seqCol, opCol)
-        .withColumn("__bucket", Appliers.bucketOf(keyCols, nBuckets))
-    val stagedSchema = stagedImages.schema
-    val probe = org.apache.spark.sql.Observation("txnapplier-probe")
-    stagedImages.observe(probe,
-        collect_set(struct(col(tsoCol).cast("long").as("__tso"),
-          col("__bucket"))).as("pairs"))
-      .write.mode(SaveMode.Overwrite).parquet(imagesPath)
-    val images = spark.read.schema(stagedSchema).parquet(imagesPath)
-    val tsoBuckets = probe.get("pairs")
-      .asInstanceOf[Seq[org.apache.spark.sql.Row]]
-      .map(r => (r.getLong(0), r.getInt(1))).toArray
-    (images, tsoBuckets)
+  /** The batch's rows past the replay gate in the apply's column set —
+    * the target's columns plus `__seq`, `__op`, `__tso_ord`, `__grp` (the
+    * commit group) and `__bucket` — with the probe guard observed on
+    * them. A row's group is its TSO's position among the groups' sorted
+    * TSOs, one binary search over a literal array (O(#txns) driver data,
+    * no join); the guard counts the rows whose TSO is in no group or
+    * whose group does not write their bucket (`writers`, bucket → the
+    * groups that rewrite it), and [[checkProbe]] reads it once the write
+    * that runs this plan returns. */
+  private def imageRows(input: Probed, targetCols: Seq[String],
+      keyCols: Seq[String], seqCol: String, opCol: String, tsoCol: String,
+      lastTso: Long, groups: Seq[Array[Long]], txnsPerCommit: Int,
+      writers: Column, nBuckets: Int)
+      : (DataFrame, org.apache.spark.sql.Observation) = {
+    val pos = ColumnBridge.column(ArrayBinarySearch(
+      ColumnBridge.expression(typedLit(groups.flatten)),
+      ColumnBridge.expression(col(tsoCol).cast("long"))))
+    val rows = input.frame.filter(pastTso(tsoCol, lastTso))
+      .select(targetCols.map(col) ++ Seq(col(seqCol).as("__seq"),
+        col(opCol).as("__op"), col(tsoCol).cast("long").as("__tso_ord"),
+        when(pos >= 0, (pos / math.max(1, txnsPerCommit)).cast("int"))
+          .as("__grp"),
+        Appliers.bucketOf(keyCols, nBuckets).as("__bucket")): _*)
+    val missed = !coalesce(
+      array_contains(writers, col("__grp")), lit(false))
+    val guard = org.apache.spark.sql.Observation()
+    (rows.observe(guard, count(when(missed, 1)).as("rows"),
+      min(when(missed, col("__tso_ord"))).as("from"),
+      max(when(missed, col("__tso_ord"))).as("to")), guard)
   }
+
+  private def checkProbe(guard: org.apache.spark.sql.Observation,
+      dir: String): Unit = {
+    val m = guard.get
+    val n = m("rows").asInstanceOf[Long]
+    if (n > 0) throw new ProbeMiss(dir, n, m("from").asInstanceOf[Long],
+      m("to").asInstanceOf[Long])
+  }
+
+  /** `df` clustered on `key` for the apply's one window: a single task,
+    * with no shuffle, when the whole input (the batch rows plus any
+    * carried target rows, as the file listing sizes them) fits the size
+    * AQE aims one post-shuffle partition at — below it a shuffle buys
+    * parallelism the input cannot use and costs a map-stage job — else
+    * one hash exchange on `key`. A standing trigger's tens of rows over a
+    * small target take the first shape: one job per table. */
+  private def clustered(df: DataFrame, key: String): DataFrame =
+    if (df.queryExecution.analyzed.stats.sizeInBytes <=
+        df.sparkSession.sessionState.conf.getConf(
+          org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+      df.coalesce(1)
+    else df.repartition(col(key))
+
+  /** Each bucket's writer groups, ascending, as a literal array read
+    * at `bucket`: bounded by groups × buckets, never rows. */
+  private def writersOf(touchedByGrp: Vector[Set[Int]], nBuckets: Int,
+      bucket: Column): Column =
+    element_at(typedLit(Seq.tabulate(nBuckets)(b =>
+      touchedByGrp.indices.filter(g => touchedByGrp(g)(b)))), bucket + 1)
 
   /** The target's data columns, resolved without a footer job when the
     * schema sidecar exists. */
   private def targetColsOf(spark: SparkSession, root: Path,
-      manifest: Map[Int, String], images: DataFrame): Seq[String] =
+      manifest: Map[Int, String], batch: DataFrame): Seq[String] =
     readTargetSchema(root) match {
       case Some(s) => s.fieldNames.toSeq // bootstrap-persisted sidecar
       case None => manifest.values.toSeq.sorted.headOption match {
         case Some(entry) => // footer-only schema probe of a current file
           spark.read.parquet(
             new Path(root, chainOf(entry).head).toString).columns.toSeq
-        case None =>
-          images.columns.toSeq.filterNot(Set("effective_op", "__bucket"))
+        case None => batch.columns.toSeq
       }
     }
 
@@ -675,24 +751,26 @@ object TxnApplier {
     * (grouped by `tsoCol`, the commit TSO) are applied in TSO order,
     * `txnsPerCommit` consecutive transactions per atomic target commit.
     * Exactly-once across batch replays: transactions at or below the
-    * committed `lastTso` are skipped, so a foreachBatch replay after a
-    * crash resumes at the first unapplied transaction — a half-applied
-    * batch never doubles.
+    * committed `lastTso` are skipped — in the probe's pairs and in the
+    * rows — so a foreachBatch replay after a crash resumes at the first
+    * unapplied transaction; a half-applied batch never doubles, and a
+    * fully replayed one runs no job.
     *
-    * Cost shape (see object doc): one staged image job + one cumulative
-    * per-commit-contents job, then metadata-only publication per commit.
-    * Neither job joins against driver-built frames: the (tso → commit
-    * group) and (bucket → writer groups) maps ride the plan as literal
-    * arrays. A crash mid-publication leaves a committed prefix of whole
-    * commit groups; the rest replays. */
-  def applyBatch(batch: DataFrame, keyCols: Seq[String], seqCol: String,
+    * Cost shape (see object doc): ONE write query — the per-transaction
+    * final images and every commit's rewritten-bucket contents in one
+    * plan with one exchange — then metadata-only publication per commit.
+    * The plan joins no driver-built frame: the (tso → commit group) and
+    * (bucket → writer groups) maps ride it as literal arrays built from
+    * `input.pairs`. A crash mid-publication leaves a committed prefix of
+    * whole commit groups; the rest replays. */
+  def applyBatch(input: Probed, keyCols: Seq[String], seqCol: String,
       opCol: String, tsoCol: String, dir: String, nBuckets: Int = 64,
       txnsPerCommit: Int = 1): Seq[Commit] = {
-    val spark = batch.sparkSession
+    val spark = input.frame.sparkSession
     val root = new Path(dir)
     val (start0, schemaV0) = readPointer(root)
       .getOrElse(sys.error(s"txn target $dir: bootstrap first"))
-    // COW apply over delta chains: job 2's per-bucket target read wants
+    // COW apply over delta chains: the per-bucket target read wants
     // plain bucket dirs — fold the chains first (rare mixed-mode path)
     val (start, schemaV) =
       if (readManifest(root, start0.version).values
@@ -700,70 +778,68 @@ object TxnApplier {
         compact(spark, dir)
         readPointer(root).get
       } else (start0, schemaV0)
+    val pairs = input.pairs.filter(_._1 > start.lastTso)
+    if (pairs.isEmpty) return Seq.empty
     val fs = fsOf(root)
-    val fresh = batch.filter(pastTso(tsoCol, start.lastTso))
     val staging = new Path(root, "_batchstage")
     if (fs.exists(staging)) fs.delete(staging, true)
     try {
-      val (images, tsoBuckets) = stageFinalImages(fresh, keyCols, seqCol,
-        opCol, tsoCol, nBuckets, staging)
-      if (tsoBuckets.isEmpty) return Seq.empty
-      val (groups, touchedByGrp) = commitGroups(tsoBuckets, txnsPerCommit)
-      val imagesG = images.withColumn("__grp", groupOf(groups, col(tsoCol)))
+      val (groups, touchedByGrp) = commitGroups(pairs, txnsPerCommit)
+      val manifest = readManifest(root, start.version)
+      val targetCols = targetColsOf(spark, root, manifest,
+        input.frame)
+      val writers = writersOf(touchedByGrp, nBuckets, col("__bucket"))
+      val (images, guard) = imageRows(input, targetCols, keyCols, seqCol,
+        opCol, tsoCol, start.lastTso, groups, txnsPerCommit, writers,
+        nBuckets)
 
-      // job 2 — every commit's rewritten-bucket contents in one pass.
-      // Rows in play: the touched buckets' current target rows (pseudo
-      // txn order -1) plus all image rows. Each bucket's writer-group list
+      // the one write: every commit's rewritten-bucket contents. Rows in
+      // play: the touched buckets' current target rows (pseudo txn
+      // order -1) plus the batch rows. Each bucket's writer-group list
       // replicates each row to every commit that rewrites its bucket and
       // could see it (group <= writer); per (writer, key) the newest txn
-      // wins; DELETE images erase.
-      val manifest = readManifest(root, start.version)
+      // wins, within it the highest seq (the per-transaction final
+      // image), and a DELETE image erases.
       val allTouched = touchedByGrp.flatten.toSet
       val targetPaths = allTouched.toSeq.sorted.flatMap(manifest.get)
         .map(rel => new Path(root, rel).toString)
-      val targetSchema = readTargetSchema(root)
-      val targetCols = targetColsOf(spark, root, manifest, images)
-      val imgSide = imagesG.select(
-        targetCols.map(col) ++ Seq(col("effective_op"), col("__grp"),
-          col(tsoCol).cast("long").as("__tso_ord"), col("__bucket")): _*)
-      val targetRead = targetSchema match {
+      val targetRead = readTargetSchema(root) match {
         case Some(s) => spark.read.schema(s)
         case None => spark.read
       }
       val unioned =
-        if (targetPaths.isEmpty) imgSide
-        else imgSide.unionByName(
+        if (targetPaths.isEmpty) images
+        else images.unionByName(
           targetRead.parquet(targetPaths: _*)
-            .withColumn("__bucket", Appliers.bucketOf(keyCols, nBuckets))
             .select(targetCols.map(col) ++ Seq(
-              lit("KEEP").as("effective_op"), lit(-1).as("__grp"),
-              lit(-1L).as("__tso_ord"), col("__bucket")): _*))
-      // bucket -> the groups that rewrite it, ascending: one list per
-      // bucket, so the array is bounded by groups x buckets, never rows
-      val writersOfBucket: Seq[Seq[Int]] = Seq.tabulate(nBuckets)(b =>
-        touchedByGrp.indices.filter(g => touchedByGrp(g)(b)))
+              lit(null).cast(images.schema("__seq").dataType).as("__seq"),
+              lit("KEEP").as("__op"), lit(-1L).as("__tso_ord"),
+              lit(-1).as("__grp"),
+              Appliers.bucketOf(keyCols, nBuckets).as("__bucket")): _*))
       val outPath = new Path(staging, "out")
       // newest-wins per (writer, key) as a WINDOW, not an aggregate: a
       // max_by(struct) carries a struct buffer, which no hash-based
       // aggregate exec supports — Catalyst picks SortAggregate, whose
       // partial phase adds a map-side sort of the replicated rows on top
-      // of the final-side sort (measured ~1.5x the window's single
-      // exchange+sort at sf0.1). __tso_ord is unique per (writer, key)
-      // (images are one-per-(tso, key) after mergeToFinalImages; target
-      // rows sit at -1), so row_number's pick is deterministic.
+      // of the final-side sort (measured ~1.5x the window at sf0.1). The
+      // window's keys lead with (__wv, __bucket), so one clustering on
+      // __bucket (which every key of the window holds) serves it, and its
+      // sort order is the one the partitioned write needs — no exchange
+      // or sort of its own. Rows tie only on a repeated (tso, seq) of one
+      // key, the same tie the per-transaction merge has always had.
       val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("__wv") +: keyCols.map(col): _*)
-        .orderBy(col("__tso_ord").desc)
-      val bulk = unioned
-        .withColumn("__wv", explode(filter(
-          element_at(typedLit(writersOfBucket), col("__bucket") + 1),
-          wv => wv >= col("__grp"))))
+        .partitionBy((Seq("__wv", "__bucket") ++ keyCols).map(col): _*)
+        .orderBy(col("__tso_ord").desc, col("__seq").desc)
+      clustered(unioned, "__bucket")
+        .withColumn("__wv",
+          explode(filter(writers, wv => wv >= col("__grp"))))
         .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1 && col("effective_op") =!= "DELETE")
+        .filter(col("__rn") === 1 && col("__op") =!= "DELETE")
         .select(targetCols.map(col) ++ Seq(col("__wv"), col("__bucket")): _*)
-        .repartition(col("__wv"), col("__bucket"))
-      bulk.write.partitionBy("__wv", "__bucket").mode(SaveMode.Overwrite)
+        .write.partitionBy("__wv", "__bucket").mode(SaveMode.Overwrite)
         .parquet(outPath.toString)
+      checkProbe(guard, dir)
+      onStep(dir, "written")
 
       // publication — metadata only, in TSO order: rename each group's
       // staged dir into place, write its manifest, swing the pointer
@@ -785,6 +861,7 @@ object TxnApplier {
         writeManifest(root, v, entries)
         val c = Commit(v, g.last)
         commitPointer(root, c, schemaV)
+        onStep(dir, s"published $i")
         commits += c
       }
       commits.result()
@@ -795,8 +872,8 @@ object TxnApplier {
 
   /** [[applyBatch]] in DELTA mode — the standing-replica shape.
     *
-    * The COW apply's job 2 reads and rewrites every TOUCHED bucket's
-    * full contents per call; a standing consumer of uniformly-keyed
+    * The COW apply reads and rewrites every TOUCHED bucket's full
+    * contents per call; a standing consumer of uniformly-keyed
     * transactions touches every bucket every trigger, so its per-trigger
     * cost grows with the accumulated target — O(n²) over the run (the
     * sf1 scale rehearsal measured 0.75 s/trigger at a 100 MB target vs
@@ -816,40 +893,45 @@ object TxnApplier {
     * invariant holds per version THROUGH the merge-on-read), and a
     * crash mid-publication leaves a committed prefix whose replay
     * rewrites the same versions byte-compatibly. */
-  def applyBatchDelta(batch: DataFrame, keyCols: Seq[String],
+  def applyBatchDelta(input: Probed, keyCols: Seq[String],
       seqCol: String, opCol: String, tsoCol: String, dir: String,
       nBuckets: Int = 64, txnsPerCommit: Int = 1): Seq[Commit] = {
-    val spark = batch.sparkSession
+    val spark = input.frame.sparkSession
     val root = new Path(dir)
     val (start, schemaV) = readPointer(root)
       .getOrElse(sys.error(s"txn target $dir: bootstrap first"))
     val fs = fsOf(root)
     if (!fs.exists(keysFile(root))) writeKeyCols(root, keyCols, nBuckets)
-    val fresh = batch.filter(pastTso(tsoCol, start.lastTso))
+    val pairs = input.pairs.filter(_._1 > start.lastTso)
+    if (pairs.isEmpty) return Seq.empty
     val staging = new Path(root, "_batchstage")
     if (fs.exists(staging)) fs.delete(staging, true)
     try {
-      val (images, tsoBuckets) = stageFinalImages(fresh, keyCols, seqCol,
-        opCol, tsoCol, nBuckets, staging)
-      if (tsoBuckets.isEmpty) return Seq.empty
-      val (groups, touchedByGrp) = commitGroups(tsoBuckets, txnsPerCommit)
+      val (groups, touchedByGrp) = commitGroups(pairs, txnsPerCommit)
       val manifest = readManifest(root, start.version)
-      val targetCols = targetColsOf(spark, root, manifest, images)
-      // the ONLY data job: the images themselves, clustered by commit
-      // group — O(batch) rows, the target is never read. ONE dir per
-      // group, not per (group, bucket): dynamic-partition write costs
-      // ~1s per output partition (writer open/commit), measured 8×
-      // the whole job at bucket granularity; __bucket rides along as a
-      // DATA column (no read path prunes delta buckets — compaction
-      // restores the bucket-pruned layout)
+      val targetCols = targetColsOf(spark, root, manifest,
+        input.frame)
+      val (images, guard) = imageRows(input, targetCols, keyCols, seqCol,
+        opCol, tsoCol, start.lastTso, groups, txnsPerCommit,
+        writersOf(touchedByGrp, nBuckets, col("__bucket")), nBuckets)
+      // the ONLY data write: each group's final images, clustered on the
+      // group (the image merge's window keys lead with it) — O(batch)
+      // rows, the target is never read. ONE dir per group, not per
+      // (group, bucket): dynamic-partition write costs ~1s per output
+      // partition (writer open/commit), measured 8× the whole job at
+      // bucket granularity; __bucket rides along as a DATA column (no
+      // read path prunes delta buckets — compaction restores the
+      // bucket-pruned layout)
       val outPath = new Path(staging, "out")
-      images
+      Appliers.mergeToFinalImages(clustered(images, "__grp"),
+          Seq("__grp", "__tso_ord") ++ keyCols, "__seq", "__op")
         .select(targetCols.map(col) ++ Seq(col("effective_op"),
-          col(tsoCol).cast("long").as("__delta_tso"),
-          groupOf(groups, col(tsoCol)).as("__wv"), col("__bucket")): _*)
-        .repartition(col("__wv"))
+          col("__tso_ord").as("__delta_tso"), col("__grp").as("__wv"),
+          col("__bucket")): _*)
         .write.partitionBy("__wv").mode(SaveMode.Overwrite)
         .parquet(outPath.toString)
+      checkProbe(guard, dir)
+      onStep(dir, "written")
       // publication — metadata only, in TSO order: each group's staged
       // dir becomes a `.delta` version appended to the chain of EVERY
       // bucket it touches (readers dedupe the shared rel)
@@ -873,6 +955,7 @@ object TxnApplier {
         writeManifest(root, v, entries)
         val c = Commit(v, g.last)
         commitPointer(root, c, schemaV)
+        onStep(dir, s"published $i")
         commits += c
       }
       commits.result()

@@ -15,8 +15,9 @@ import graft.operators.TxnApplier
   * Per micro-batch: the decoded multi-table change batch stages once
   * ([[WireReplicaJob.stageRouted]], so the multi-pass DDL-aware routing
   * never re-reads the source), and that one staging write also observes
-  * the batch's tables and DDL rows, so routing and both DDL folds run
-  * no job of their own. The batch applies through
+  * each routed table's (tso, bucket) pairs and the DDL rows, so routing,
+  * both DDL folds and every table's commit plan run no job of their
+  * own. The batch applies through
   * [[WireReplicaJob.applyRoutedWithDdl]] (per-table committed-TSO gates
   * make replayed batches exactly-once; in-stream ADD/DROP evolve
   * metadata-only, MODIFY/CHANGE/RENAME rebuild in place), the wire name
@@ -24,7 +25,7 @@ import graft.operators.TxnApplier
   * batch's decode reads it through the source's registryDir option),
   * and an optional vacuum schedule reclaims rebuild-superseded target
   * versions. What remains per trigger is the source poll, the staging
-  * write and each present table's row work.
+  * write and one write query per present table.
   *
   * Restart story: kill the query, start it again with the same
   * `checkpointDir` — the offset log holds the per-DN executed GTID
@@ -89,7 +90,7 @@ object CdcReplica {
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val staged = WireReplicaJob.stageRouted(batch, stagingDir)
+        val staged = WireReplicaJob.stageRouted(batch, stagingDir, targets)
         // applyMode defaults AUTO here — the standing consumer is
         // exactly the workload whose COW applies go O(n²) once the
         // target grows (uniform keys touch every bucket every trigger;

@@ -54,17 +54,6 @@ import org.apache.spark.sql.types.StructType
   */
 object IncrementalDedup {
 
-  // SPARK_GRAFT_PHASE_TIMING=1 → per-phase wall times on stderr (local
-  // bench forensics; zero cost when unset)
-  private def timed[A](name: String)(f: => A): A =
-    if (sys.env.contains("SPARK_GRAFT_PHASE_TIMING")) {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[incdedup] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    } else f
-
   /** Screen one batch. Returns the batch with a `dup_of` column: the
     * smallest doc id among matches (estimated Jaccard >= `threshold`)
     * drawn from EVERY already-admitted doc — regardless of id order —
@@ -120,8 +109,7 @@ object IncrementalDedup {
     }
     // one signature job; everything below reads this tiny table
     val sigPath = s"$indexDir/__stage/batch=$batchId"
-    timed(s"b$batchId sig-stage") {
-      sigsToStage.write.mode(SaveMode.Overwrite).parquet(sigPath) }
+    sigsToStage.write.mode(SaveMode.Overwrite).parquet(sigPath)
     // explicit schema: inference is a footer-read job per call (pure
     // driver latency) for a schema this plan just wrote
     val batchSigs = spark.read.schema(sigs.schema).parquet(sigPath)
@@ -173,9 +161,8 @@ object IncrementalDedup {
     val spAggs = (0 until sigParts).map(sp =>
       max(when(pmod(col("prior_id"), lit(sigParts)) === sp, 1))
         .as(s"sp$sp"))
-    timed(s"b$batchId cand-stage") {
-      cand.observe(spObs, spAggs.head, spAggs.tail: _*)
-        .write.mode(SaveMode.Overwrite).parquet(candPath) }
+    cand.observe(spObs, spAggs.head, spAggs.tail: _*)
+      .write.mode(SaveMode.Overwrite).parquet(candPath)
     val candStaged = spark.read
       .schema("doc_id LONG, prior_id LONG").parquet(candPath)
 
@@ -217,8 +204,7 @@ object IncrementalDedup {
         col("__did") === col("__sid"), "left")
       .drop("__vid", "__sid", "__did")
     val stagedSchema = staged.schema
-    timed(s"b$batchId screened-stage") {
-      staged.write.mode(SaveMode.Overwrite).parquet(screenedPath) }
+    staged.write.mode(SaveMode.Overwrite).parquet(screenedPath)
     val screened = spark.read.schema(stagedSchema).parquet(screenedPath)
 
     // admit novel docs: commit their signatures AND banded buckets under
@@ -234,17 +220,17 @@ object IncrementalDedup {
     // The two commits are independent tables off the same screened
     // stage — write them concurrently (guide §2.6).
     graft.util.Par.run(Seq(
-      () => timed(s"b$batchId sigs-commit") { novel
+      () => novel
         .withColumn("sp", pmod(col("doc_id"), lit(sigParts)).cast("int"))
         .repartition(col("sp")).sortWithinPartitions(col("sp"))
         .write.mode(SaveMode.Overwrite)
-        .parquet(s"$indexDir/sigs/batch=$batchId") },
-      () => timed(s"b$batchId buckets-commit") { buckets(novel, "doc_id")
+        .parquet(s"$indexDir/sigs/batch=$batchId"),
+      () => buckets(novel, "doc_id")
         .withColumn("pp", (col("band") * bucketParts +
           pmod(col("bucket"), lit(bucketParts))).cast("int"))
         .repartition(col("pp")).sortWithinPartitions(col("pp"))
         .write.mode(SaveMode.Overwrite)
-        .parquet(s"$indexDir/buckets/batch=$batchId") }))
+        .parquet(s"$indexDir/buckets/batch=$batchId")))
     screened.drop("sig")
   }
 

@@ -15,7 +15,7 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val (_, localDir) = GraftSession.scratch("graft-prof", None)
+    val (scratch, localDir) = GraftSession.scratch("graft-prof", None)
     val spark = GraftSession.build("graft-profile", GraftSession.cores,
       Some(localDir))
 
@@ -103,5 +103,6 @@ object ProfileQuery {
       }
     }
     spark.stop()
+    GraftSession.dropScratch(scratch)
   }
 }

@@ -9,10 +9,19 @@ trait SparkSpec extends AnyFunSuite {
   lazy val sf: String = "/root/testdata/sf0.001"
 
   /** A decoded change batch staged the way every routed caller stages
-    * it, with its routing probe. */
-  def routed(decoded: DataFrame): graft.jobs.WireReplicaJob.RoutedBatch =
+    * it, with its routing probe for `targets`. */
+  def routed(decoded: DataFrame,
+      targets: Seq[graft.jobs.WireReplicaJob.TableTarget])
+      : graft.jobs.WireReplicaJob.RoutedBatch =
     graft.jobs.WireReplicaJob.stageRouted(decoded,
-      graft.operators.Staged.tempDir("routed"))
+      graft.operators.Staged.tempDir("routed"), targets)
+
+  /** A typed change batch (tso column `tso`) staged with its (tso,
+    * bucket) probe: the apply input of a caller holding a plain frame. */
+  def probed(batch: DataFrame, keyCols: Seq[String],
+      nBuckets: Int): graft.operators.TxnApplier.Probed =
+    graft.operators.TxnApplier.stage(batch, keyCols, "tso", nBuckets,
+      graft.operators.Staged.tempDir("probed"))
 }
 
 object SparkSpec {

@@ -26,14 +26,16 @@ class RoutedReplicaFuzzSpec extends SparkSpec {
         case (state, (_, _, _, _, k, v)) => state + (k -> v)
       }
 
-  private def decodedOf(ops: Seq[Op]) = routed(
+  private def decodedOf(ops: Seq[Op],
+      targets: Seq[WireReplicaJob.TableTarget]) = routed(
     ops.map { case (tso, seq, table, op, k, v) =>
       val img = Map("k" -> k.toString, "seq" -> seq.toString, "v" -> v)
       val (before, after) =
         if (op == "DELETE") (img, Map.empty[String, String])
         else (Map.empty[String, String], img)
       (tso, op, "db", table, before, after)
-    }.toDF("tso", "op", "schemaName", "tableName", "before", "after"))
+    }.toDF("tso", "op", "schemaName", "tableName", "before", "after"),
+    targets)
 
   test("random two-table streams in random txn batches with replays == sequential fold (5 rounds)") {
     val rnd = new scala.util.Random(20260814L)
@@ -66,11 +68,12 @@ class RoutedReplicaFuzzSpec extends SparkSpec {
         val take = 1 + rnd.nextInt(6)
         val batch = txns.slice(i, i + take).flatMap(_._2)
         i += take
-        WireReplicaJob.applyRouted(decodedOf(batch), targets,
+        WireReplicaJob.applyRouted(decodedOf(batch, targets), targets,
           txnsPerCommit = 1 + rnd.nextInt(3))
         if (rnd.nextInt(3) == 0)
-          prev.foreach(p => WireReplicaJob.applyRouted(decodedOf(p),
-            targets, txnsPerCommit = 2)) // replay: the gate must drop it
+          // replay: the gate must drop it
+          prev.foreach(p => WireReplicaJob.applyRouted(
+            decodedOf(p, targets), targets, txnsPerCommit = 2))
         prev = Some(batch)
       }
 
@@ -165,7 +168,7 @@ class RoutedReplicaFuzzSpec extends SparkSpec {
             else (Map.empty[String, String], img)
           (tso, op, "db", table, before, after, ddl)
         }.toDF("tso", "op", "schemaName", "tableName", "before",
-          "after", "ddl"))
+          "after", "ddl"), targets)
 
       var prev = Option.empty[Seq[(Long, Long, String, String, Long,
         String, String, String)]]

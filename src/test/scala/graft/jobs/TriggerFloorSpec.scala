@@ -10,10 +10,11 @@ import graft.SparkSpec
 import graft.operators.TxnApplier
 
 /** The standing replica's per-trigger floor: a routed trigger runs only
-  * its row work. The routing probe rides the staging write, the apply
-  * plans carry their commit-group maps as literal arrays instead of
-  * broadcast joins, and the replay gate reads `lastTso` through a
-  * reference, so a trigger of an already-seen shape compiles nothing. */
+  * its row work. The routing probe — each table's (tso, bucket) pairs —
+  * rides the staging write, each present table applies in one write
+  * query whose commit-group maps are literal arrays instead of broadcast
+  * joins, and the replay gate reads `lastTso` through a reference, so a
+  * trigger of an already-seen shape compiles nothing. */
 class TriggerFloorSpec extends SparkSpec {
   import spark.implicits._
 
@@ -37,7 +38,7 @@ class TriggerFloorSpec extends SparkSpec {
   private def trigger(batch: DataFrame,
       targets: Seq[WireReplicaJob.TableTarget], mode: TxnApplier.ApplyMode,
       stage: String): Unit = {
-    val staged = WireReplicaJob.stageRouted(batch, stage)
+    val staged = WireReplicaJob.stageRouted(batch, stage, targets)
     WireReplicaJob.applyRoutedWithDdl(staged, targets, txnsPerCommit = 1,
       applyMode = mode)
     LiveReplicaJob.evolveRegistryFromBatch(staged.ddls,
@@ -97,16 +98,25 @@ class TriggerFloorSpec extends SparkSpec {
       assert(TxnApplier.maxChainLength(s"$root/$t") == 1))
     assert(planText.exists(_.contains("__delta_tso")), "no delta apply ran")
     assert(planText.exists(_.contains("row_number")), "no COW apply ran")
-    // routing facts and DDL rows ride the staging write: the trigger
-    // runs writes only, no collect query
+    // routing facts, DDL rows and every table's (tso, bucket) pairs ride
+    // the staging write: the trigger runs writes only, no collect query
     assert(queries.asScala.forall(_._1 == "command"),
       s"probe queries: ${queries.asScala.map(_._1).mkString(",")}")
+    // one staging write, then exactly one write query per present table
+    // (its output under _batchstage/out), and no staged image round
+    assert(planText.size == 1 + tables.size,
+      s"${planText.size} queries:\n${planText.mkString("\n")}")
+    assert(planText.count(p => !p.contains("_batchstage")) == 1)
+    tables.foreach(t => assert(planText.count(p =>
+      p.contains(s"$root/$t/_batchstage/out")) == 1, t))
+    assert(!planText.exists(_.contains("_batchstage/images")))
     assert(!planText.exists(_.contains("BroadcastExchange")),
       planText.filter(_.contains("BroadcastExchange")).mkString("\n"))
-    // 1 staging write + per table (2 image-staging + 3 bulk jobs, or
-    // 2 + 2 for a delta write) measured at 19 on local[4]; the parent
-    // ran 31: probe and broadcast jobs on top
-    assert(jobs.get <= 19, s"${jobs.get} jobs")
+    // 1 staging write + 1 job per table (tens of rows over a small
+    // target run as one task, no shuffle) measured at 5 on local[4]; a
+    // staged image round per table made it 19, and probe and broadcast
+    // jobs on top of that 31
+    assert(jobs.get <= 5, s"${jobs.get} jobs")
     // and the trigger applied: every table holds its new keys
     tables.foreach { t =>
       assert(TxnApplier.readCurrent(spark, s"$root/$t")
@@ -128,9 +138,10 @@ class TriggerFloorSpec extends SparkSpec {
         .toDF("acct", "seq", "op", "balance"), Seq("acct"), dir, 4)
       def apply(from: Long): Seq[TxnApplier.Commit] = mode match {
         case TxnApplier.ApplyMode.Delta => TxnApplier.applyBatchDelta(
-          batch(from), Seq("acct"), "seq", "op", "tso", dir, 4, 2)
-        case _ => TxnApplier.applyBatch(batch(from), Seq("acct"), "seq",
-          "op", "tso", dir, 4, 2)
+          probed(batch(from), Seq("acct"), 4), Seq("acct"), "seq", "op",
+          "tso", dir, 4, 2)
+        case _ => TxnApplier.applyBatch(probed(batch(from), Seq("acct"), 4),
+          Seq("acct"), "seq", "op", "tso", dir, 4, 2)
       }
       assert(apply(1L).nonEmpty && apply(4L).nonEmpty)
       val before = compiles

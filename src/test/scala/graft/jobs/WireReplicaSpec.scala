@@ -37,8 +37,8 @@ class WireReplicaSpec extends SparkSpec {
 
     // direct path
     TxnApplier.bootstrap(accounts, Seq("acct"), directTarget, nBuckets = 4)
-    TxnApplier.applyBatch(batch, Seq("acct"), "seq", "op", "tso",
-      directTarget, 4, txnsPerCommit = 3)
+    TxnApplier.applyBatch(probed(batch, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", directTarget, 4, txnsPerCommit = 3)
 
     // wire path: encode (typed cells, txn-framed, CRC32), decode, apply
     val specs = Seq(ColSpec("acct", LongLong), ColSpec("seq", LongLong),
@@ -56,8 +56,8 @@ class WireReplicaSpec extends SparkSpec {
         element_at($"after", "balance").cast("long").as("balance"),
         $"tso".as("tso"))
     TxnApplier.bootstrap(accounts, Seq("acct"), wireTarget, nBuckets = 4)
-    TxnApplier.applyBatch(decoded, Seq("acct"), "seq", "op", "tso",
-      wireTarget, 4, txnsPerCommit = 3)
+    TxnApplier.applyBatch(probed(decoded, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", wireTarget, 4, txnsPerCommit = 3)
 
     val direct = TxnApplier.readCurrent(spark, directTarget)
       .select($"acct", $"balance").as[(Long, Long)].collect().toSet
@@ -387,8 +387,8 @@ class WireReplicaSpec extends SparkSpec {
     WireReplicaJob.applyRouted(routed(
       Seq((4L, "INSERT", "bank", "accounts", Map.empty[String, String],
         Map("acct" -> "3", "seq" -> "1", "v" -> "300")))
-        .toDF("tso", "op", "schemaName", "tableName", "before", "after")),
-      targets, txnsPerCommit = 2)
+        .toDF("tso", "op", "schemaName", "tableName", "before", "after"),
+      targets), targets, txnsPerCommit = 2)
     assert(TxnApplier.readCurrent(spark, s"$root/t")
       .select($"acct", $"v2").as[(Long, String)].collect().toMap
       == Map(1L -> "100", 2L -> "200", 3L -> "300"))
@@ -403,7 +403,7 @@ class WireReplicaSpec extends SparkSpec {
           Map("acct" -> "4", "seq" -> "1", "v" -> "nv", "v2" -> "400"),
           null: String))
         .toDF("tso", "op", "schemaName", "tableName", "before", "after",
-          "ddl")),
+          "ddl"), targets),
       targets, txnsPerCommit = 2)
     assert(TxnApplier.renameLineage(s"$root/t") == Map("v2" -> Seq.empty))
     val last = TxnApplier.readCurrent(spark, s"$root/t")
@@ -420,7 +420,7 @@ class WireReplicaSpec extends SparkSpec {
           Map.empty[String, String],
           "ALTER TABLE accounts RENAME COLUMN v TO v2"))
           .toDF("tso", "op", "schemaName", "tableName", "before",
-            "after", "ddl")),
+            "after", "ddl"), targets),
         targets)
     }
   }
@@ -435,7 +435,7 @@ class WireReplicaSpec extends SparkSpec {
       routed(rows.map { case (tso, op, after, ddl) =>
         (tso, op, "bank", "accounts", Map.empty[String, String], after, ddl)
       }.toDF("tso", "op", "schemaName", "tableName", "before", "after",
-        "ddl"))
+        "ddl"), targets)
 
     // batch 1: rows STRADDLE an ADD COLUMN in one batch — pre-DDL rows
     // apply with NULL for the new column, post-DDL rows carry values
@@ -572,7 +572,7 @@ class WireReplicaSpec extends SparkSpec {
         (tso, "INSERT", "bank", table, Map.empty[String, String], after,
           null.asInstanceOf[String])
       }.toDF("tso", "op", "schemaName", "tableName", "before", "after",
-        "ddl"))
+        "ddl"), targets)
 
     // batch 1 carries rows ONLY for accounts — audit is quiet, but the
     // non-DDL routed apply must still bootstrap its schema sidecar
@@ -598,7 +598,7 @@ class WireReplicaSpec extends SparkSpec {
         Map.empty[String, String],
         "ALTER TABLE audit ADD COLUMN severity VARCHAR(8)"))
       .toDF("tso", "op", "schemaName", "tableName", "before", "after",
-        "ddl")),
+        "ddl"), targets),
       targets, txnsPerCommit = 1, applyMode = TxnApplier.ApplyMode.Delta)
     assert(TxnApplier.targetSchema(s"$root/t_audit").get
       .fieldNames.contains("severity"))
@@ -610,7 +610,7 @@ class WireReplicaSpec extends SparkSpec {
         Map("id" -> "7", "seq" -> "1", "note" -> "n", "severity" -> "hi"),
         null.asInstanceOf[String]))
       .toDF("tso", "op", "schemaName", "tableName", "before", "after",
-        "ddl")),
+        "ddl"), targets),
       targets, txnsPerCommit = 1, applyMode = TxnApplier.ApplyMode.Delta)
     assert(TxnApplier.readCurrent(spark, s"$root/t_audit")
       .select($"id", $"severity").as[(Long, String)].collect().toSeq

@@ -125,8 +125,8 @@ class JsonRepairSpec extends SparkSpec {
     TxnApplier.bootstrap(
       Seq.empty[(Long, Long, String)].toDF("id", "seq", "doc"),
       Seq("id"), target, nBuckets = 2)
-    TxnApplier.applyBatch(decoded, Seq("id"), "seq", "op", "tso",
-      target, 2, txnsPerCommit = 2)
+    TxnApplier.applyBatch(probed(decoded, Seq("id"), 2),
+      Seq("id"), "seq", "op", "tso", target, 2, txnsPerCommit = 2)
     val state = TxnApplier.readCurrent(spark, target)
       .select($"id", $"doc").as[(Long, String)].collect().toMap
     assert(state == Map(

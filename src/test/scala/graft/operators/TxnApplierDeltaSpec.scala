@@ -46,10 +46,10 @@ class TxnApplierDeltaSpec extends SparkSpec with TxnGroupingCheck {
     Seq(cow, dlt).foreach(d =>
       TxnApplier.bootstrap(accounts, Seq("acct"), d, nBuckets = 4))
     val batch = transferBatch(1L, 12L)
-    val c1 = TxnApplier.applyBatch(batch, Seq("acct"), "seq", "op",
-      "tso", cow, nBuckets = 4, txnsPerCommit = 3)
-    val c2 = TxnApplier.applyBatchDelta(batch, Seq("acct"), "seq", "op",
-      "tso", dlt, nBuckets = 4, txnsPerCommit = 3)
+    val c1 = TxnApplier.applyBatch(probed(batch, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", cow, nBuckets = 4, txnsPerCommit = 3)
+    val c2 = TxnApplier.applyBatchDelta(probed(batch, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dlt, nBuckets = 4, txnsPerCommit = 3)
     assert(c1 == c2) // same versions, same lastTso boundaries
     assert(TxnApplier.maxChainLength(dlt) > 1) // chains actually grew
     assert(TxnApplier.maxChainLength(cow) == 1)
@@ -74,17 +74,17 @@ class TxnApplierDeltaSpec extends SparkSpec with TxnGroupingCheck {
     // image only needs the key, like the wire decode's delete shape)
     val del = Seq((5L, 100L, "DELETE", 0L, 13L))
       .toDF("acct", "seq", "op", "balance", "tso")
-    TxnApplier.applyBatchDelta(del, Seq("acct"), "seq", "op", "tso",
-      dir, nBuckets = 4)
+    TxnApplier.applyBatchDelta(probed(del, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dir, nBuckets = 4)
     assert(!state(dir).contains(5L) && state(dir).size == 7)
     // replay the same batch: at-or-below lastTso → no-op, no new commit
-    assert(TxnApplier.applyBatchDelta(del, Seq("acct"), "seq", "op",
-      "tso", dir, nBuckets = 4).isEmpty)
+    assert(TxnApplier.applyBatchDelta(probed(del, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dir, nBuckets = 4).isEmpty)
     // re-insert after the delete in a later txn: newest image wins
     val reins = Seq((5L, 101L, "INSERT", 777L, 14L))
       .toDF("acct", "seq", "op", "balance", "tso")
-    TxnApplier.applyBatchDelta(reins, Seq("acct"), "seq", "op", "tso",
-      dir, nBuckets = 4)
+    TxnApplier.applyBatchDelta(probed(reins, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dir, nBuckets = 4)
     assert(state(dir)(5L) == 777L && state(dir).size == 8)
   }
 
@@ -92,8 +92,8 @@ class TxnApplierDeltaSpec extends SparkSpec with TxnGroupingCheck {
     val dir = java.nio.file.Files.createTempDirectory("graft-delta-cmp")
       .resolve("t").toString
     TxnApplier.bootstrap(accounts, Seq("acct"), dir, nBuckets = 4)
-    TxnApplier.applyBatchDelta(transferBatch(1L, 12L), Seq("acct"),
-      "seq", "op", "tso", dir, nBuckets = 4, txnsPerCommit = 2)
+    TxnApplier.applyBatchDelta(probed(transferBatch(1L, 12L), Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dir, nBuckets = 4, txnsPerCommit = 2)
     val before = state(dir)
     val cur = TxnApplier.currentCommit(dir).get
     assert(TxnApplier.maxChainLength(dir) > 1)
@@ -118,22 +118,22 @@ class TxnApplierDeltaSpec extends SparkSpec with TxnGroupingCheck {
     val dir = java.nio.file.Files.createTempDirectory("graft-delta-mix")
       .resolve("t").toString
     TxnApplier.bootstrap(accounts, Seq("acct"), dir, nBuckets = 4)
-    TxnApplier.applyBatchDelta(transferBatch(1L, 6L), Seq("acct"),
-      "seq", "op", "tso", dir, nBuckets = 4, txnsPerCommit = 2)
+    TxnApplier.applyBatchDelta(probed(transferBatch(1L, 6L), Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dir, nBuckets = 4, txnsPerCommit = 2)
     assert(TxnApplier.maxChainLength(dir) > 1)
     // the second slice carries absolute balances continuing the first:
     // rebuild running sums over the WHOLE range, keep txns 7..12
     val rest = transferBatch(1L, 12L).filter($"tso" > 6L)
-    TxnApplier.applyBatch(rest, Seq("acct"), "seq", "op", "tso", dir,
-      nBuckets = 4, txnsPerCommit = 6)
+    TxnApplier.applyBatch(probed(rest, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dir, nBuckets = 4, txnsPerCommit = 6)
     assert(TxnApplier.maxChainLength(dir) == 1) // auto-compacted
     assert(state(dir).values.sum == total)
     // equivalence against one straight COW run of the full range
     val ref = java.nio.file.Files.createTempDirectory("graft-delta-ref")
       .resolve("t").toString
     TxnApplier.bootstrap(accounts, Seq("acct"), ref, nBuckets = 4)
-    TxnApplier.applyBatch(transferBatch(1L, 12L), Seq("acct"), "seq",
-      "op", "tso", ref, nBuckets = 4, txnsPerCommit = 12)
+    TxnApplier.applyBatch(probed(transferBatch(1L, 12L), Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", ref, nBuckets = 4, txnsPerCommit = 12)
     assert(state(dir) == state(ref))
   }
 
@@ -142,7 +142,8 @@ class TxnApplierDeltaSpec extends SparkSpec with TxnGroupingCheck {
       .resolve("t").toString
     TxnApplier.bootstrap(accounts, Seq("acct"), dir, nBuckets = 4)
     val batch = transferBatch(1L, 12L)
-    TxnApplier.applyBatchDelta(batch, Seq("acct"), "seq", "op", "tso",
+    TxnApplier.applyBatchDelta(probed(batch, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso",
       dir, nBuckets = 4, txnsPerCommit = 4) // delta versions 2,3,4
     val cur = TxnApplier.currentCommit(dir).get
     assert(cur.version == 4 && cur.lastTso == 12L)
@@ -154,8 +155,8 @@ class TxnApplierDeltaSpec extends SparkSpec with TxnGroupingCheck {
     // replay resumes at tso > 8, REUSES version 4's slot (the orphan
     // delta dir and stale manifest are overwritten — chains appended
     // from manifest v3, never doubled), same final state
-    val resumed = TxnApplier.applyBatchDelta(batch, Seq("acct"), "seq",
-      "op", "tso", dir, nBuckets = 4, txnsPerCommit = 4)
+    val resumed = TxnApplier.applyBatchDelta(probed(batch, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dir, nBuckets = 4, txnsPerCommit = 4)
     assert(resumed.map(_.lastTso) == Seq(12L))
     assert(TxnApplier.currentCommit(dir).contains(TxnApplier.Commit(4, 12L)))
     assert(state(dir) == expected)
@@ -190,7 +191,8 @@ class TxnApplierDeltaSpec extends SparkSpec with TxnGroupingCheck {
           map(lit("acct"), $"acct".cast("string"),
             lit("seq"), $"seq".cast("string"),
             lit("balance"), $"balance".cast("string")).as("after"))
-      graft.jobs.WireReplicaJob.applyRouted(routed(slice), Seq(target),
+      graft.jobs.WireReplicaJob.applyRouted(routed(slice, Seq(target)),
+        Seq(target),
         txnsPerCommit = 1, applyMode = TxnApplier.ApplyMode.Delta, compactAfter = 3)
       assert(TxnApplier.maxChainLength(target.targetDir) <= 3 + 1,
         s"chain unbounded after trigger $i")
@@ -205,8 +207,8 @@ class TxnApplierDeltaSpec extends SparkSpec with TxnGroupingCheck {
     TxnApplier.bootstrap(
       transferBatch(1L, 12L).limit(0).drop("op", "tso"),
       Seq("acct"), ref, nBuckets = 4)
-    TxnApplier.applyBatch(transferBatch(1L, 12L), Seq("acct"), "seq",
-      "op", "tso", ref, nBuckets = 4, txnsPerCommit = 12)
+    TxnApplier.applyBatch(probed(transferBatch(1L, 12L), Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", ref, nBuckets = 4, txnsPerCommit = 12)
     val refState = TxnApplier.readCurrent(spark, ref)
       .select($"acct", $"balance").as[(Long, Long)].collect().toMap
     assert(st == refState)
@@ -216,8 +218,8 @@ class TxnApplierDeltaSpec extends SparkSpec with TxnGroupingCheck {
     val dir = java.nio.file.Files.createTempDirectory("graft-delta-inc")
       .resolve("t").toString
     TxnApplier.bootstrap(accounts, Seq("acct"), dir, nBuckets = 4)
-    TxnApplier.applyBatchDelta(transferBatch(1L, 12L), Seq("acct"),
-      "seq", "op", "tso", dir, nBuckets = 4, txnsPerCommit = 2)
+    TxnApplier.applyBatchDelta(probed(transferBatch(1L, 12L), Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dir, nBuckets = 4, txnsPerCommit = 2)
     val before = state(dir)
     val cur = TxnApplier.currentCommit(dir).get
     assert(TxnApplier.maxChainLength(dir) > 1)
@@ -255,7 +257,8 @@ class TxnApplierDeltaSpec extends SparkSpec with TxnGroupingCheck {
 
   test("Auto mode: small targets stay COW, targets past the crossover flip to delta, live chains are sticky") {
     val root = java.nio.file.Files.createTempDirectory("graft-delta-auto")
-    def routedSlice(lo: Long) = routed(sliceRows(lo))
+    def routedSlice(lo: Long, t: graft.jobs.WireReplicaJob.TableTarget) =
+      routed(sliceRows(lo), Seq(t))
     def sliceRows(lo: Long) = transferBatch(1L, 12L)
       .filter($"tso" >= lo && $"tso" <= lo + 1L)
       .withColumn("op", lit("UPDATE"))
@@ -274,7 +277,7 @@ class TxnApplierDeltaSpec extends SparkSpec with TxnGroupingCheck {
     // crossover far above this tiny table: every trigger stays COW
     val small = mkTarget("small")
     (0 until 3).foreach { i =>
-      graft.jobs.WireReplicaJob.applyRouted(routedSlice(i * 2 + 1L),
+      graft.jobs.WireReplicaJob.applyRouted(routedSlice(i * 2 + 1L, small),
         Seq(small), txnsPerCommit = 1,
         applyMode = TxnApplier.ApplyMode.Auto(crossoverBytes = 1L << 40))
     }
@@ -287,7 +290,7 @@ class TxnApplierDeltaSpec extends SparkSpec with TxnGroupingCheck {
     // every trigger, the exact-flip setting)
     val big = mkTarget("big")
     (0 until 3).foreach { i =>
-      graft.jobs.WireReplicaJob.applyRouted(routedSlice(i * 2 + 1L),
+      graft.jobs.WireReplicaJob.applyRouted(routedSlice(i * 2 + 1L, big),
         Seq(big), txnsPerCommit = 1,
         applyMode = TxnApplier.ApplyMode.Auto(crossoverBytes = 1L,
           remeasureCommits = 1L))
@@ -303,7 +306,7 @@ class TxnApplierDeltaSpec extends SparkSpec with TxnGroupingCheck {
     // many small tables from paying it every trigger)
     val lag = mkTarget("lagged")
     (0 until 3).foreach { i =>
-      graft.jobs.WireReplicaJob.applyRouted(routedSlice(i * 2 + 1L),
+      graft.jobs.WireReplicaJob.applyRouted(routedSlice(i * 2 + 1L, lag),
         Seq(lag), txnsPerCommit = 1,
         applyMode = TxnApplier.ApplyMode.Auto(crossoverBytes = 1L,
           remeasureCommits = 1000L))
@@ -328,7 +331,7 @@ class TxnApplierDeltaSpec extends SparkSpec with TxnGroupingCheck {
     val ref = mkTarget("ref")
     graft.jobs.WireReplicaJob.applyRouted(routed(
       sliceRows(1L).unionByName(sliceRows(3L))
-        .unionByName(sliceRows(5L))),
+        .unionByName(sliceRows(5L)), Seq(ref)),
       Seq(ref), txnsPerCommit = 1,
       applyMode = TxnApplier.ApplyMode.Cow)
     def st(t: graft.jobs.WireReplicaJob.TableTarget) =
@@ -338,8 +341,8 @@ class TxnApplierDeltaSpec extends SparkSpec with TxnGroupingCheck {
   }
 
   test("txnsPerCommit = 3: shared and emptied buckets, replayed TSO — every version is its group's state through the merge-on-read") {
-    groupingHolds((batch, dir) => TxnApplier.applyBatchDelta(batch,
-      Seq("acct"), "seq", "op", "tso", dir, nBuckets = 4,
-      txnsPerCommit = 3))
+    groupingHolds((batch, dir) => TxnApplier.applyBatchDelta(
+      probed(batch, Seq("acct"), 4), Seq("acct"), "seq", "op", "tso", dir,
+      nBuckets = 4, txnsPerCommit = 3))
   }
 }

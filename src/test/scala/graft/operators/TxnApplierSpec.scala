@@ -39,8 +39,8 @@ class TxnApplierSpec extends SparkSpec with TxnGroupingCheck {
     val dir = java.nio.file.Files.createTempDirectory("graft-txnbank")
       .resolve("target").toString
     TxnApplier.bootstrap(accounts, Seq("acct"), dir, nBuckets = 4)
-    val commits = TxnApplier.applyBatch(transferBatch, Seq("acct"), "seq",
-      "op", "tso", dir, nBuckets = 4, txnsPerCommit = 1)
+    val commits = TxnApplier.applyBatch(probed(transferBatch, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dir, nBuckets = 4, txnsPerCommit = 1)
     // one observable state per transaction + the bootstrap
     assert(commits.size == 12)
     val vs = TxnApplier.versions(dir)
@@ -93,8 +93,10 @@ class TxnApplierSpec extends SparkSpec with TxnGroupingCheck {
     // like the batch rows (the standing replica's first-trigger bootstrap)
     TxnApplier.bootstrap(deleteOnly.limit(0).drop("op", "tso"), Seq("pk"),
       dir, nBuckets = 4)
-    TxnApplier.applyBatch(deleteOnly, Seq("pk"), "seq", "op", "tso", dir, 4)
-    TxnApplier.applyBatch(rest, Seq("pk"), "seq", "op", "tso", dir, 4)
+    TxnApplier.applyBatch(probed(deleteOnly, Seq("pk"), 4),
+      Seq("pk"), "seq", "op", "tso", dir, 4)
+    TxnApplier.applyBatch(probed(rest, Seq("pk"), 4),
+      Seq("pk"), "seq", "op", "tso", dir, 4)
     def state(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
       df.select($"pk", $"v").as[(Long, String)].collect().toSet
     assert(state(TxnApplier.readCurrent(spark, dir)) ==
@@ -109,8 +111,9 @@ class TxnApplierSpec extends SparkSpec with TxnGroupingCheck {
     assert(TxnApplier.currentCommit(dir).exists(_.lastTso == 20L))
     // a replay of both batches is exactly-once
     val vs = TxnApplier.versions(dir)
-    assert(TxnApplier.applyBatch(deleteOnly.unionByName(rest), Seq("pk"),
-      "seq", "op", "tso", dir, 4).isEmpty)
+    assert(TxnApplier.applyBatch(
+      probed(deleteOnly.unionByName(rest), Seq("pk"), 4), Seq("pk"), "seq",
+      "op", "tso", dir, 4).isEmpty)
     assert(TxnApplier.versions(dir) == vs)
   }
 
@@ -118,8 +121,8 @@ class TxnApplierSpec extends SparkSpec with TxnGroupingCheck {
     val dir = java.nio.file.Files.createTempDirectory("graft-txngrp")
       .resolve("target").toString
     TxnApplier.bootstrap(accounts, Seq("acct"), dir, nBuckets = 4)
-    val commits = TxnApplier.applyBatch(transferBatch, Seq("acct"), "seq",
-      "op", "tso", dir, nBuckets = 4, txnsPerCommit = 5)
+    val commits = TxnApplier.applyBatch(probed(transferBatch, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dir, nBuckets = 4, txnsPerCommit = 5)
     // ceil(12/5) = 3 commits, each ending on a whole-transaction boundary
     assert(commits.size == 3)
     assert(commits.map(_.lastTso) == Seq(5L, 10L, 12L))
@@ -132,14 +135,14 @@ class TxnApplierSpec extends SparkSpec with TxnGroupingCheck {
     val dir = java.nio.file.Files.createTempDirectory("graft-txnreplay")
       .resolve("target").toString
     TxnApplier.bootstrap(accounts, Seq("acct"), dir, nBuckets = 4)
-    TxnApplier.applyBatch(transferBatch, Seq("acct"), "seq", "op", "tso",
-      dir, 4, txnsPerCommit = 4)
+    TxnApplier.applyBatch(probed(transferBatch, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dir, 4, txnsPerCommit = 4)
     val vsBefore = TxnApplier.versions(dir)
     val stateBefore = TxnApplier.readCurrent(spark, dir)
       .select($"acct", $"balance").as[(Long, Long)].collect().toSet
     // foreachBatch replay after crash: same batch again
-    val replayed = TxnApplier.applyBatch(transferBatch, Seq("acct"), "seq",
-      "op", "tso", dir, 4, txnsPerCommit = 4)
+    val replayed = TxnApplier.applyBatch(probed(transferBatch, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dir, 4, txnsPerCommit = 4)
     assert(replayed.isEmpty)
     assert(TxnApplier.versions(dir) == vsBefore)
     assert(TxnApplier.readCurrent(spark, dir)
@@ -150,10 +153,11 @@ class TxnApplierSpec extends SparkSpec with TxnGroupingCheck {
     val dir2 = java.nio.file.Files.createTempDirectory("graft-txnpart")
       .resolve("target").toString
     TxnApplier.bootstrap(accounts, Seq("acct"), dir2, nBuckets = 4)
-    TxnApplier.applyBatch(transferBatch.filter($"tso" <= 7), Seq("acct"),
+    TxnApplier.applyBatch(
+      probed(transferBatch.filter($"tso" <= 7), Seq("acct"), 4), Seq("acct"),
       "seq", "op", "tso", dir2, 4, txnsPerCommit = 4)
-    val resumed = TxnApplier.applyBatch(transferBatch, Seq("acct"), "seq",
-      "op", "tso", dir2, 4, txnsPerCommit = 4)
+    val resumed = TxnApplier.applyBatch(probed(transferBatch, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dir2, 4, txnsPerCommit = 4)
     assert(resumed.map(_.lastTso) == Seq(11L, 12L))
     TxnApplier.versions(dir2).foreach { v =>
       assert(sumAt(dir2, v) == total, s"invariant broken at version $v")
@@ -167,7 +171,8 @@ class TxnApplierSpec extends SparkSpec with TxnGroupingCheck {
     val dir = java.nio.file.Files.createTempDirectory("graft-txncrash")
       .resolve("target").toString
     TxnApplier.bootstrap(accounts, Seq("acct"), dir, nBuckets = 4)
-    TxnApplier.applyBatch(transferBatch, Seq("acct"), "seq", "op", "tso",
+    TxnApplier.applyBatch(probed(transferBatch, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso",
       dir, 4, txnsPerCommit = 4) // versions 2,3,4 (tso 4, 8, 12)
     // simulate the publication crash window: version 4's data+manifest
     // landed but the pointer never swung past version 3 — roll it back
@@ -178,8 +183,8 @@ class TxnApplierSpec extends SparkSpec with TxnGroupingCheck {
     // replay of the same batch resumes at tso > 8, REUSES version 4's
     // slot (the orphan data dir and stale manifest are overwritten), and
     // lands on the same final state
-    val resumed = TxnApplier.applyBatch(transferBatch, Seq("acct"), "seq",
-      "op", "tso", dir, 4, txnsPerCommit = 4)
+    val resumed = TxnApplier.applyBatch(probed(transferBatch, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dir, 4, txnsPerCommit = 4)
     assert(resumed.map(_.lastTso) == Seq(12L))
     assert(TxnApplier.currentCommit(dir).contains(TxnApplier.Commit(4, 12L)))
     TxnApplier.versions(dir).foreach { v =>
@@ -203,7 +208,8 @@ class TxnApplierSpec extends SparkSpec with TxnGroupingCheck {
     TxnApplier.bootstrap(accounts, Seq("acct"), dir, nBuckets = 4)
     // one txn touching two accounts → at most two buckets rewritten
     val one = transferBatch.filter($"tso" === 1L)
-    TxnApplier.applyBatch(one, Seq("acct"), "seq", "op", "tso", dir, 4)
+    TxnApplier.applyBatch(probed(one, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dir, 4)
     val v1Dirs = new java.io.File(dir, "data/v00000001")
       .listFiles().count(_.getName.startsWith("__bucket="))
     val v2Dirs = new java.io.File(dir, "data/v00000002")
@@ -230,8 +236,8 @@ class TxnApplierSpec extends SparkSpec with TxnGroupingCheck {
     val dir = java.nio.file.Files
       .createTempDirectory("txnapplier-rebuild").toString + "/t"
     TxnApplier.bootstrap(accounts, Seq("acct"), dir, nBuckets = 4)
-    TxnApplier.applyBatch(transferBatch, Seq("acct"), "seq", "op",
-      "tso", dir, nBuckets = 4, txnsPerCommit = 4)
+    TxnApplier.applyBatch(probed(transferBatch, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dir, nBuckets = 4, txnsPerCommit = 4)
     val before = TxnApplier.currentCommit(dir).get
     val stateBefore = TxnApplier.readCurrent(spark, dir)
       .select($"acct", $"balance").as[(Long, Long)].collect().toMap
@@ -255,8 +261,10 @@ class TxnApplierSpec extends SparkSpec with TxnGroupingCheck {
     val more = Seq((20L, 30L, 1L, "UPDATE", "9999"))
       .toDF("tso", "seq", "acct", "op", "bal")
       .select($"acct", $"seq", $"op", $"bal", $"tso")
-    TxnApplier.applyBatch(more, Seq("acct"), "seq", "op", "tso", dir, 4)
-    TxnApplier.applyBatch(more, Seq("acct"), "seq", "op", "tso", dir, 4)
+    TxnApplier.applyBatch(probed(more, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dir, 4)
+    TxnApplier.applyBatch(probed(more, Seq("acct"), 4),
+      Seq("acct"), "seq", "op", "tso", dir, 4)
     val finalState = TxnApplier.readCurrent(spark, dir)
       .select($"acct", $"bal").as[(Long, String)].collect().toMap
     assert(finalState(1L) == "9999")
@@ -326,7 +334,8 @@ class TxnApplierSpec extends SparkSpec with TxnGroupingCheck {
   }
 
   test("txnsPerCommit = 3: shared and emptied buckets, replayed TSO — every version is its group's state") {
-    groupingHolds((batch, dir) => TxnApplier.applyBatch(batch, Seq("acct"),
-      "seq", "op", "tso", dir, nBuckets = 4, txnsPerCommit = 3))
+    groupingHolds((batch, dir) => TxnApplier.applyBatch(
+      probed(batch, Seq("acct"), 4), Seq("acct"), "seq", "op", "tso", dir,
+      nBuckets = 4, txnsPerCommit = 3))
   }
 }

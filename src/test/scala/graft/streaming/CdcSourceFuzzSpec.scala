@@ -167,7 +167,7 @@ class CdcSourceFuzzSpec extends SparkSpec {
           .option("checkpointLocation", s"$root/ckpt")
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             val staged = WireReplicaJob.stageRouted(
-              batch, s"$root/stage")
+              batch, s"$root/stage", targets)
             WireReplicaJob.applyRoutedWithDdl(staged, targets,
               txnsPerCommit = 1 + rnd.nextInt(3))
             val reg0 = LiveReplicaJob.resumeRegistry(registryDir,

@@ -136,7 +136,7 @@ class CdcSourceSpec extends SparkSpec {
         .option("checkpointLocation", s"$root/ckpt")
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, n: Long) =>
           val staged = WireReplicaJob.stageRouted(
-            batch, s"$root/stage_decoded")
+            batch, s"$root/stage_decoded", targets)
           WireReplicaJob.applyRoutedWithDdl(staged, targets,
             txnsPerCommit = 2, fromTso = None)
           val reg0 = LiveReplicaJob.resumeRegistry(registryDir, regV1)
