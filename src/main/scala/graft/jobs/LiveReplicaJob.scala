@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Staged
+import graft.sinks.RegistrySidecar
 import graft.sources.{BinlogDumpClient, ChangeEventSource}
 import graft.sources.BinlogDumpClient.Endpoint
 
@@ -32,6 +33,12 @@ import graft.sources.BinlogDumpClient.Endpoint
   * stage write, decode, and apply are the same distributed plans the
   * file replica uses. Cursors are the only driver-side state — one
   * (file, pos) pair per DN.
+  *
+  * Why a (file, pos) runner beside [[graft.streaming.CdcReplica]]: the
+  * `graft-cdc` source positions by executed GTID set, so it reads only
+  * logs that carry GTID events, and the wire writers' default
+  * (`gtidSid = None`, which `CdcBinlog.start` and `BinlogXJob` use) is
+  * a GTID-less log. This runner is the dump replica for those logs.
   */
 object LiveReplicaJob {
 
@@ -47,41 +54,6 @@ object LiveReplicaJob {
     * consecutive-skip accounting. */
   final case class PollNote(dn: String, payloadBytes: Long,
       skip1236: Option[String])
-
-  /** A 1236 whose message signals an UNRECOVERABLE condition, never a
-    * transient rotate/promotion window: a malformed GTID set is a
-    * config/encode bug, and a source that PURGED binlogs still holding
-    * required GTIDs can never serve them — retrying either forever
-    * reads as a silently stalled replica. MySQL's purged-gtid texts
-    * ("the master has purged binary logs containing GTIDs that the
-    * slave requires" / the 8.0 source/replica wording) both carry
-    * "purged". */
-  private[graft] def fatal1236(msg: String): Boolean = {
-    val m = if (msg == null) "" else msg
-    m.contains("Malformed GTID set") || m.toLowerCase.contains("purged")
-  }
-
-  /** One trigger: poll every endpoint, apply the new transactions to
-    * the bucketed replica target, return the advanced endpoints.
-    * `stagingDir` holds this trigger's drained segments (overwritten
-    * per call — the applier's position gate makes replays idempotent).
-    * `fromTso` seeds the apply gate on FIRST bootstrap, for replicas
-    * started from a dump-from-TSO cursor. Single-table convenience
-    * over [[pollApplyOnceRouted]]. */
-  def pollApplyOnce(spark: SparkSession, endpoints: Seq[Endpoint],
-      tableCols: Map[(String, String), Seq[String]],
-      schemaName: String, tableName: String,
-      colTypes: Seq[(String, String)], keyCols: Seq[String],
-      seqCol: String, targetDir: String, stagingDir: String,
-      nBuckets: Int, txnsPerCommit: Int = 8,
-      fromTso: Option[Long] = None, serverId: Long = 12345L,
-      soTimeoutMs: Int = 30000,
-      maxBytesPerPoll: Long = Long.MaxValue): Seq[Endpoint] =
-    pollApplyOnceRouted(spark, endpoints, tableCols,
-      Seq(WireReplicaJob.TableTarget(schemaName, tableName, colTypes,
-        keyCols, seqCol, targetDir, nBuckets)),
-      stagingDir, txnsPerCommit, fromTso, serverId, soTimeoutMs,
-      maxBytesPerPoll)
 
   /** One trigger applying the WHOLE filtered stream, routed per table —
     * the usable replica shape: every DN dials ONCE and its decoded
@@ -140,9 +112,11 @@ object LiveReplicaJob {
       staged.filter(length(col("payload")) > 0).select("dn", "payload"),
       "dn", "payload", tableCols)
     // the tables (and the DDL fold) read a decoded stage, whose write
-    // observes each table's apply input, so the wire decode never
-    // re-runs per table
-    val decoded = routedInput(changes, targets, stagingDir, onDdl)
+    // observes each table's apply input and the DDL rows, so the wire
+    // decode never re-runs per table
+    val decoded = WireReplicaJob.stageRouted(changes,
+      stagingDir + "_decoded", targets)
+    onDdl(decoded.ddls)
     // the apply and the cursor collect are independent consumers of the
     // already-materialized stages (disjoint outputs) — overlap them
     // (guide §2.6). onPoll stays AFTER both: a failed apply must not
@@ -172,121 +146,10 @@ object LiveReplicaJob {
     }
   }
 
-  /** A poll's decoded rows as the routed apply's input: staged with
-    * the routing probe, whose DDL rows `onDdl` receives. */
-  private def routedInput(changes: org.apache.spark.sql.DataFrame,
-      targets: Seq[WireReplicaJob.TableTarget], stagingDir: String,
-      onDdl: Seq[(Long, String, String)] => Unit)
-      : WireReplicaJob.RoutedBatch = {
-    val staged = WireReplicaJob.stageRouted(changes,
-      stagingDir + "_decoded", targets)
-    onDdl(staged.ddls)
-    staged
-  }
-
-  /** A DN endpoint whose cursor is its executed GTID SET — the
-    * failover-proof replica position (see
-    * [[graft.sources.BinlogDumpClient.dumpSegmentGtid]]). */
-  case class GtidEndpoint(dn: String, host: String, port: Int,
-      user: String, password: String,
-      executed: graft.model.GtidSet = graft.model.GtidSet.Empty)
-
-  /** [[pollApplyOnceRouted]] with GTID AUTO-POSITION cursors: each DN
-    * dials COM_BINLOG_DUMP_GTID with its executed set and the set
-    * advances by exactly the GTIDs the poll drained. The replica then
-    * survives what kills a (file, pos) loop — source failover, log
-    * renumbering, a relay re-serving renamed files — because the
-    * cursor names transactions, not byte addresses: repoint an
-    * endpoint's host/port at the promoted source and the next trigger
-    * continues from content. Cursor state per DN is O(GTID intervals),
-    * carried as text in the staged trigger input (one row per DN). */
-  def pollApplyOnceGtid(spark: SparkSession,
-      endpoints: Seq[GtidEndpoint],
-      tableCols: Map[(String, String), Seq[String]],
-      targets: Seq[WireReplicaJob.TableTarget], stagingDir: String,
-      txnsPerCommit: Int = 8,
-      fromTso: Option[Long] = None, serverId: Long = 12345L,
-      soTimeoutMs: Int = 30000,
-      maxBytesPerPoll: Long = Long.MaxValue,
-      ddlInStream: Boolean = false,
-      onPoll: PollNote => Unit = _ => (),
-      onDdl: Seq[(Long, String, String)] => Unit = _ => ())
-      : Seq[GtidEndpoint] = {
-    import spark.implicits._
-    WireReplicaJob.validateTargets(targets)
-    val eps = endpoints.map(e =>
-      (e.dn, e.host, e.port, e.user, e.password, e.executed.text))
-    val polled = spark.createDataset(eps)
-      .repartition(math.max(1, endpoints.size))
-      .map { case (dn, host, port, user, password, executedText) =>
-        try {
-          val (seg, advanced) = BinlogDumpClient.dumpSegmentGtidWithCursor(
-            host, port, user, password,
-            graft.model.GtidSet.parse(executedText), serverId,
-            soTimeoutMs, maxBytesPerPoll)
-          (dn, seg, advanced.text, null: String)
-        } catch {
-          // mirror the file/pos path's 1236 tolerance: a source amid
-          // rotate/promotion has no new data THIS trigger — keep the
-          // cursor, apply the other DNs' polls, retry next trigger.
-          // UNRECOVERABLE 1236s stay loud (fatal1236): a malformed set
-          // is a config/encode bug, and a source that PURGED binlogs
-          // holding required GTIDs can never serve them — tolerated,
-          // either would retry forever and read as an idle replica.
-          // Tolerated skips carry their reason for the runner's
-          // consecutive-1236 accounting.
-          case err: BinlogDumpClient.ServerError
-              if err.code == BinlogDumpClient.ErrUnknownLog &&
-                !fatal1236(err.getMessage) =>
-            (dn, Array.emptyByteArray, executedText,
-              Option(err.getMessage).getOrElse("1236"))
-        }
-      }.toDF("dn", "payload", "nextExecuted", "skip1236")
-    val staged = Staged.parquetStage(polled, stagingDir)
-    val changes = ChangeEventSource.fromWireSegments(
-      staged.filter(length(col("payload")) > 0).select("dn", "payload"),
-      "dn", "payload", tableCols)
-    val decoded = routedInput(changes, targets, stagingDir, onDdl)
-    if (ddlInStream)
-      WireReplicaJob.applyRoutedWithDdl(decoded, targets, txnsPerCommit,
-        fromTso)
-    else WireReplicaJob.applyRouted(decoded, targets, txnsPerCommit,
-      fromTso)
-    val polledRows = staged
-      .select($"dn", $"nextExecuted", $"skip1236",
-        length($"payload").cast("long"))
-      .as[(String, String, Option[String], Long)].collect()
-    polledRows.foreach { case (dn, _, skip, bytes) =>
-      onPoll(PollNote(dn, bytes, skip))
-    }
-    val cursors = polledRows.map { case (dn, t, _, _) => dn -> t }.toMap
-    endpoints.map { e =>
-      cursors.get(e.dn)
-        .map(t => e.copy(executed = graft.model.GtidSet.parse(t)))
-        .getOrElse(e)
-    }
-  }
-
   // ---- cursor persistence (the live loop's restart story) ----
 
   private def cursorFile(dir: String) =
     new org.apache.hadoop.fs.Path(dir, "_graft_cursors")
-
-  private def writeCursorLines(dir: String, lines: Seq[String]): Unit = {
-    val dst = cursorFile(dir)
-    graft.util.HadoopIo.fsOf(dst).mkdirs(dst.getParent)
-    graft.util.HadoopIo.writeSwap(
-      new org.apache.hadoop.fs.Path(dir, "._graft_cursors.tmp"), dst,
-      lines.mkString("\n"))
-  }
-
-  private def readCursorLines(dir: String): Map[String, Seq[String]] = {
-    val dst = cursorFile(dir)
-    if (!graft.util.HadoopIo.fsOf(dst).exists(dst)) Map.empty
-    else graft.util.HadoopIo.readString(dst).split("\n").toSeq
-      .filter(_.nonEmpty).map(_.split("\t", -1).toSeq)
-      .map(f => f.head -> f.tail).toMap
-  }
 
   /** Commit the fleet's (file, pos) cursors to an O(1) sidecar — the
     * `OrderedSink._graft_cursor` pattern for the LIVE loop (reference
@@ -302,18 +165,12 @@ object LiveReplicaJob {
   def saveCursors(cursorDir: String, endpoints: Seq[Endpoint]): Unit = {
     require(endpoints.forall(e => !e.dn.exists("\t\n".contains(_))),
       "DN names must not contain tab/newline")
-    writeCursorLines(cursorDir,
-      endpoints.map(e => s"${e.dn}\tF\t${e.binlogFile}\t${e.pos}"))
-  }
-
-  /** [[saveCursors]] for GTID auto-position cursors (executed-set
-    * text — compact: O(intervals), not O(transactions)). */
-  def saveGtidCursors(cursorDir: String,
-      endpoints: Seq[GtidEndpoint]): Unit = {
-    require(endpoints.forall(e => !e.dn.exists("\t\n".contains(_))),
-      "DN names must not contain tab/newline")
-    writeCursorLines(cursorDir,
-      endpoints.map(e => s"${e.dn}\tG\t${e.executed.text}"))
+    val dst = cursorFile(cursorDir)
+    graft.util.HadoopIo.fsOf(dst).mkdirs(dst.getParent)
+    graft.util.HadoopIo.writeSwap(
+      new org.apache.hadoop.fs.Path(cursorDir, "._graft_cursors.tmp"), dst,
+      endpoints.map(e => s"${e.dn}\tF\t${e.binlogFile}\t${e.pos}")
+        .mkString("\n"))
   }
 
   /** Endpoints with each DN's cursor replaced by the sidecar's last
@@ -322,7 +179,12 @@ object LiveReplicaJob {
     * saved cursor, or an absent sidecar, keeps the caller's bootstrap
     * value. */
   def resume(cursorDir: String, endpoints: Seq[Endpoint]): Seq[Endpoint] = {
-    val saved = readCursorLines(cursorDir)
+    val dst = cursorFile(cursorDir)
+    val saved: Map[String, Seq[String]] =
+      if (!graft.util.HadoopIo.fsOf(dst).exists(dst)) Map.empty
+      else graft.util.HadoopIo.readString(dst).split("\n").toSeq
+        .filter(_.nonEmpty).map(_.split("\t", -1).toSeq)
+        .map(f => f.head -> f.tail).toMap
     endpoints.map { e =>
       saved.get(e.dn) match {
         case Some(Seq("F", file, pos)) =>
@@ -332,104 +194,9 @@ object LiveReplicaJob {
     }
   }
 
-  /** [[resume]] for GTID endpoints. */
-  def resumeGtid(cursorDir: String,
-      endpoints: Seq[GtidEndpoint]): Seq[GtidEndpoint] = {
-    val saved = readCursorLines(cursorDir)
-    endpoints.map { e =>
-      saved.get(e.dn) match {
-        case Some(Seq("G", text)) =>
-          e.copy(executed = graft.model.GtidSet.parse(text))
-        case _ => e
-      }
-    }
-  }
-
-  /** Persist the evolved wire NAME REGISTRY beside the cursors. The
-    * decoder tracks DDL within a segment ([[graft.sinks.BinlogWire
-    * .evolveRegistry]]), but ACROSS triggers and restarts the registry
-    * must persist or a rename would silently misname later segments'
-    * cells (a renamed column decodes under its old name, the shape
-    * step reads null, data quietly lost). The runner saves it after
-    * any trigger whose stream carried registry-changing DDL — BEFORE
-    * the cursors, so a crash between the two replays the DDL segment
-    * against the already-evolved registry (position-based decode keeps
-    * the values; the gates drop the replayed rows). */
-  def saveRegistry(cursorDir: String,
-      reg: Map[(String, String), Seq[String]]): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(cursorDir, "_graft_registry")
-    graft.util.HadoopIo.fsOf(dst).mkdirs(dst.getParent)
-    graft.util.HadoopIo.writeSwap(
-      new org.apache.hadoop.fs.Path(cursorDir, "._graft_registry.tmp"),
-      dst, serializeRegistry(reg))
-  }
-
-  /** One registry's sidecar text — the [[mergeRegistry]] round-trip
-    * format, shared by [[saveRegistry]] and the batch-versioned
-    * snapshots ([[graft.streaming.CdcBinlog]]). The delimiter guard
-    * (the saveCursors pattern) refuses at serialize time any
-    * schema/table/column name carrying the sidecar's own separators —
-    * those would corrupt the file, failing MatchError or silently
-    * misbinding columns on resume. */
-  private[graft] def serializeRegistry(
-      reg: Map[(String, String), Seq[String]]): String = {
-    reg.foreach { case ((s, t), cols) =>
-      require(!(s + t).exists("\t\n".contains(_)),
-        s"registry names must not contain tab/newline: '$s'.'$t'")
-      require(cols.forall(c => !c.exists(",\t\n".contains(_))),
-        s"column names must not contain comma/tab/newline: '$s'.'$t'")
-    }
-    reg.toSeq.sortBy(t => (t._1._1, t._1._2)).map { case ((s, t), cols) =>
-      s"$s\t$t\t${cols.mkString(",")}"
-    }.mkString("\n")
-  }
-
-  /** The caller's registry with any persisted evolution applied —
-    * sidecar entries override matching tables, tables the sidecar
-    * never saw keep the caller's value. */
-  def resumeRegistry(cursorDir: String,
-      initial: Map[(String, String), Seq[String]])
-      : Map[(String, String), Seq[String]] = {
-    val dst = new org.apache.hadoop.fs.Path(cursorDir, "_graft_registry")
-    if (!graft.util.HadoopIo.fsOf(dst).exists(dst)) initial
-    else mergeRegistry(graft.util.HadoopIo.readString(dst), initial)
-  }
-
-  /** The sidecar-body half of [[resumeRegistry]], for callers that
-    * read the file themselves (executor-side readers carrying an
-    * explicit Hadoop conf — the driver's session conf is not active
-    * there). */
-  private[graft] def mergeRegistry(sidecarText: String,
-      initial: Map[(String, String), Seq[String]])
-      : Map[(String, String), Seq[String]] = {
-    val saved = sidecarText.split("\n").toSeq
-      .filter(_.nonEmpty).map { line =>
-        val Array(s, t, cols) = line.split("\t", 3)
-        (s, t) -> cols.split(",").toSeq.filter(_.nonEmpty)
-      }.toMap
-    initial.map { case (k, v) => k -> saved.getOrElse(k, v) } ++
-      (saved -- initial.keySet)
-  }
-
-  /** One batch's registry evolution: fold the batch's DDL rows
-    * (tso, schemaName, ddl) into `reg` — the cross-trigger half of the
-    * decoder's in-segment schema tracking, shared by the standing runner
-    * and streaming (graft-cdc foreachBatch) consumers. The rows come
-    * from the batch's staging write ([[WireReplicaJob.stageRouted]], or
-    * the Global Binlog's own stage observation) in (tso, ddl) order —
-    * the SAME order as applyRoutedWithDdl's target-side fold, so
-    * equal-tso statements cannot fold differently into registry vs
-    * target schema across a restart. */
-  def evolveRegistryFromBatch(ddls: Seq[(Long, String, String)],
-      reg: Map[(String, String), Seq[String]])
-      : Map[(String, String), Seq[String]] =
-    ddls.foldLeft(reg) { case (r, (_, sch, stmt)) =>
-      graft.sinks.BinlogWire.evolveRegistry(r, sch, stmt)
-    }
-
   // ---- the standing-loop runner ----
 
-  /** Per-DN consecutive-1236 accounting for the standing loops: a DN
+  /** Per-DN consecutive-1236 accounting for the standing loop: a DN
     * answering 1236 for [[Skip1236AlarmThreshold]] straight triggers
     * is logged loudly every trigger thereafter — the StallMonitor's
     * silence clock only says "no data"; this names WHY (a persistent
@@ -454,8 +221,9 @@ object LiveReplicaJob {
       }
     }
 
-  /** THE deployment call: poll → route-apply → commit cursors, every
-    * `intervalMs`, until `shouldStop` (or `maxTriggers`). Composes
+  /** The (file, pos) deployment call: poll → route-apply → commit
+    * cursors, every `intervalMs`, until `shouldStop` (or
+    * `maxTriggers`). Composes
     * [[pollApplyOnceRouted]] + the cursor sidecar + an optional
     * [[graft.streaming.StallMonitor]] no-data alarm — the loop every
     * caller otherwise hand-writes. Resumes from `cursorDir` first, so
@@ -480,7 +248,7 @@ object LiveReplicaJob {
       ddlInStream: Boolean = false,
       vacuumEvery: Long = 0L): Seq[Endpoint] = {
     var eps = resume(cursorDir, endpoints)
-    var reg = resumeRegistry(cursorDir, tableCols)
+    var reg = RegistrySidecar.resume(cursorDir, tableCols)
     var n = 0L
     val c1236 = scala.collection.mutable.Map.empty[String, Int]
     while (!shouldStop() && n < maxTriggers) {
@@ -493,8 +261,13 @@ object LiveReplicaJob {
         notes.flatMap(x => x.skip1236.map(x.dn -> _)).toMap,
         eps.map(_.dn), loopId)
       if (ddlInStream) {
-        val evolved = evolveRegistryFromBatch(ddls, reg)
-        if (evolved != reg) { reg = evolved; saveRegistry(cursorDir, reg) }
+        // the evolved names persist BEFORE the cursors, so a crash
+        // between the two replays the DDL segment against them
+        val evolved = RegistrySidecar.evolve(ddls, reg)
+        if (evolved != reg) {
+          reg = evolved
+          RegistrySidecar.save(cursorDir, reg)
+        }
       }
       saveCursors(cursorDir, next)
       // reclaim superseded target versions on a schedule: a rebuild-
@@ -517,68 +290,6 @@ object LiveReplicaJob {
       // policies, arm the fatal escalation with this loop's own
       // consumption (this replica IS the downstream consumer), and
       // evaluate — one check per trigger, pure driver metadata
-      alarms.foreach { a =>
-        if (advanced) a.noteConsumed()
-        graft.streaming.Alarms.route(a, raised)
-        a.check()
-      }
-      eps = next
-      n += 1
-      if (!shouldStop() && n < maxTriggers && intervalMs > 0)
-        Thread.sleep(intervalMs)
-    }
-    eps
-  }
-
-  /** [[run]] with GTID auto-position cursors — the failover-proof
-    * standing loop (repoint an endpoint's host/port mid-run via a
-    * fresh `endpoints` list on restart; the sidecar's executed set
-    * carries over untouched). */
-  def runGtid(spark: SparkSession, endpoints: Seq[GtidEndpoint],
-      tableCols: Map[(String, String), Seq[String]],
-      targets: Seq[WireReplicaJob.TableTarget], stagingDir: String,
-      cursorDir: String, intervalMs: Long,
-      shouldStop: () => Boolean = () => false,
-      maxTriggers: Long = Long.MaxValue,
-      monitor: Option[graft.streaming.StallMonitor] = None,
-      alarms: Option[graft.streaming.AlarmManager] = None,
-      loopId: String = "live-replica-gtid",
-      txnsPerCommit: Int = 8, fromTso: Option[Long] = None,
-      serverId: Long = 12345L, soTimeoutMs: Int = 30000,
-      maxBytesPerPoll: Long = Long.MaxValue,
-      ddlInStream: Boolean = false,
-      vacuumEvery: Long = 0L): Seq[GtidEndpoint] = {
-    var eps = resumeGtid(cursorDir, endpoints)
-    var reg = resumeRegistry(cursorDir, tableCols)
-    var n = 0L
-    val c1236 = scala.collection.mutable.Map.empty[String, Int]
-    while (!shouldStop() && n < maxTriggers) {
-      val notes = scala.collection.mutable.ArrayBuffer.empty[PollNote]
-      var ddls = Seq.empty[(Long, String, String)]
-      val next = pollApplyOnceGtid(spark, eps, reg, targets,
-        stagingDir, txnsPerCommit, fromTso, serverId, soTimeoutMs,
-        maxBytesPerPoll, ddlInStream, notes += _, ddls = _)
-      note1236(c1236,
-        notes.flatMap(x => x.skip1236.map(x.dn -> _)).toMap,
-        eps.map(_.dn), loopId)
-      if (ddlInStream) {
-        val evolved = evolveRegistryFromBatch(ddls, reg)
-        if (evolved != reg) { reg = evolved; saveRegistry(cursorDir, reg) }
-      }
-      saveGtidCursors(cursorDir, next)
-      // see run(): scheduled reclaim of rebuild-superseded versions
-      if (vacuumEvery > 0 && (n + 1) % vacuumEvery == 0)
-        targets.foreach(t => graft.operators.TxnApplier.vacuum(t.targetDir))
-      // liveness for the silence clock: an advancing cursor OR any
-      // served frames (a caught-up idle poll against a heartbeating
-      // server carries a HEARTBEAT frame — the dialogue is alive, the
-      // source is idle; reference TsoHeartbeat.java:53-67, progress
-      // guaranteed even when idle). A dead dialogue serves nothing
-      // and the no-data alarm still fires.
-      val advanced = next != eps || notes.exists(_.payloadBytes > 4)
-      val raised = monitor.map(_.noteBatch(loopId, n,
-        if (advanced) 1L else 0L)).getOrElse(Seq.empty)
-      // see run(): typed alarm policies over the watchdog's signals
       alarms.foreach { a =>
         if (advanced) a.noteConsumed()
         graft.streaming.Alarms.route(a, raised)

@@ -44,10 +44,10 @@ object BinlogCatalog {
   /** The log's executed GTID set — SHOW MASTER STATUS's
     * Executed_Gtid_Set column: the union of every GTID event the log
     * carries. THE bootstrap value for a GTID replica that should start
-    * "from now" (seed `GtidEndpoint.executed` with it and the first
-    * poll serves only what commits afterwards — MySQL's auto-position
-    * enrollment). One streaming-parse task per SCANNED file folding
-    * its frames into an interval-compact set; with populated
+    * "from now" (seed `CdcReplica.start`'s `startExecuted` with it and
+    * the first poll serves only what commits afterwards — MySQL's
+    * auto-position enrollment). One streaming-parse task per SCANNED
+    * file folding its frames into an interval-compact set; with populated
     * PREVIOUS_GTIDS the scan covers only the files past the newest
     * previous-set (usually one) — see the fast path below. A
     * GTID-less log answers Empty. */

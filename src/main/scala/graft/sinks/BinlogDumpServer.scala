@@ -32,7 +32,8 @@ import graft.sources.BinlogDumpClient
   * header → length → body, never a whole file in heap) off any Hadoop
   * FS scheme — an archived log serves exactly like a local one. This
   * is the serving tier a downstream replica (or this repo's own
-  * LiveReplicaJob) polls; Spark jobs are the producers and consumers,
+  * LiveReplicaJob and `graft-cdc` source) polls; Spark jobs are the
+  * producers and consumers,
   * the server is transport.
   */
 final class BinlogDumpServer(wireDir: String, user: String,

@@ -1582,8 +1582,8 @@ object BinlogWire {
     * RENAME/DROP TABLE move/remove entries; statements for unknown
     * tables (and unparseable ones) leave the registry untouched.
     * Shared by the schema-tracking decoder ([[decodeStream]]) and the
-    * live-replica runner's PERSISTED registry
-    * ([[graft.jobs.LiveReplicaJob]]) — the same fold, applied within
+    * standing replicas' PERSISTED registry
+    * ([[RegistrySidecar]]) — the same fold, applied within
     * a segment there and across triggers/restarts here. */
   def evolveRegistry(reg: Map[(String, String), Seq[String]],
       defaultSchema: String, stmt: String)

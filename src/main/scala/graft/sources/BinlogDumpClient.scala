@@ -188,6 +188,31 @@ object BinlogDumpClient {
   /** ER_MASTER_FATAL_ERROR_READING_BINLOG — the unknown-log answer. */
   val ErrUnknownLog = 1236
 
+  /** A 1236 whose message signals an UNRECOVERABLE condition, never a
+    * transient rotate/promotion window: a malformed GTID set is a
+    * config/encode bug, and a source that PURGED binlogs still holding
+    * required GTIDs can never serve them — retrying either forever
+    * reads as a silently stalled replica. MySQL's purged-gtid texts
+    * ("the master has purged binary logs containing GTIDs that the
+    * slave requires" / the 8.0 source/replica wording) both carry
+    * "purged". */
+  def fatal1236(msg: String): Boolean = {
+    val m = if (msg == null) "" else msg
+    m.contains("Malformed GTID set") || m.toLowerCase.contains("purged")
+  }
+
+  /** The refusal for a GTID-less log met by a GTID auto-position
+    * consumer: the served row and commit frames carry no GTID event, so
+    * the executed set can never advance — the consumer would re-drain
+    * the log on every poll and apply nothing. */
+  def gtidlessLog(dn: String): IllegalStateException =
+    new IllegalStateException(
+      s"graft-cdc: DN $dn served row/commit events but no GTID event — " +
+      "a GTID auto-position source cannot advance on a GTID-less log " +
+      "(written without a gtidSid, the wire writers' default); write the " +
+      "log with a gtidSid, or replicate it with the (file, pos) dump " +
+      "runner graft.jobs.LiveReplicaJob.run")
+
   /** ERR packet (0xFF) → loud failure carrying the server's message. */
   private def failOnErr(payload: Array[Byte], context: String): Array[Byte] = {
     if (payload.nonEmpty && (payload(0) & 0xFF) == 0xFF) {
@@ -258,24 +283,13 @@ object BinlogDumpClient {
   }
 
   /** [[dumpSegmentGtid]] plus the ADVANCED executed set for the next
-    * poll: the input set unioned with every GTID the segment carries.
+    * poll (the input set unioned with every GTID the segment carries;
     * `poll(set) → apply → poll(set')` is the failover-proof standing
-    * tail. */
-  def dumpSegmentGtidWithCursor(host: String, port: Int, user: String,
-      password: String, executed: graft.model.GtidSet,
-      serverId: Long = 12345L, soTimeoutMs: Int = 30000,
-      maxBytes: Long = Long.MaxValue)
-      : (Array[Byte], graft.model.GtidSet) = {
-    val (seg, adv, _) = dumpSegmentGtidWithCursorStatus(host, port, user,
-      password, executed, serverId, soTimeoutMs, maxBytes)
-    (seg, adv)
-  }
-
-  /** [[dumpSegmentGtidWithCursor]] plus whether the drain ended at the
-    * server's CAUGHT-UP EOF (vs the byte cap): `true` means the DN had
-    * nothing more at drain time — the signal a Trigger.AvailableNow
-    * run uses to mark a DN complete and terminate instead of tailing a
-    * live producer forever. */
+    * tail) and whether the drain ended at the server's CAUGHT-UP EOF
+    * (vs the byte cap): `true` means the DN had nothing more at drain
+    * time — the signal a Trigger.AvailableNow run uses to mark a DN
+    * complete and terminate instead of tailing a live producer
+    * forever. */
   def dumpSegmentGtidWithCursorStatus(host: String, port: Int,
       user: String, password: String, executed: graft.model.GtidSet,
       serverId: Long = 12345L, soTimeoutMs: Int = 30000,
@@ -363,7 +377,8 @@ object BinlogDumpClient {
           s"BinlogDumpClient: MariaDB-flavor GTID carrier (event type " +
           s"$tc) in an auto-position dump — this cursor tracks MySQL " +
           "sid:gno sets and cannot advance on MariaDB domain GTIDs; " +
-          "replicate a MariaDB source with (file, pos) cursors")
+          "MariaDB GTID-flavored logs are not supported (the decoder " +
+          "refuses MARIA_GTID and MARIA_GTID_LIST on every path)")
       off += len
     }
     firstSeen.foreach { case (sid, first) =>

@@ -245,7 +245,7 @@ object CdcBinlog {
       holdMaxSegments: Int = 12): StreamingQuery = {
     // the frontier sidecar is ';'/'='/','-delimited and the source's
     // options reuse '@'/';' — refuse DN names that would corrupt
-    // either (the CdcReplica.start / saveRegistry guard family)
+    // either (the CdcReplica.start / RegistrySidecar guard family)
     endpoints.foreach { case (dn, _, _) =>
       require(dn.nonEmpty &&
         !dn.exists(c => "\"\\,;=@/".contains(c) || c.isWhitespace),
@@ -334,13 +334,13 @@ object CdcBinlog {
     val regSeed = new Path(s"$workDir/hold/${batchId - 1}.registry")
     val reg0 = registryDir.map { d =>
       if (fs.exists(regSeed))
-        graft.jobs.LiveReplicaJob.mergeRegistry(
+        graft.sinks.RegistrySidecar.merge(
           graft.util.HadoopIo.readString(regSeed), tableCols)
       else {
         // first batch of a (possibly resumed) query: materialize the
         // seed so a replay of THIS batch re-reads the pre-evolution
         // registry even after the end-of-batch registryDir save
-        val r = graft.jobs.LiveReplicaJob.resumeRegistry(d, tableCols)
+        val r = graft.sinks.RegistrySidecar.resume(d, tableCols)
         writeRegistrySnapshot(fs, regSeed, r)
         r
       }
@@ -373,7 +373,7 @@ object CdcBinlog {
     // registry is the EVOLVED one, and renamed keys in older rows are
     // re-keyed to it — otherwise the re-encode would null their cells.
     val evolved = registryDir.map { _ =>
-      graft.jobs.LiveReplicaJob.evolveRegistryFromBatch(
+      graft.sinks.RegistrySidecar.evolve(
         graft.jobs.WireReplicaJob.ddlsOf(maxObs.get("ddls")), reg0)
     }.getOrElse(reg0)
 
@@ -939,7 +939,7 @@ object CdcBinlog {
         new Path(s"$workDir/hold/$batchId.registry"), writeReg)
       fs.delete(new Path(s"$workDir/hold/${batchId - 2}.registry"), false)
       if (writeReg != reg0)
-        graft.jobs.LiveReplicaJob.saveRegistry(d, writeReg)
+        graft.sinks.RegistrySidecar.save(d, writeReg)
     }
     ()
   }
@@ -1121,7 +1121,7 @@ object CdcBinlog {
       } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** Batch-versioned registry snapshot — the shared saveRegistry
+  /** Batch-versioned registry snapshot — the shared RegistrySidecar
     * serialization (guards included) written ATOMICALLY: this file is
     * the replay's schema anchor; a truncated half-write trusted by a
     * replay would be the exact wrong-base corruption it exists to
@@ -1130,7 +1130,7 @@ object CdcBinlog {
       p: Path, reg: Map[(String, String), Seq[String]]): Unit =
     graft.util.HadoopIo.writeSwap(
       new Path(p.getParent, s".${p.getName}.tmp"), p,
-      graft.jobs.LiveReplicaJob.serializeRegistry(reg))
+      graft.sinks.RegistrySidecar.serialize(reg))
 
   /** One live holdback segment's manifest entry: file name under
     * hold/ (`<batch>` or `<batch>.c<i>`), remaining above-barrier row

@@ -3,14 +3,17 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.jobs.{LiveReplicaJob, WireReplicaJob}
+import graft.jobs.WireReplicaJob
 import graft.operators.TxnApplier
+import graft.sinks.RegistrySidecar
 
-/** THE streaming deployment call: the `graft-cdc` source wired to the
+/** THE GTID standing replica: the `graft-cdc` source wired to the
   * routed transaction-preserving apply as ONE checkpointed
-  * StreamingQuery — the Structured Streaming analog of
-  * [[graft.jobs.LiveReplicaJob.run]], with Spark owning triggers,
-  * offsets, restart recovery, progress metrics, and the streaming UI.
+  * StreamingQuery, with Spark owning triggers, offsets, restart
+  * recovery, progress metrics, and the streaming UI. Its upstream must
+  * carry GTID events (the source refuses a GTID-less log); a log
+  * written without a GTID sid replicates through the (file, pos) dump
+  * runner in `graft.jobs` (the refusal names it).
   *
   * Per micro-batch: the decoded multi-table change batch stages once
   * ([[WireReplicaJob.stageRouted]], so the multi-pass DDL-aware routing
@@ -32,8 +35,13 @@ import graft.operators.TxnApplier
   * sets, so the replica resumes at the last committed batch; repoint
   * `endpoints` at a promoted source across the restart and the same
   * checkpoint keeps the position (GTID cursors name transactions, not
-  * files). The registry sidecar carries column renames across the
-  * restart the same way it does for the poll-loop runner.
+  * files). The registry sidecar ([[RegistrySidecar]]) carries column
+  * renames across the restart.
+  *
+  * Liveness: a [[StallMonitor]] added with `spark.streams.addListener`
+  * counts an idle trigger whose every dialed DN answered with a
+  * HEARTBEAT frame (a server with idle heartbeats on) as live, so a
+  * caught-up replica of an idle source never raises `no_data`.
   */
 object CdcReplica {
 
@@ -54,7 +62,7 @@ object CdcReplica {
       compactAfter: Int = 32,
       compactMaxBuckets: Int = Int.MaxValue): StreamingQuery = {
     // the option strings reuse the sidecar/offset delimiters — refuse
-    // names that would corrupt them (same guard family as saveRegistry)
+    // names that would corrupt them (same guard family as RegistrySidecar)
     endpoints.foreach { case (dn, _, _) =>
       require(!dn.exists(c => "\"\\,;=@/".contains(c) || c.isWhitespace),
         s"DN name '$dn' carries option/offset/path delimiters")
@@ -101,10 +109,9 @@ object CdcReplica {
           fromTso = None, applyMode = applyMode,
           compactAfter = compactAfter,
           compactMaxBuckets = compactMaxBuckets)
-        val reg0 = LiveReplicaJob.resumeRegistry(registryDir, tableCols)
-        val evolved = LiveReplicaJob.evolveRegistryFromBatch(staged.ddls,
-          reg0)
-        if (evolved != reg0) LiveReplicaJob.saveRegistry(registryDir, evolved)
+        val reg0 = RegistrySidecar.resume(registryDir, tableCols)
+        val evolved = RegistrySidecar.evolve(staged.ddls, reg0)
+        if (evolved != reg0) RegistrySidecar.save(registryDir, evolved)
         // cadence off Spark's MONOTONIC batchId (not a closure counter,
         // which would reset on every query restart and drift the
         // schedule): vacuum fires on batches k-1, 2k-1, … regardless of

@@ -17,6 +17,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.model.{ChangeEvent, GtidSet}
+import graft.sinks.BinlogWire
 import graft.sources.{BinlogDumpClient, ChangeEventSource}
 
 /** `spark.readStream.format("graft-cdc")` — the live COM_BINLOG_DUMP
@@ -62,8 +63,8 @@ import graft.sources.{BinlogDumpClient, ChangeEventSource}
   *   - `tables`      "db.t:c1,c2;db.t2:c3" — the TABLE_MAP name
   *                   registry (MySQL table maps carry no column names)
   *   - `registryDir` optional dir whose `_graft_registry` sidecar
-  *                   (maintained by [[graft.jobs.LiveReplicaJob
-  *                   .saveRegistry]] from the apply side) overrides
+  *                   (maintained by [[graft.sinks.RegistrySidecar
+  *                   .save]] from the apply side) overrides
   *                   `tables` at decode time — the cross-batch half of
   *                   in-stream DDL name tracking
   *   - `startExecuted` "dn1=uuid:1-4;dn2=" initial sets (default empty
@@ -235,10 +236,18 @@ object CdcPollRegistry {
   /** `dialed`: DNs the trigger's drain job polled. `atEof`: DNs known
     * caught-up at the server's EOF as of this trigger (dialed-and-
     * answered-EOF, plus DNs already marked complete for an
-    * AvailableNow run). */
-  final case class PollInfo(dialed: Set[String], atEof: Set[String])
+    * AvailableNow run). `heartbeat`: dialed DNs whose drain carried a
+    * HEARTBEAT frame — an idle source with a live dialogue. */
+  final case class PollInfo(dialed: Set[String], atEof: Set[String],
+      heartbeat: Set[String] = Set.empty)
 
   private val byCkpt =
+    new java.util.concurrent.ConcurrentHashMap[String, PollInfo]()
+
+  /** The same records keyed by the polling query's id (the stream
+    * thread's `sql.streaming.queryId` property) — what a
+    * [[StallMonitor]] holds when an idle event arrives. */
+  private val byQuery =
     new java.util.concurrent.ConcurrentHashMap[String, PollInfo]()
 
   /** Scheme-insensitive path identity: Spark hands the source a
@@ -259,8 +268,19 @@ object CdcPollRegistry {
   private[streaming] def record(sourceCheckpointLocation: String,
       info: PollInfo): Unit = {
     byCkpt.put(norm(sourceCheckpointLocation), info)
+    SparkSession.getActiveSession
+      .flatMap(s => Option(s.sparkContext.getLocalProperty(
+        "sql.streaming.queryId")))
+      .foreach(byQuery.put(_, info))
     ()
   }
+
+  /** Whether the last trigger of running query `queryId` heard a
+    * HEARTBEAT from every DN it dialed: the source is idle and every
+    * dialogue alive, so an idle trigger is not silence. */
+  private[streaming] def heardHeartbeat(queryId: String): Boolean =
+    Option(byQuery.get(queryId))
+      .exists(i => i.dialed.nonEmpty && i.dialed.subsetOf(i.heartbeat))
 
   /** The last poll of the graft-cdc source of the query checkpointed
     * at `queryCheckpointDir` (source index 0 — the composed pipelines
@@ -377,7 +397,7 @@ private[streaming] class GraftCdcMicroBatchStream(conf: CdcConf,
     * start set, drains bounded bytes, stages them, and reports the
     * advanced set. Transient 1236s (rotate/promotion windows) keep the
     * DN's cursor for the next trigger; unrecoverable ones
-    * ([[graft.jobs.LiveReplicaJob.fatal1236]]) fail the trigger. */
+    * ([[BinlogDumpClient.fatal1236]]) fail the trigger. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startSets = gtidOffset(start).sets
     val allEps = conf.endpoints.map { case (dn, h, p) =>
@@ -414,12 +434,14 @@ private[streaming] class GraftCdcMicroBatchStream(conf: CdcConf,
           catch {
             case e: BinlogDumpClient.ServerError
                 if e.code == BinlogDumpClient.ErrUnknownLog &&
-                  !graft.jobs.LiveReplicaJob.fatal1236(e.getMessage) =>
+                  !BinlogDumpClient.fatal1236(e.getMessage) =>
               (Array.emptyByteArray, startSet, false)
           }
         // newest NON-ZERO header timestamp in the drain — FDE/rotate/
-        // heartbeat frames carry ts=0 and must not fake freshness
+        // heartbeat frames carry ts=0 and must not fake freshness. The
+        // same walk notes GTID, row/commit and HEARTBEAT frames
         var evTs = 0L
+        var gtids, txnFrames, heartbeat = false
         var off = 4
         var walking = true
         while (walking && off + 19 <= seg.length) {
@@ -433,6 +455,14 @@ private[streaming] class GraftCdcMicroBatchStream(conf: CdcConf,
             val t = (seg(off) & 0xFFL) | ((seg(off + 1) & 0xFFL) << 8) |
               ((seg(off + 2) & 0xFFL) << 16) | ((seg(off + 3) & 0xFFL) << 24)
             if (t > 0L) evTs = t
+            (seg(off + 4) & 0xFF) match {
+              case BinlogWire.GtidEvent => gtids = true
+              case BinlogWire.HeartbeatEvent => heartbeat = true
+              case BinlogWire.XidEvent | BinlogWire.WriteRowsEventV2 |
+                   BinlogWire.UpdateRowsEventV2 |
+                   BinlogWire.DeleteRowsEventV2 => txnFrames = true
+              case _ => ()
+            }
             off += len.toInt
           }
         }
@@ -450,16 +480,18 @@ private[streaming] class GraftCdcMicroBatchStream(conf: CdcConf,
             try out.write(seg) finally out.close()
             p.toString
           }
-        (dn, adv.text, staged, seg.length.toLong, evTs, eof)
+        (dn, adv.text, staged, seg.length.toLong, evTs, eof,
+          txnFrames && !gtids, heartbeat)
       }.collect()
+    // a GTID-less log never advances the executed set: the batch would
+    // never run and every trigger would re-drain the log for nothing
+    polled.find(_._7).foreach(t => throw BinlogDumpClient.gtidlessLog(t._1))
     val end = GtidSetOffset(startSets ++ polled.map(t => t._1 -> t._2))
     lastDrainBytes = polled.map(t => t._1 -> t._4).toMap
     lastEventTs = lastEventTs ++
-      polled.collect { case (dn, _, _, _, ts, _) if ts > 0L => dn -> ts }
-    if (skipDone)
-      caughtUpDns = done ++ polled.collect {
-        case (dn, _, _, _, _, true) => dn
-      }
+      polled.collect { case (dn, _, _, _, ts, _, _, _) if ts > 0L => dn -> ts }
+    val atEof = polled.collect { case (dn, _, _, _, _, true, _, _) => dn }
+    if (skipDone) caughtUpDns = done ++ atEof
     lastEnd = Some(end)
     // advisory liveness for same-driver consumers: who was dialed, who
     // is known caught-up at EOF (per-trigger under processing-time
@@ -467,17 +499,17 @@ private[streaming] class GraftCdcMicroBatchStream(conf: CdcConf,
     CdcPollRegistry.record(checkpointLocation,
       CdcPollRegistry.PollInfo(
         dialed = eps.map(_._1).toSet,
-        atEof = (if (skipDone) done else Set.empty[String]) ++
-          polled.collect { case (dn, _, _, _, _, true) => dn }))
+        atEof = (if (skipDone) done else Set.empty[String]) ++ atEof,
+        heartbeat = polled.filter(_._8).map(_._1).toSet))
     if (end.sets != startSets) {
       // publish the stage under its content key (the drain learned the
       // end only after draining); idempotent across replayed triggers
       val fs = graft.util.HadoopIo.fsOf(stageRoot)
       val dst = stageDirFor(end)
       fs.mkdirs(dst)
-      polled.filter(_._3.nonEmpty).foreach { case (dn, _, staged, _, _, _) =>
-        val s = new Path(staged)
-        val d = new Path(dst, s"$dn.bin")
+      polled.filter(_._3.nonEmpty).foreach { t =>
+        val s = new Path(t._3)
+        val d = new Path(dst, s"${t._1}.bin")
         if (fs.exists(d)) fs.delete(d, true)
         if (!fs.rename(s, d))
           sys.error(s"graft-cdc: stage publish $s -> $d failed")
@@ -646,7 +678,7 @@ private[streaming] class GraftCdcPartitionReader(p: GraftCdcPartition)
         val text =
           try scala.io.Source.fromInputStream(in, "UTF-8").mkString
           finally in.close()
-        graft.jobs.LiveReplicaJob.mergeRegistry(text, p.tables)
+        graft.sinks.RegistrySidecar.merge(text, p.tables)
       }
     }.getOrElse(p.tables)
     val ser = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[ChangeEvent]()

@@ -73,10 +73,15 @@ final class StallMonitor(noDataThresholdSeconds: Long,
   }
 
   // a trigger with no available data emits Idle, not Progress — for the
-  // watchdog that IS the signal: an idle trigger is a zero-row batch
+  // watchdog that IS the signal: an idle trigger is a zero-row batch,
+  // unless every DN its graft-cdc source dialed answered with a
+  // HEARTBEAT frame (the source is idle, the dialogue alive; reference
+  // TsoHeartbeat.java:53-67, progress guaranteed even when idle)
   override def onQueryIdle(
       e: StreamingQueryListener.QueryIdleEvent): Unit = {
-    record(e.id.toString, batchId = -1L, numInputRows = 0L, None)
+    val id = e.id.toString
+    if (CdcPollRegistry.heardHeartbeat(id)) lastDataMs.put(id, now())
+    else record(id, batchId = -1L, numInputRows = 0L, None)
     ()
   }
 
@@ -86,10 +91,11 @@ final class StallMonitor(noDataThresholdSeconds: Long,
     ()
   }
 
-  /** Batch-poller entry: a standing POLL loop (the live replica
-    * runner) has no StreamingQuery and hence no listener events — it
-    * reports each trigger's input here instead and gets back any
-    * alarms the call raised. Same thresholds, same re-arm behavior. */
+  /** Batch-poller entry: a standing POLL loop (the (file, pos) live
+    * replica runner) has no StreamingQuery and hence no listener
+    * events — it reports each trigger's input here instead and gets
+    * back any alarms the call raised. Same thresholds, same re-arm
+    * behavior. */
   def noteBatch(loopId: String, batchId: Long, numInputRows: Long,
       maxEventTimeSec: Option[Long] = None): Seq[StallAlarm] =
     record(loopId, batchId, numInputRows, maxEventTimeSec)

@@ -8,12 +8,15 @@ import graft.sinks.BinlogWire
 import graft.sinks.BinlogWire._
 import graft.sources.BinlogDumpClient
 
-/** The standing LIVE replica over the real dump dialogue: poll/apply
+/** The (file, pos) LIVE replica over the real dump dialogue: poll/apply
   * triggers against a protocol-faithful server converge to the same
   * state as reading the files directly, cursors advance across
   * triggers, an un-rotated successor is quietly "no new data", and a
   * full re-poll from the start replays into the applier's position
-  * gate without doubling a transaction. */
+  * gate without doubling a transaction. The logs here carry no GTID
+  * events (the writers' default), which only this runner replicates;
+  * the GTID standing replica is `CdcReplica` (CdcSourceSpec,
+  * CdcReplicaSpec). */
 class LiveReplicaSpec extends SparkSpec {
   import spark.implicits._
 
@@ -22,6 +25,10 @@ class LiveReplicaSpec extends SparkSpec {
   private val tableCols = Map(("bank", "accounts") -> specs.map(_.name))
   private val colTypes =
     Seq("acct" -> "long", "seq" -> "long", "balance" -> "long")
+
+  /** The accounts table's replica target under `dir`, 4 buckets. */
+  private def accounts(dir: String) = WireReplicaJob.TableTarget("bank",
+    "accounts", colTypes, Seq("acct"), "seq", dir, 4)
 
   private def lastImages(dir: String): Map[Long, Long] =
     BinlogWire.readBinlogFiles(spark, dir, tableCols)
@@ -68,9 +75,8 @@ class LiveReplicaSpec extends SparkSpec {
       val ep0 = Seq(BinlogDumpClient.Endpoint("dn1", "localhost", srv.port,
         "repl", "pw", "binlog.000000", 4L))
       def trigger(eps: Seq[BinlogDumpClient.Endpoint]) =
-        LiveReplicaJob.pollApplyOnce(spark, eps, tableCols, "bank",
-          "accounts", colTypes, Seq("acct"), "seq", target, staging,
-          nBuckets = 4, txnsPerCommit = 2)
+        LiveReplicaJob.pollApplyOnceRouted(spark, eps, tableCols,
+          Seq(accounts(target)), staging, txnsPerCommit = 2)
 
       // trigger 1: the first two files apply; cursor lands on the
       // successor the rotate chain names
@@ -105,9 +111,8 @@ class LiveReplicaSpec extends SparkSpec {
       var triggers = 0
       var advanced = true
       while (advanced && triggers < 32) {
-        val next = LiveReplicaJob.pollApplyOnce(spark, eps, tableCols,
-          "bank", "accounts", colTypes, Seq("acct"), "seq", target2,
-          staging2, nBuckets = 4, txnsPerCommit = 2,
+        val next = LiveReplicaJob.pollApplyOnceRouted(spark, eps,
+          tableCols, Seq(accounts(target2)), staging2, txnsPerCommit = 2,
           maxBytesPerPoll = 400L)
         advanced = next != eps
         eps = next
@@ -188,72 +193,6 @@ class LiveReplicaSpec extends SparkSpec {
     } finally srv.close()
   }
 
-  test("GTID replica loop: bounded catch-up, then SOURCE FAILOVER to a renumbered log mid-stream") {
-    import graft.model.GtidSet
-    val root = java.nio.file.Files.createTempDirectory("graft-gtidrpl")
-    val sid = java.util.UUID.fromString(
-      "0a1b2c3d-9999-8888-7777-666655554444")
-    // 8 single-row txns on one table, gno := tso
-    val ev = (1L to 8L).map { t =>
-      (t, t, "INSERT", "bank", "accounts",
-        Map.empty[String, String],
-        Map("acct" -> s"$t", "seq" -> "1", "balance" -> s"${t * 10}"),
-        1700000000L)
-    }.toDF("tso", "txnId", "op", "schemaName", "tableName", "before",
-      "after", "tsoTime")
-    val primary = s"$root/primary"
-    BinlogWire.writeChangeStreamBinlogFiles(
-      ev.coalesce(1).sortWithinPartitions("tso"), tableCols, primary,
-      checksummed = true, gtidSid = Some(sid))
-    val targets = Seq(WireReplicaJob.TableTarget("bank", "accounts",
-      colTypes, Seq("acct"), "seq", s"$root/target", 2))
-    def state(): Map[Long, Long] =
-      TxnApplier.readCurrent(spark, s"$root/target")
-        .select($"acct", $"balance").as[(Long, Long)].collect().toMap
-
-    // phase 1: bounded poll against the primary — PARTIAL progress
-    val srv1 = new graft.sinks.BinlogDumpServer(primary, "repl", "pw")
-    val afterP1 = try {
-      val ep0 = Seq(LiveReplicaJob.GtidEndpoint("dn1", "localhost",
-        srv1.port, "repl", "pw"))
-      LiveReplicaJob.pollApplyOnceGtid(spark, ep0, tableCols, targets,
-        s"$root/stage", txnsPerCommit = 2, maxBytesPerPoll = 400L)
-    } finally srv1.close()
-    val partial = afterP1.head.executed
-    assert(!partial.isEmpty && !partial.contains(s"$sid:8"),
-      s"cap ignored: ${partial.text}")
-    assert(state().nonEmpty && state().size < 8)
-
-    // phase 2: the primary dies; a promoted source re-serves the SAME
-    // transactions under renumbered file names. The GTID cursor keeps
-    // working — repoint and continue; nothing applies twice.
-    val promoted = s"$root/promoted"
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(promoted))
-    new java.io.File(primary).listFiles
-      .filter(_.getName.startsWith("binlog.")).foreach { f =>
-        val n = f.getName.stripPrefix("binlog.").toInt
-        java.nio.file.Files.copy(f.toPath,
-          java.nio.file.Paths.get(promoted, f"binlog.${n + 500}%06d"))
-      }
-    val srv2 = new graft.sinks.BinlogDumpServer(promoted, "repl", "pw")
-    try {
-      var eps = afterP1.map(_.copy(host = "localhost", port = srv2.port))
-      var triggers = 0
-      var advanced = true
-      while (advanced && triggers < 16) {
-        val next = LiveReplicaJob.pollApplyOnceGtid(spark, eps,
-          tableCols, targets, s"$root/stage", txnsPerCommit = 2,
-          maxBytesPerPoll = 400L)
-        advanced = next.head.executed != eps.head.executed
-        eps = next
-        triggers += 1
-      }
-      assert(eps.head.executed.text == s"$sid:1-8")
-      assert(state() == (1L to 8L).map(t => t -> t * 10).toMap)
-    } finally srv2.close()
-  }
-
   test("standing runner: kill between triggers, resume from the cursor sidecar, drain only new data; silence raises the no-data alarm") {
     val root = java.nio.file.Files.createTempDirectory("graft-runner")
     val full = s"$root/full"
@@ -287,8 +226,7 @@ class LiveReplicaSpec extends SparkSpec {
     try {
       val ep0 = Seq(BinlogDumpClient.Endpoint("dn1", "localhost",
         srv.port, "repl", "pw", "binlog.000000", 4L))
-      val targets = Seq(WireReplicaJob.TableTarget("bank", "accounts",
-        colTypes, Seq("acct"), "seq", s"$root/replica", 4))
+      val targets = Seq(accounts(s"$root/replica"))
       val mon = new graft.streaming.StallMonitor(noDataThresholdSeconds = 0)
       // alarm policy layer on top of the watchdog: zero thresholds so
       // the idle trigger pages immediately, fatal-armed — the FIRST
@@ -340,79 +278,5 @@ class LiveReplicaSpec extends SparkSpec {
         .select($"tso").as[Long].collect().toSet
       assert(stagedTsos == Set(5L, 6L, 7L, 8L), s"staged $stagedTsos")
     } finally srv.close()
-  }
-
-  test("standing GTID runner: failover repoint + sidecar resume; the promoted log's executed prefix is pruned, not re-walked") {
-    import graft.model.GtidSet
-    val root = java.nio.file.Files.createTempDirectory("graft-grunner")
-    val sid = java.util.UUID.fromString(
-      "0a1b2c3d-7777-6666-5555-444433332222")
-    def ev(lo: Long, hi: Long) = (lo to hi).map { t =>
-      (t, t, "INSERT", "bank", "accounts",
-        Map.empty[String, String],
-        Map("acct" -> s"$t", "seq" -> "1", "balance" -> s"${t * 10}"),
-        1700000000L)
-    }.toDF("tso", "txnId", "op", "schemaName", "tableName", "before",
-      "after", "tsoTime")
-    val primary = s"$root/primary"
-    BinlogWire.writeChangeStreamBinlogFiles(
-      ev(1L, 8L).coalesce(1).sortWithinPartitions("tso"), tableCols,
-      primary, checksummed = true, gtidSid = Some(sid))
-    val targets = Seq(WireReplicaJob.TableTarget("bank", "accounts",
-      colTypes, Seq("acct"), "seq", s"$root/target", 2))
-    def state(): Map[Long, Long] =
-      TxnApplier.readCurrent(spark, s"$root/target")
-        .select($"acct", $"balance").as[(Long, Long)].collect().toMap
-
-    val srv1 = new graft.sinks.BinlogDumpServer(primary, "repl", "pw")
-    try {
-      val ep0 = Seq(LiveReplicaJob.GtidEndpoint("dn1", "localhost",
-        srv1.port, "repl", "pw"))
-      val e1 = LiveReplicaJob.runGtid(spark, ep0, tableCols, targets,
-        s"$root/stage", s"$root/cursors", intervalMs = 0,
-        maxTriggers = 1, txnsPerCommit = 2)
-      assert(e1.head.executed.text == s"$sid:1-8")
-      assert(state() == (1L to 8L).map(t => t -> t * 10).toMap)
-    } finally srv1.close()
-
-    // primary dies. The promoted source re-serves the SAME txns under
-    // a renamed file AND has committed new ones (its writer threads
-    // priorExecuted across the rotation, so the new file's
-    // PREVIOUS_GTIDS is real). Corrupt the renamed history file's
-    // tail: if the restarted runner re-walked it the poll would die —
-    // pruning via the populated previous-set must skip it UNOPENED.
-    val promoted = s"$root/promoted"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(promoted))
-    new java.io.File(primary).listFiles
-      .filter(_.getName.startsWith("binlog.")).foreach { f =>
-        val n = f.getName.stripPrefix("binlog.").toInt
-        java.nio.file.Files.copy(f.toPath,
-          java.nio.file.Paths.get(promoted, f"binlog.${n + 500}%06d"))
-      }
-    val fresh = s"$root/fresh"
-    BinlogWire.writeChangeStreamBinlogFiles(
-      ev(9L, 12L).coalesce(1).sortWithinPartitions("tso"), tableCols,
-      fresh, checksummed = true, gtidSid = Some(sid),
-      priorExecuted = GtidSet.parse(s"$sid:1-8"))
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(fresh, "binlog.000000"),
-      java.nio.file.Paths.get(promoted, "binlog.000501"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(promoted, "binlog.000500"),
-      Array.fill[Byte](19)(0xFF.toByte),
-      java.nio.file.StandardOpenOption.APPEND)
-
-    val srv2 = new graft.sinks.BinlogDumpServer(promoted, "repl", "pw")
-    try {
-      // restart with EMPTY-cursor bootstrap endpoints repointed at the
-      // promoted source — the sidecar supplies the real executed set
-      val epNew = Seq(LiveReplicaJob.GtidEndpoint("dn1", "localhost",
-        srv2.port, "repl", "pw"))
-      val e2 = LiveReplicaJob.runGtid(spark, epNew, tableCols, targets,
-        s"$root/stage", s"$root/cursors", intervalMs = 0,
-        maxTriggers = 1, txnsPerCommit = 2)
-      assert(e2.head.executed.text == s"$sid:1-12")
-      assert(state() == (1L to 12L).map(t => t -> t * 10).toMap)
-    } finally srv2.close()
   }
 }

@@ -3,6 +3,8 @@ package graft.jobs
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TxnApplier
+import graft.sinks.RegistrySidecar
+import graft.sources.BinlogDumpClient
 
 /** Guardrails around the standing replica's failure handling and
   * sidecar formats: the 1236 fatal/transient split (a purged-binlog
@@ -15,31 +17,31 @@ class ReplicaGuardrailsSpec extends AnyFunSuite {
 
   test("fatal1236 splits unrecoverable from transient dump answers") {
     // unrecoverable: purged-gtid (5.7 and 8.0 wordings) and malformed set
-    assert(LiveReplicaJob.fatal1236(
+    assert(BinlogDumpClient.fatal1236(
       "The slave is connecting using CHANGE MASTER TO MASTER_AUTO_POSITION = 1, " +
       "but the master has purged binary logs containing GTIDs that the slave requires."))
-    assert(LiveReplicaJob.fatal1236(
+    assert(BinlogDumpClient.fatal1236(
       "Cannot replicate because the source purged required binary logs."))
-    assert(LiveReplicaJob.fatal1236("Malformed GTID set specification"))
-    assert(LiveReplicaJob.fatal1236(null) == false)
+    assert(BinlogDumpClient.fatal1236("Malformed GTID set specification"))
+    assert(BinlogDumpClient.fatal1236(null) == false)
     // transient: rotate/promotion windows — tolerated and retried
-    assert(!LiveReplicaJob.fatal1236(
+    assert(!BinlogDumpClient.fatal1236(
       "Could not find first log file name in binary log index file"))
-    assert(!LiveReplicaJob.fatal1236("unknown binlog file binlog.000007"))
+    assert(!BinlogDumpClient.fatal1236("unknown binlog file binlog.000007"))
   }
 
   test("registry sidecar refuses names carrying its own delimiters") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-guard-reg").toString
     intercept[IllegalArgumentException] {
-      LiveReplicaJob.saveRegistry(dir, Map(("db", "t\tx") -> Seq("a")))
+      RegistrySidecar.save(dir, Map(("db", "t\tx") -> Seq("a")))
     }
     intercept[IllegalArgumentException] {
-      LiveReplicaJob.saveRegistry(dir, Map(("db", "t") -> Seq("a,b")))
+      RegistrySidecar.save(dir, Map(("db", "t") -> Seq("a,b")))
     }
     // clean names round-trip
-    LiveReplicaJob.saveRegistry(dir, Map(("db", "t") -> Seq("a", "b")))
-    assert(LiveReplicaJob.resumeRegistry(dir, Map.empty)
+    RegistrySidecar.save(dir, Map(("db", "t") -> Seq("a", "b")))
+    assert(RegistrySidecar.resume(dir, Map.empty)
       == Map(("db", "t") -> Seq("a", "b")))
   }
 

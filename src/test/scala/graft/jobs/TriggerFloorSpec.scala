@@ -41,7 +41,7 @@ class TriggerFloorSpec extends SparkSpec {
     val staged = WireReplicaJob.stageRouted(batch, stage, targets)
     WireReplicaJob.applyRoutedWithDdl(staged, targets, txnsPerCommit = 1,
       applyMode = mode)
-    LiveReplicaJob.evolveRegistryFromBatch(staged.ddls,
+    graft.sinks.RegistrySidecar.evolve(staged.ddls,
       tables.map(t => ("db", t) -> Seq("k", "seq", "v")).toMap)
     ()
   }

@@ -64,11 +64,15 @@ class MariaFlavorSpec extends SparkSpec {
     val seg = txnFrames(Seq(Event(ts, MariaGtidEvent, 1L,
       Array.fill[Byte](13)(0))))
     val e = intercept[IllegalArgumentException] {
-      // same walk dumpSegmentGtidWithCursor runs over a drained
+      // same walk dumpSegmentGtidWithCursorStatus runs over a drained
       // segment (the file bytes share the magic+frames layout)
       graft.sources.BinlogDumpClient.advanceExecuted(seg,
         graft.model.GtidSet.Empty)
     }
     assert(e.getMessage.contains("MariaDB"))
+    // no runner replicates a MariaDB GTID-flavored log: the refusal
+    // must not send the user to (file, pos) cursors
+    assert(e.getMessage.contains("not supported") &&
+      !e.getMessage.contains("(file, pos)"))
   }
 }

@@ -400,19 +400,22 @@ class BinlogDumpClientSpec extends SparkSpec {
     try {
       // bootstrap from the EMPTY set: everything serves; the advanced
       // cursor names every txn (gno := tso)
-      val (seg1, set1) = BinlogDumpClient.dumpSegmentGtidWithCursor(
-        "localhost", srv.port, "repl", "pw", GtidSet.Empty)
+      val (seg1, set1, _) =
+        BinlogDumpClient.dumpSegmentGtidWithCursorStatus(
+          "localhost", srv.port, "repl", "pw", GtidSet.Empty)
       assert(decode(seg1) == (1L to 8L).toSet)
       assert(set1.text == s"$sid:1-8")
       // caught-up poll: nothing new
-      val (seg2, set2) = BinlogDumpClient.dumpSegmentGtidWithCursor(
-        "localhost", srv.port, "repl", "pw", set1)
+      val (seg2, set2, _) =
+        BinlogDumpClient.dumpSegmentGtidWithCursorStatus(
+          "localhost", srv.port, "repl", "pw", set1)
       assert(decode(seg2).isEmpty && set2 == set1)
       // a PARTIAL set serves exactly the complement — content, not
       // position, addresses the dump
       val partial = GtidSet.parse(s"$sid:1-5")
-      val (seg3, set3) = BinlogDumpClient.dumpSegmentGtidWithCursor(
-        "localhost", srv.port, "repl", "pw", partial)
+      val (seg3, set3, _) =
+        BinlogDumpClient.dumpSegmentGtidWithCursorStatus(
+          "localhost", srv.port, "repl", "pw", partial)
       assert(decode(seg3) == Set(6L, 7L, 8L))
       assert(set3.text == s"$sid:1-8")
       // seekGtid names the same resume point the tso seek derives
@@ -444,8 +447,9 @@ class BinlogDumpClientSpec extends SparkSpec {
           "binlog.000000", 4L) // the pre-failover (file, pos) cursor
       }
       assert(stale.code == BinlogDumpClient.ErrUnknownLog)
-      val (seg4, set4) = BinlogDumpClient.dumpSegmentGtidWithCursor(
-        "localhost", srv2.port, "repl", "pw", GtidSet.parse(s"$sid:1-5"))
+      val (seg4, set4, _) =
+        BinlogDumpClient.dumpSegmentGtidWithCursorStatus(
+          "localhost", srv2.port, "repl", "pw", GtidSet.parse(s"$sid:1-5"))
       assert(decode(seg4) == Set(6L, 7L, 8L))
       assert(set4.text == s"$sid:1-8")
     } finally srv2.close()
@@ -534,8 +538,9 @@ class BinlogDumpClientSpec extends SparkSpec {
             Seq(("dn1", seg)).toDF("dn", "payload"), "dn", "payload",
             tableCols)
           .select($"tso").as[Long].collect().toSet
-      val (seg, set) = BinlogDumpClient.dumpSegmentGtidWithCursor(
-        "localhost", srv.port, "repl", "pw", perFile.head)
+      val (seg, set, _) =
+        BinlogDumpClient.dumpSegmentGtidWithCursorStatus(
+          "localhost", srv.port, "repl", "pw", perFile.head)
       assert(decode(seg) ==
         (1L to 10L).toSet -- members(perFile.head).map(_._2))
       assert(set.text == s"$sid:1-10")
@@ -546,8 +551,9 @@ class BinlogDumpClientSpec extends SparkSpec {
       // steady-state poll bytes are O(new data): a consumer missing
       // only the newest file's txns receives less than that one
       // file's size (+ magic), never the log's history
-      val (segN, setN) = BinlogDumpClient.dumpSegmentGtidWithCursor(
-        "localhost", srv.port, "repl", "pw", allButLast)
+      val (segN, setN, _) =
+        BinlogDumpClient.dumpSegmentGtidWithCursorStatus(
+          "localhost", srv.port, "repl", "pw", allButLast)
       assert(segN.length <= fs.getFileStatus(paths.last).getLen + 4)
       assert(decode(segN) == members(perFile.last).map(_._2))
       assert(setN.text == s"$sid:1-10")
@@ -613,12 +619,14 @@ class BinlogDumpClientSpec extends SparkSpec {
       // GTID: fully-caught-up auto-position poll — same signal, set
       // unchanged
       val all = graft.sinks.BinlogCatalog.executedGtidSet(spark, dir)
-      val (gseg, gset) = BinlogDumpClient.dumpSegmentGtidWithCursor(
-        "localhost", srv.port, "repl", "pw", all)
+      val (gseg, gset, _) =
+        BinlogDumpClient.dumpSegmentGtidWithCursorStatus(
+          "localhost", srv.port, "repl", "pw", all)
       assert(gset == all)
       // this log carries no GTIDs (writeLog is sid-less), so every txn
-      // re-serves; a caught-up GTID log is covered below via the
-      // runner. Either way a non-advancing poll must still be LIVE.
+      // re-serves; a caught-up GTID log's heartbeat is covered by
+      // CdcReplicaSpec. Either way a non-advancing poll must still be
+      // LIVE.
       assert(gseg.length > 4)
     } finally srv.close()
   }
@@ -626,9 +634,7 @@ class BinlogDumpClientSpec extends SparkSpec {
   test("idle heartbeats feed the StallMonitor: a live-but-idle source never reads as silent") {
     import graft.jobs.{LiveReplicaJob, WireReplicaJob}
     val dir = java.nio.file.Files
-      .createTempDirectory("graft-hb-gtid").toString
-    val sid = java.util.UUID.fromString(
-      "0a1b2c3d-1111-2222-3333-4444555599bb")
+      .createTempDirectory("graft-hb-run-log").toString
     val hbSpecs = Seq(ColSpec("id", LongLong), ColSpec("seq", LongLong),
       ColSpec("v", VarChar(32)))
     val df = (1L to 4L).map(i => (i, i, s"v$i", "INSERT", i))
@@ -638,7 +644,7 @@ class BinlogDumpClientSpec extends SparkSpec {
       graft.operators.MergeSort.sortedRunsGrouped(df, 1,
         Seq("tso"), Seq("seq")),
       hbSpecs, "app", "t", "op", "ts", "tso", dir, checksummed = true,
-      tsoCarrier = "sequence", gtidSid = Some(sid))
+      tsoCarrier = "sequence")
     val root = java.nio.file.Files.createTempDirectory("graft-hb-run")
     val srv = new graft.sinks.BinlogDumpServer(dir, "repl", "pw",
       idleHeartbeats = true)
@@ -650,12 +656,14 @@ class BinlogDumpClientSpec extends SparkSpec {
       // trigger 1 drains; triggers 2..3 are IDLE — with a zero silence
       // threshold, any 0-liveness note would alarm instantly. The
       // heartbeat-carrying polls keep the clock fed: no alarm.
-      LiveReplicaJob.runGtid(spark,
-        Seq(LiveReplicaJob.GtidEndpoint("dn1", "localhost", srv.port,
-          "repl", "pw")),
+      LiveReplicaJob.run(spark,
+        Seq(BinlogDumpClient.Endpoint("dn1", "localhost", srv.port,
+          "repl", "pw", "binlog.000000", 4L)),
         Map(("app", "t") -> Seq("id", "seq", "v")), targets,
         s"$root/stage", s"$root/cursors", intervalMs = 0,
         maxTriggers = 3, monitor = Some(mon))
+      assert(graft.operators.TxnApplier
+        .readCurrent(spark, s"$root/replica").count() == 4L)
       assert(!mon.alarms.exists(_.kind == "no_data"))
     } finally srv.close()
   }

@@ -930,8 +930,8 @@ class CdcBinlogSpec extends SparkSpec {
     // checkpoint would commit) — the replay must still recompute the
     // old base from the versioned snapshot, not re-read the evolved
     // sidecar and null out the held rows' cells
-    assert(graft.jobs.LiveReplicaJob
-      .resumeRegistry(regDir, reg)(("db", "t")) == Seq("k", "seq", "v2"))
+    assert(graft.sinks.RegistrySidecar
+      .resume(regDir, reg)(("db", "t")) == Seq("k", "seq", "v2"))
     emit1()
     assert(values() == Seq(1L -> "a1", 2L -> "a2", 3L -> "a3",
       5L -> "b5"), "the replay re-encoded held rows as NULL cells")
@@ -989,7 +989,7 @@ class CdcBinlogSpec extends SparkSpec {
     assert(vals == Seq(1L -> "a1", 2L -> "a2", 3L -> "a3", 5L -> "b5"),
       "an arity-changing rename must still re-key held pre-DDL rows " +
         s"(got $vals)")
-    assert(graft.jobs.LiveReplicaJob.resumeRegistry(regDir, reg)(
+    assert(graft.sinks.RegistrySidecar.resume(regDir, reg)(
       ("db", "t")) == Seq("k", "seq", "v2", "extra"))
   }
 
@@ -1092,7 +1092,7 @@ class CdcBinlogSpec extends SparkSpec {
     // a consumer decodes with the registryDir sidecar (per-file decode
     // cannot see another file's DDL) — which must now carry BOTH names:
     // the renamed table AND its pre-rename alias for the held commits
-    val resumed = graft.jobs.LiveReplicaJob.resumeRegistry(regDir, reg)
+    val resumed = graft.sinks.RegistrySidecar.resume(regDir, reg)
     assert(resumed.get(("db", "t")) == Some(Seq("k", "seq", "v")) &&
       resumed.get(("db", "t2")) == Some(Seq("k", "seq", "v")),
       s"the sidecar must alias the old name: $resumed")
@@ -1148,7 +1148,7 @@ class CdcBinlogSpec extends SparkSpec {
       ce(12L, 12L, "dn2", "HEARTBEAT", "hb", Map("k" -> "12"))))
 
     val rows = BinlogWire.readBinlogFiles(spark, out,
-        graft.jobs.LiveReplicaJob.resumeRegistry(regDir, reg))
+        graft.sinks.RegistrySidecar.resume(regDir, reg))
       .select(col("log_file"), col("tso"), col("op"),
         element_at(col("after"), "v").as("v"), col("ddl"))
       .collect().toSeq.sortBy(r => (r.getString(0), r.getLong(1)))

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.SparkSpec
 import graft.jobs.WireReplicaJob
@@ -9,8 +9,10 @@ import graft.model.GtidSet
 import graft.operators.TxnApplier
 import graft.sinks.BinlogWire
 
-/** The packaged streaming replica (`CdcReplica.start`) end to end, and
-  * the restart-stability of its vacuum cadence: the schedule counts
+/** The packaged streaming replica (`CdcReplica.start`) end to end: its
+  * refusal of a GTID-less upstream, heartbeat liveness for a
+  * `StallMonitor` listener, and the restart-stability of its vacuum
+  * cadence: the schedule counts
   * Spark's MONOTONIC batchId, so `vacuumEveryBatches = k` fires on the
   * k-th batch of the QUERY, not the k-th batch since the latest
   * restart — a closure counter would reset to zero on every restart
@@ -90,5 +92,79 @@ class CdcReplicaSpec extends SparkSpec {
     val got = TxnApplier.readCurrent(spark, s"$root/target")
       .select(col("k"), col("v")).as[(Long, String)].collect().toMap
     assert(got == (1L to 6L).map(t => t -> s"a$t").toMap)
+  }
+
+  private def target(root: java.nio.file.Path) =
+    Seq(WireReplicaJob.TableTarget("db", "t",
+      Seq("k" -> "long", "seq" -> "long", "v" -> "string"),
+      Seq("k"), "seq", s"$root/target", 2))
+
+  test("a GTID-less upstream (the writers' default) fails the trigger loudly, naming the DN") {
+    val root = java.nio.file.Files.createTempDirectory("graft-cdcrep2")
+    val served = s"$root/served"
+    // the same writer call as writeCall, without a gtidSid: row and XID
+    // frames, no GTID event — the executed set could never advance
+    BinlogWire.writeChangeStreamBinlogFiles(
+      ev((1L to 3L).map(t => (t, s"a$t"))).coalesce(1)
+        .sortWithinPartitions("tso"), tableCols, served, checksummed = true)
+    val srv = new graft.sinks.BinlogDumpServer(served, "repl", "pw")
+    val e = try intercept[StreamingQueryException] {
+      CdcReplica.start(spark, Seq(("dn1", "localhost", srv.port)), "repl",
+        "pw", tableCols, target(root), s"$root/ckpt", s"$root/staging",
+        s"$root/registry", trigger = Trigger.AvailableNow())
+        .awaitTermination()
+    } finally srv.close()
+    val msg = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    assert(msg.contains("DN dn1") && msg.contains("no GTID event") &&
+      msg.contains("LiveReplicaJob.run"), msg)
+    assert(!new java.io.File(s"$root/target").exists())
+  }
+
+  test("heartbeat liveness: an idle heartbeating source never raises no_data on a caught-up replica") {
+    val root = java.nio.file.Files.createTempDirectory("graft-cdcrep3")
+    val served = s"$root/served"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(served))
+    writeCall((1L to 3L).map(t => (t, s"a$t")), "", served, 0)
+    val srv = new graft.sinks.BinlogDumpServer(served, "repl", "pw",
+      idleHeartbeats = true)
+    // zero threshold: any idle trigger counted as silence alarms at once
+    val mon = new StallMonitor(noDataThresholdSeconds = 0)
+    val idle = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryIdle(e: QueryIdleEvent): Unit = {
+        idle.incrementAndGet(); ()
+      }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    val interval = "spark.sql.streaming.noDataProgressEventInterval"
+    val prior = spark.conf.getOption(interval)
+    spark.conf.set(interval, "100ms")
+    spark.streams.addListener(mon)
+    spark.streams.addListener(counter)
+    try {
+      val q = CdcReplica.start(spark, Seq(("dn1", "localhost", srv.port)),
+        "repl", "pw", tableCols, target(root), s"$root/ckpt",
+        s"$root/staging", s"$root/registry", txnsPerCommit = 2)
+      try {
+        q.processAllAvailable()
+        // the listener bus hands each event to mon before the counter
+        val deadline = System.currentTimeMillis() + 60000L
+        while (idle.get() < 2 && System.currentTimeMillis() < deadline)
+          Thread.sleep(50)
+        assert(idle.get() >= 2, "the caught-up query posted no idle event")
+      } finally q.stop()
+      assert(TxnApplier.readCurrent(spark, s"$root/target")
+        .select(col("k")).as[Long].collect().toSet == Set(1L, 2L, 3L))
+      assert(!mon.alarms.exists(_.kind == "no_data"), mon.alarms)
+    } finally {
+      spark.streams.removeListener(counter)
+      spark.streams.removeListener(mon)
+      prior.fold(spark.conf.unset(interval))(spark.conf.set(interval, _))
+      srv.close()
+    }
   }
 }

@@ -4,10 +4,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
-import graft.jobs.{LiveReplicaJob, WireReplicaJob}
+import graft.jobs.WireReplicaJob
 import graft.model.GtidSet
 import graft.operators.TxnApplier
-import graft.sinks.BinlogWire
+import graft.sinks.{BinlogWire, RegistrySidecar}
 
 /** Randomized fuzz over the graft-cdc streaming source: seeded random
   * two-table change streams split across THREE DNs (each its own wire
@@ -170,12 +170,11 @@ class CdcSourceFuzzSpec extends SparkSpec {
               batch, s"$root/stage", targets)
             WireReplicaJob.applyRoutedWithDdl(staged, targets,
               txnsPerCommit = 1 + rnd.nextInt(3))
-            val reg0 = LiveReplicaJob.resumeRegistry(registryDir,
+            val reg0 = RegistrySidecar.resume(registryDir,
               regAt(renamed = false))
-            val evolved = LiveReplicaJob.evolveRegistryFromBatch(staged.ddls,
-              reg0)
+            val evolved = RegistrySidecar.evolve(staged.ddls, reg0)
             if (evolved != reg0)
-              LiveReplicaJob.saveRegistry(registryDir, evolved)
+              RegistrySidecar.save(registryDir, evolved)
             ()
           }
           .trigger(Trigger.AvailableNow()).start()

@@ -4,17 +4,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
-import graft.jobs.{LiveReplicaJob, WireReplicaJob}
+import graft.jobs.WireReplicaJob
 import graft.operators.TxnApplier
-import graft.sinks.BinlogWire
+import graft.sinks.{BinlogWire, RegistrySidecar}
 
 /** The live dump dialogue as a FIRST-CLASS Structured Streaming source:
   * `spark.readStream.format("graft-cdc")` with the executed GTID set as
-  * the Spark-managed offset. The composed lifecycle test mirrors
-  * ReplicaLifecycleSpec (bootstrap → rotation → in-stream RENAME that
-  * rebuilds the routed target → kill → source failover to a renumbered
-  * log → restart) but the position now lives in the QUERY CHECKPOINT
-  * alone — every restart passes no cursor at all, and the failover
+  * the Spark-managed offset. The composed lifecycle test runs the
+  * shipped GTID standing replica, `CdcReplica.start`, through
+  * bootstrap → rotation → in-stream RENAME that rebuilds the routed
+  * target → kill → source failover to a renumbered log → restart; the
+  * position lives in the QUERY CHECKPOINT alone — every restart passes
+  * the ORIGINAL (stale) registry and no cursor at all, and the failover
   * repoint is just fresh endpoint options under the same checkpoint. */
 class CdcSourceSpec extends SparkSpec {
 
@@ -122,34 +123,14 @@ class CdcSourceSpec extends SparkSpec {
       Seq("k"), "seq", s"$root/target", 2))
     val registryDir = s"$root/registry"
 
-    // the streaming replica: source -> foreachBatch routed apply with
-    // in-stream DDL + registry sidecar save (the decode side of the
-    // NEXT batch reads it through the source's registryDir option)
-    def runReplica(port: Int): Unit = {
-      val q = spark.readStream.format("graft-cdc")
-        .option("endpoints", s"dn1@localhost:$port")
-        .option("user", "repl").option("password", "pw")
-        .option("tables", "db.t:k,seq,v")
-        .option("registryDir", registryDir)
-        .load()
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, n: Long) =>
-          val staged = WireReplicaJob.stageRouted(
-            batch, s"$root/stage_decoded", targets)
-          WireReplicaJob.applyRoutedWithDdl(staged, targets,
-            txnsPerCommit = 2, fromTso = None)
-          val reg0 = LiveReplicaJob.resumeRegistry(registryDir, regV1)
-          val evolved = LiveReplicaJob.evolveRegistryFromBatch(staged.ddls,
-            reg0)
-          if (evolved != reg0)
-            LiveReplicaJob.saveRegistry(registryDir, evolved)
-          targets.foreach(t => TxnApplier.vacuum(t.targetDir))
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    // the streaming replica: routed apply with in-stream DDL, the
+    // registry sidecar save (the decode side of the NEXT batch reads it
+    // through the source's registryDir option) and a vacuum per batch
+    def runReplica(port: Int): Unit =
+      CdcReplica.start(spark, Seq(("dn1", "localhost", port)), "repl", "pw",
+        regV1, targets, s"$root/ckpt", s"$root/stage_decoded", registryDir,
+        txnsPerCommit = 2, vacuumEveryBatches = 1,
+        trigger = Trigger.AvailableNow()).awaitTermination()
     def state(): Map[Long, String] =
       TxnApplier.readCurrent(spark, s"$root/target")
         .select($"k", col("v2")).as[(Long, String)].collect().toMap
@@ -173,7 +154,7 @@ class CdcSourceSpec extends SparkSpec {
     try runReplica(srv2.port) finally srv2.close()
     assert(state() == ((1L to 5L).map(t => t -> s"a$t") ++
       Seq(7L -> "b7", 8L -> "b8")).toMap)
-    assert(LiveReplicaJob.resumeRegistry(registryDir, regV1) == regV2)
+    assert(RegistrySidecar.resume(registryDir, regV1) == regV2)
 
     // phase 3: FAILOVER — promoted source, renumbered files, corrupted
     // fully-executed prefix (the restart can only succeed by pruning
