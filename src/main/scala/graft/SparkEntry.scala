@@ -1622,7 +1622,8 @@ object SparkEntry {
         LiveReplicaJob.pollApplyOnceRouted(s,
           Seq(BinlogDumpClient.Endpoint("dn1", "localhost", srv.port,
             "repl", "pw", "binlog.000000", 4L)),
-          tableColsQ, targets, s"$root/stage", txnsPerCommit = 64)
+          tableColsQ, targets, s"$root/stage",
+          WireReplicaJob.applyRouted(_, targets, txnsPerCommit = 64))
         graft.operators.TxnApplier.readCurrent(s, s"$root/customer")
           .agg(count(lit(1)).as("n_rows"),
             sum(col("c_custkey")).as("key_sum"))
@@ -1809,7 +1810,7 @@ object SparkEntry {
       val targets = Seq(WireReplicaJob.TableTarget("app", "orders",
         Seq("k" -> "long", "seq" -> "long", "val" -> "string"),
         Seq("k"), "seq", root, 4))
-      WireReplicaJob.applyRoutedWithDdl(WireReplicaJob.stageRouted(ev,
+      WireReplicaJob.applyRouted(WireReplicaJob.stageRouted(ev,
         Staged.tempDir("q107-stage"), targets), targets, txnsPerCommit = 64)
       TxnApplier.readCurrent(s, root)
         .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("key_sum"),

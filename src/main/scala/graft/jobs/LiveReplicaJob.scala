@@ -8,21 +8,23 @@ import graft.sinks.RegistrySidecar
 import graft.sources.{BinlogDumpClient, ChangeEventSource}
 import graft.sources.BinlogDumpClient.Endpoint
 
-/** The LIVE replica: a standing poll loop over the COM_BINLOG_DUMP
-  * dialogue — the reference's full live hop (MysqlConnection dialing
-  * the DN + DirectLogFetcher draining the dump + the RPL applier,
-  * canal/core/dump/MysqlConnection.java + rpl/applier/
+/** The LIVE (file, pos) replica: a standing poll loop over the
+  * COM_BINLOG_DUMP dialogue — the reference's full live hop
+  * (MysqlConnection dialing the DN + DirectLogFetcher draining the dump
+  * + the RPL applier, canal/core/dump/MysqlConnection.java + rpl/applier/
   * TransactionApplier.java:50-87) as repeated bounded micro-batches:
   * each trigger polls every DN once from its cursor (NON_BLOCK dumps —
   * per-trigger bytes are the DN's new data, never log history), stages
-  * the drained segments, replays them through the txn-preserving
-  * applier, and returns the advanced cursors for the next trigger.
+  * the drained segments, runs the standing replicas' one trigger step
+  * ([[WireReplicaJob.applyTrigger]]: the DDL-aware routed apply in Auto
+  * mode, the registry evolution, the maintenance cadence — the same
+  * step `graft.streaming.CdcReplica` runs per micro-batch), and returns
+  * the advanced cursors for the next trigger.
   *
   * Exactly-once without source replay: the dump transport cannot
-  * rewind, so the guarantees sit where the file replica's do — the
-  * staged segments are the durable trigger input (dial once per
-  * trigger; decode and cursor reads both come off the stage), and
-  * `TxnApplier`'s committed position drops anything a re-poll or
+  * rewind, so the staged segments are the durable trigger input (dial
+  * once per trigger; decode and cursor reads both come off the stage),
+  * and `TxnApplier`'s committed position drops anything a re-poll or
   * crash-restart re-serves at or below the target's last committed
   * TSO. A DN whose cursor names a not-yet-rotated successor file
   * (server answer 1236) simply has no new data this trigger: its
@@ -30,15 +32,16 @@ import graft.sources.BinlogDumpClient.Endpoint
   * active log.
   *
   * Scale shape: one DN = one executor task for the dial+drain; the
-  * stage write, decode, and apply are the same distributed plans the
-  * file replica uses. Cursors are the only driver-side state — one
-  * (file, pos) pair per DN.
+  * stage write, decode, and apply are distributed plans. Cursors are
+  * the only driver-side state — one (file, pos) pair per DN.
   *
   * Why a (file, pos) runner beside [[graft.streaming.CdcReplica]]: the
   * `graft-cdc` source positions by executed GTID set, so it reads only
   * logs that carry GTID events, and the wire writers' default
   * (`gtidSid = None`, which `CdcBinlog.start` and `BinlogXJob` use) is
-  * a GTID-less log. This runner is the dump replica for those logs.
+  * a GTID-less log. This runner is the dump replica for those logs;
+  * dump-from-TSO starts it at a `BinlogCatalog.seekTso` cursor with
+  * `fromTso`.
   */
 object LiveReplicaJob {
 
@@ -55,28 +58,25 @@ object LiveReplicaJob {
   final case class PollNote(dn: String, payloadBytes: Long,
       skip1236: Option[String])
 
-  /** One trigger applying the WHOLE filtered stream, routed per table —
+  /** One trigger over the WHOLE filtered stream, routed per table —
     * the usable replica shape: every DN dials ONCE and its decoded
-    * multi-table batch fans out to per-table targets
+    * multi-table batch goes to `apply` — the routed apply
     * ([[WireReplicaJob.applyRouted]], the reference's SplitApplier
-    * semantics). The per-DN cursor is the ONE shared source position:
-    * it advances only after every table applied, and each table's own
-    * committed-TSO gate makes the replayed prefix idempotent when a
-    * crash lands between tables. The decoded rows are staged once
-    * (`stagingDir`_decoded, [[WireReplicaJob.stageRouted]]), whose write
-    * observes every table's apply input, so routing never re-runs the
-    * wire decode per table; `onDdl` then receives the trigger's DDL
-    * rows, observed by that staging write, in fold order. */
+    * semantics) or [[run]]'s whole trigger step
+    * ([[WireReplicaJob.applyTrigger]]). The per-DN cursor is the ONE
+    * shared source position: it advances only after `apply` returned,
+    * and each table's own committed-TSO gate makes the replayed prefix
+    * idempotent when a crash lands between tables. The decoded rows are
+    * staged once (`stagingDir`_decoded, [[WireReplicaJob.stageRouted]]),
+    * whose write observes every table's apply input and the DDL rows, so
+    * routing never re-runs the wire decode per table. */
   def pollApplyOnceRouted(spark: SparkSession, endpoints: Seq[Endpoint],
       tableCols: Map[(String, String), Seq[String]],
       targets: Seq[WireReplicaJob.TableTarget], stagingDir: String,
-      txnsPerCommit: Int = 8,
-      fromTso: Option[Long] = None, serverId: Long = 12345L,
-      soTimeoutMs: Int = 30000,
+      apply: WireReplicaJob.RoutedBatch => Unit,
+      serverId: Long = 12345L, soTimeoutMs: Int = 30000,
       maxBytesPerPoll: Long = Long.MaxValue,
-      ddlInStream: Boolean = false,
-      onPoll: PollNote => Unit = _ => (),
-      onDdl: Seq[(Long, String, String)] => Unit = _ => ())
+      onPoll: PollNote => Unit = _ => ())
       : Seq[Endpoint] = {
     import spark.implicits._
     WireReplicaJob.validateTargets(targets)
@@ -116,7 +116,6 @@ object LiveReplicaJob {
     // decode never re-runs per table
     val decoded = WireReplicaJob.stageRouted(changes,
       stagingDir + "_decoded", targets)
-    onDdl(decoded.ddls)
     // the apply and the cursor collect are independent consumers of the
     // already-materialized stages (disjoint outputs) — overlap them
     // (guide §2.6). onPoll stays AFTER both: a failed apply must not
@@ -124,12 +123,7 @@ object LiveReplicaJob {
     var polledRows: Array[(String, String, Long, Option[String], Long)] =
       Array.empty
     graft.util.Par.run(Seq(
-      () =>
-        if (ddlInStream)
-          WireReplicaJob.applyRoutedWithDdl(decoded, targets,
-            txnsPerCommit, fromTso)
-        else WireReplicaJob.applyRouted(decoded, targets, txnsPerCommit,
-          fromTso),
+      () => apply(decoded),
       () => polledRows = staged
         .select($"dn", $"nextFile", $"nextPos", $"skip1236",
           length($"payload").cast("long"))
@@ -221,13 +215,17 @@ object LiveReplicaJob {
       }
     }
 
-  /** The (file, pos) deployment call: poll → route-apply → commit
-    * cursors, every `intervalMs`, until `shouldStop` (or
-    * `maxTriggers`). Composes
-    * [[pollApplyOnceRouted]] + the cursor sidecar + an optional
-    * [[graft.streaming.StallMonitor]] no-data alarm — the loop every
-    * caller otherwise hand-writes. Resumes from `cursorDir` first, so
-    * kill-and-restart continues at the last committed trigger without
+  /** The (file, pos) deployment call: poll → the standing trigger step
+    * → commit cursors, every `intervalMs`, until `shouldStop` (or
+    * `maxTriggers`). Composes [[pollApplyOnceRouted]] +
+    * [[WireReplicaJob.applyTrigger]] (the step `CdcReplica` runs per
+    * micro-batch: the DDL-aware routed apply in Auto mode, the wire name
+    * registry's evolution saved to `cursorDir` before the cursors, and
+    * every `vacuumEvery`-th trigger the delta-chain fold and vacuum) +
+    * the cursor sidecar + an optional [[graft.streaming.StallMonitor]]
+    * no-data alarm — the loop every caller otherwise hand-writes.
+    * Resumes cursors and the evolved registry from `cursorDir` first,
+    * so kill-and-restart continues at the last committed trigger without
     * re-draining history; returns the final endpoints.
     *
     * The monitor sees 1 input row for an advancing trigger and 0 for
@@ -245,38 +243,21 @@ object LiveReplicaJob {
       txnsPerCommit: Int = 8, fromTso: Option[Long] = None,
       serverId: Long = 12345L, soTimeoutMs: Int = 30000,
       maxBytesPerPoll: Long = Long.MaxValue,
-      ddlInStream: Boolean = false,
       vacuumEvery: Long = 0L): Seq[Endpoint] = {
     var eps = resume(cursorDir, endpoints)
-    var reg = RegistrySidecar.resume(cursorDir, tableCols)
     var n = 0L
     val c1236 = scala.collection.mutable.Map.empty[String, Int]
     while (!shouldStop() && n < maxTriggers) {
       val notes = scala.collection.mutable.ArrayBuffer.empty[PollNote]
-      var ddls = Seq.empty[(Long, String, String)]
-      val next = pollApplyOnceRouted(spark, eps, reg, targets,
-        stagingDir, txnsPerCommit, fromTso, serverId, soTimeoutMs,
-        maxBytesPerPoll, ddlInStream, notes += _, ddls = _)
+      val next = pollApplyOnceRouted(spark, eps,
+        RegistrySidecar.resume(cursorDir, tableCols), targets, stagingDir,
+        WireReplicaJob.applyTrigger(_, targets, tableCols, cursorDir,
+          n, txnsPerCommit, fromTso, vacuumEvery),
+        serverId, soTimeoutMs, maxBytesPerPoll, notes += _)
       note1236(c1236,
         notes.flatMap(x => x.skip1236.map(x.dn -> _)).toMap,
         eps.map(_.dn), loopId)
-      if (ddlInStream) {
-        // the evolved names persist BEFORE the cursors, so a crash
-        // between the two replays the DDL segment against them
-        val evolved = RegistrySidecar.evolve(ddls, reg)
-        if (evolved != reg) {
-          reg = evolved
-          RegistrySidecar.save(cursorDir, reg)
-        }
-      }
       saveCursors(cursorDir, next)
-      // reclaim superseded target versions on a schedule: a rebuild-
-      // triggering DDL (MODIFY/CHANGE/RENAME) doubles a target on disk
-      // until vacuum runs, and a long-lived replica seeing periodic
-      // re-type DDL would otherwise accumulate versions forever.
-      // vacuumEvery=1 reclaims at the SAME trigger a rebuild lands in.
-      if (vacuumEvery > 0 && (n + 1) % vacuumEvery == 0)
-        targets.foreach(t => graft.operators.TxnApplier.vacuum(t.targetDir))
       // liveness for the silence clock: an advancing cursor OR any
       // served frames (a caught-up idle poll against a heartbeating
       // server carries a HEARTBEAT frame — the dialogue is alive, the

@@ -123,8 +123,9 @@ object ValidationJob {
   }
 
   /** Reconciliation batch from the diff rows: the change stream that,
-    * applied to dst (Appliers.upsert semantics), converges it to src —
-    * missing→INSERT, mismatched→UPDATE, orphan→DELETE. */
+    * applied to dst per key (a replica apply: the row's image supersedes,
+    * a DELETE removes), converges it to src — missing→INSERT,
+    * mismatched→UPDATE, orphan→DELETE. */
   def reconciliationBatch(diffs: DataFrame): DataFrame =
     diffs.withColumn("op",
       when(col("diff_kind") === "missing", "INSERT")

@@ -1,45 +1,37 @@
 package graft.jobs
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.TxnApplier
-import graft.sinks.BinlogWire
+import graft.sinks.RegistrySidecar
 
-/** The standing replica fed by the WIRE, not by a parquet change stream:
-  * tail a directory of MySQL binlog files (the dump service's output),
-  * decode each micro-batch through the incremental parser, and replay it
-  * through the transaction-preserving applier — the reference's full
-  * dumper → replica hop (DumperSlave serving MysqlBinlogExtractor →
-  * TransactionApplier, polardbx-cdc-rpl/.../extractor/
-  * MysqlBinlogExtractor.java:55, applier/TransactionApplier.java:50-87)
-  * as one Spark standing query over the engine's own wire format.
+/** The routed replica apply: a decoded multi-table change batch, staged
+  * once ([[stageRouted]]), folds its DDL into the routed targets'
+  * schemas and routes its row events to per-table transaction-preserving
+  * targets ([[applyRouted]]) — the reference's replica applier
+  * (DdlApplyHelper beside SplitApplier's row routing, polardbx-cdc-rpl/
+  * .../applier/SplitApplier.java:43-146, TransactionApplier.java:50-87).
+  * Both standing replicas run it through one trigger step
+  * ([[applyTrigger]]): the GTID `graft.streaming.CdcReplica` and the
+  * (file, pos) dump runner [[LiveReplicaJob.run]].
   *
-  * Exactly-once across restarts composes from two independent gates:
-  * file DISCOVERY is the checkpointed binaryFile source (a restart
-  * resumes at the first unseen wire file), and APPLY is `TxnApplier`'s
-  * committed position (a replayed or half-applied micro-batch skips
-  * every transaction at or below the target's last committed TSO). A
-  * crash at any point — mid-decode, mid-apply, between batch and
-  * checkpoint commit — lands on a transaction boundary some source
-  * commit produced.
+  * Exactly-once composes from two independent gates: the caller's
+  * source position (Spark's offset log, or the runner's cursor sidecar)
+  * advances only after the trigger step returns, and each target's
+  * committed position drops every replayed transaction at or below its
+  * last committed TSO. A crash at any point lands on a transaction
+  * boundary some source commit produced.
   *
-  * PRODUCER CONTRACT — one transaction per wire file: the apply gate
-  * above makes a txn split across two files UNSAFE (if
-  * `maxFilesPerTrigger` lands the halves in different triggers, the
-  * first half commits and advances the gate, and the second half
-  * replays at-or-below it and is silently dropped). Wire producers must
-  * keep txns whole per file with txn-grouped range partitioning
-  * (`MergeSort.sortedRunsGrouped` on the tso / (commitTso, txnId) key —
-  * equal keys never split across range partitions); the writers
-  * enforce it and fail the write loudly on a split or interleaved txn
+  * INPUT CONTRACT — whole transactions per batch: the apply gate above
+  * makes a txn split across two batches UNSAFE (the first half commits
+  * and advances the gate, and the replayed second half is silently
+  * dropped). The dump client cuts a capped drain only at a transaction
+  * boundary; a consumer tailing wire FILES (`BinlogWire.tailBinlogFiles`)
+  * needs one transaction per file, which the writers enforce
   * (`BinlogWire.writeTxnFramedBinlogFiles` mark-range check,
-  * `writeChangeStreamBinlogFiles` file-boundary txn check). The same
-  * gate also requires files to ARRIVE in rotation order: the file
-  * source delivers by modification time, so the writers stamp each
-  * file's mtime monotonic with its name — a producer writing wire
-  * files by other means must preserve that property.
+  * `writeChangeStreamBinlogFiles` file-boundary txn check), and files
+  * arriving in rotation order, which the writers' monotonic mtimes give.
   */
 object WireReplicaJob {
 
@@ -147,75 +139,17 @@ object WireReplicaJob {
       }
   }
 
-  /** Route one decoded multi-table batch to per-table `TxnApplier`
-    * targets — the reference's SplitApplier restated: the decode side
-    * already emits every table's rows (`fromWireSegments` takes the
-    * full TABLE_MAP registry); this is the missing routing layer, so a
-    * two-table DN stream applies through ONE poll/trigger instead of
-    * two loops dialing the same DN twice.
-    *
-    * Position-gate discipline (what makes the routing crash-safe
-    * behind ONE source cursor): every target keeps its OWN committed
-    * lastTso, and the caller advances the shared source cursor
-    * (file/pos, or the streaming checkpoint) only after THIS call
-    * returns. A crash after table A applied but before table B leaves
-    * the cursor unmoved; the re-served batch replays into A's gate
-    * (skipped, at-or-below its lastTso) and applies to B — per-table
-    * exactly-once without cross-table coordination.
-    *
-    * `batch` comes from [[stageRouted]]: each target reads the staged
-    * frame once in its one write query, so no target re-runs the wire
-    * decode. Only the targets whose table the batch carries apply:
-    * skipping an absent table is safe, its committed lastTso gate only
-    * moves when rows apply. */
-  def applyRouted(batch: RoutedBatch, targets: Seq[TableTarget],
-      txnsPerCommit: Int = 8, fromTso: Option[Long] = None,
-      maxParallelTables: Int = 4,
-      applyMode: TxnApplier.ApplyMode = TxnApplier.ApplyMode.Cow,
-      compactAfter: Int = 32,
-      compactMaxBuckets: Int = Int.MaxValue): Unit = {
-    validateTargets(targets)
-    val decoded = batch.frame
-    // configured-but-quiet targets still bootstrap (metadata-only,
-    // limit 0) on the FIRST batch: the schema sidecar must exist before
-    // a table's first rows arrive, because maintenance cadences
-    // (compact/vacuum over every configured target) and the DDL fold
-    // read it — deferring bootstrap to first-rows would turn an early
-    // ALTER into a crash loop. One driver FS check per bootstrapped
-    // target per batch; the one-time empty write is schema-only.
-    targets.filter(t => TxnApplier.currentCommit(t.targetDir).isEmpty)
-      .foreach { t =>
-        val typed = shape(decoded, t.schemaName, t.tableName,
-          t.colTypes, keyCols = t.keyCols)
-        TxnApplier.bootstrap(typed.limit(0).drop("op", "tso"),
-          t.keyCols, t.targetDir, t.nBuckets,
-          initialTso = fromTso.getOrElse(0L))
-      }
-    inParallel(targets.filter(t => batch.pairs.contains(t.table)),
-        maxParallelTables) { t =>
-      // the target's CURRENT schema and persisted rename lineage, not
-      // the caller's snapshot: after an evolution/rebuild in an earlier
-      // batch, a stale TableTarget (or a stale decode registry naming a
-      // renamed column by its old name) must not drop or null values
-      applyOne(decoded, batch.pairs(t.table), t, colTypesOf(t),
-        txnsPerCommit, fromTso, TxnApplier.renameLineage(t.targetDir),
-        applyMode, compactAfter, compactMaxBuckets)
-    }
-  }
-
+  /** One present table's apply, shaped by its target's CURRENT schema
+    * and rename lineage (not the caller's snapshot: after an evolution
+    * or rebuild in an earlier batch, a stale TableTarget or a stale
+    * decode registry naming a renamed column by its old name must not
+    * drop or null values). */
   private def applyOne(decoded: DataFrame, pairs: Seq[(Long, Int)],
-      t: TableTarget, colTypes: Seq[(String, String)], txnsPerCommit: Int,
-      fromTso: Option[Long],
-      aliases: Map[String, Seq[String]] = Map.empty,
-      applyMode: TxnApplier.ApplyMode = TxnApplier.ApplyMode.Cow,
-      compactAfter: Int = 32,
-      compactMaxBuckets: Int = Int.MaxValue): Unit = {
-    val typed = shape(decoded, t.schemaName, t.tableName, colTypes,
+      t: TableTarget, aliases: Map[String, Seq[String]],
+      txnsPerCommit: Int, applyMode: TxnApplier.ApplyMode,
+      compactAfter: Int, compactMaxBuckets: Int): Unit = {
+    val typed = shape(decoded, t.schemaName, t.tableName, colTypesOf(t),
       aliases, t.keyCols)
-    if (TxnApplier.currentCommit(t.targetDir).isEmpty)
-      TxnApplier.bootstrap(typed.limit(0).drop("op", "tso"),
-        t.keyCols, t.targetDir, t.nBuckets,
-        initialTso = fromTso.getOrElse(0L))
     val input = TxnApplier.Probed(typed, pairs)
     val delta = TxnApplier.useDelta(t.targetDir, applyMode)
     TxnApplier.recordModeDecision(t.targetDir, delta)
@@ -275,12 +209,31 @@ object WireReplicaJob {
       ()
     }
 
-  /** [[applyRouted]] plus DDL-IN-STREAM: the decoded batch's DDL
-    * events evolve the routed targets' schemas before the row events
-    * apply — the reference's replica DDL path (rpl applier dispatching
-    * DDL through DdlApplyHelper alongside SplitApplier's row routing).
+  /** Apply one decoded multi-table batch: fold its DDL into the routed
+    * targets' schemas, then route its row events to per-table
+    * `TxnApplier` targets — the reference's SplitApplier restated, with
+    * DdlApplyHelper's DDL path beside it: the decode side already emits
+    * every table's rows (`fromWireSegments` takes the full TABLE_MAP
+    * registry), so a multi-table DN stream applies through ONE
+    * poll/trigger.
     *
-    * Semantics and limits, stated loudly:
+    * Position-gate discipline (what makes the routing crash-safe behind
+    * ONE source cursor): every target keeps its OWN committed lastTso,
+    * and the caller advances the shared source cursor only after THIS
+    * call returns. A crash after table A applied but before table B
+    * leaves the cursor unmoved; the re-served batch replays into A's
+    * gate (skipped) and applies to B — per-table exactly-once without
+    * cross-table coordination.
+    *
+    * `batch` comes from [[stageRouted]]: each present target reads the
+    * staged frame once in its one write query, so no target re-runs the
+    * wire decode; a target whose table the batch does not carry skips
+    * (its gate only moves when rows apply). Configured-but-quiet targets
+    * still bootstrap (schema-only) on the FIRST batch: the schema
+    * sidecar must exist before a table's first rows arrive, because the
+    * maintenance cadence and the DDL fold read it.
+    *
+    * DDL semantics and limits, stated loudly:
     *  - ADD COLUMN: metadata-only evolution
     *    ([[TxnApplier.evolveSchema]]); rows decoded BEFORE the DDL
     *    carry no value for the new column and apply as NULL (string
@@ -296,15 +249,14 @@ object WireReplicaJob {
     *    meta/PolarDbXTableMetaManager.java:103). Rows whose string
     *    images carry the OLD name — decoded before the rename in the
     *    same batch, or in ANY later batch by a consumer whose decode
-    *    registry is stale (the file-tail streaming replica) — land
-    *    intact through an old-name fallback chain, PERSISTED in the
-    *    target's `_renames` sidecar so the chain survives batches and
-    *    restarts; ADDing a column whose name an old chain holds
-    *    evicts that name (it now belongs to the new column).
+    *    registry is stale — land intact through an old-name fallback
+    *    chain, PERSISTED in the target's `_renames` sidecar so the chain
+    *    survives batches and restarts; ADDing a column whose name an old
+    *    chain holds evicts that name (it now belongs to the new column).
     *  - MODIFY/CHANGE/RENAME touching a KEY or the sequence column:
-    *    still refused loudly — the caller's TableTarget names them,
-    *    and silently re-keying a routed target would orphan its
-    *    bucketing contract.
+    *    refused loudly — the caller's TableTarget names them, and
+    *    silently re-keying a routed target would orphan its bucketing
+    *    contract.
     *  - RENAME TABLE / ALTER ... RENAME TO on a routed table: refused
     *    loudly — the decode registry would follow the new name while
     *    the routing still matched the old one, silently stopping
@@ -316,12 +268,10 @@ object WireReplicaJob {
     * arrive in `batch.ddls`, observed by the staging write
     * ([[stageRouted]]) at no job of their own. Idempotent across batch
     * replays: re-adding an identical column or re-dropping an absent
-    * one no-ops, so the foreachBatch replay story is unchanged. Targets
-    * are bootstrapped (schema-only) BEFORE the fold so evolution
-    * always has a sidecar to evolve; row apply then shapes each table
-    * with its target's CURRENT (possibly evolved) schema — the target
-    * IS the schema state, callers never track evolution. */
-  def applyRoutedWithDdl(batch: RoutedBatch, targets: Seq[TableTarget],
+    * one no-ops. Row apply then shapes each table with its target's
+    * CURRENT (possibly evolved) schema — the target IS the schema state,
+    * callers never track evolution. */
+  def applyRouted(batch: RoutedBatch, targets: Seq[TableTarget],
       txnsPerCommit: Int = 8, fromTso: Option[Long] = None,
       maxParallelTables: Int = 4,
       applyMode: TxnApplier.ApplyMode = TxnApplier.ApplyMode.Cow,
@@ -349,8 +299,10 @@ object WireReplicaJob {
     // mark is its own sidecar (TxnApplier.ddlPosition) because row
     // position only advances with row transactions. A crash between a
     // statement's effect and its position commit replays just that
-    // statement, which the hasOld/type checks absorb as a no-op.
-    val ddlGate: Map[(String, String), Long] = targets.map(t =>
+    // statement, which the hasOld/type checks absorb as a no-op. Lazy:
+    // first read at the first routed ALTER, before this batch commits
+    // any statement, so a batch without DDL reads no sidecar for it.
+    lazy val ddlGate: Map[(String, String), Long] = targets.map(t =>
       t.table -> math.max(
         TxnApplier.currentCommit(t.targetDir)
           .map(_.lastTso).getOrElse(0L),
@@ -520,92 +472,55 @@ object WireReplicaJob {
     }
     inParallel(targets.filter(t => batch.pairs.contains(t.table)),
         maxParallelTables) { t =>
-      applyOne(decoded, batch.pairs(t.table), t, colTypesOf(t),
-        txnsPerCommit, fromTso,
-        renameAliases(t.table), applyMode, compactAfter,
-        compactMaxBuckets)
+      applyOne(decoded, batch.pairs(t.table), t, renameAliases(t.table),
+        txnsPerCommit, applyMode, compactAfter, compactMaxBuckets)
     }
   }
 
   private def parseSqlType(t: String): org.apache.spark.sql.types.DataType =
     org.apache.spark.sql.types.StructType.fromDDL(s"c $t").head.dataType
 
-  /** Start the wire replica for ONE replicated table.
-    *
-    * @param colTypes ordered (column, Spark SQL type) pairs for the
-    *   decoded string images — the replica's row shape. Must include
-    *   `keyCols` and `seqCol`.
-    * @param tableCols the wire TABLE_MAP column-name registry passed to
-    *   the decoder (schema/table → column names), as written by the
-    *   encoding sink.
-    * @param fromTso dump-from-TSO start cursor: replay only transactions
-    *   with tso > fromTso. `BinlogCatalog.seekTso` locates the start
-    *   FILE (files wholly below it are listed but never opened — decode
-    *   cost is O(suffix)), and the apply gate's initial committed
-    *   position is set to fromTso so the seek file's own prefix (txns at
-    *   or below the cursor) skips — the reference's
-    *   SearchTsoEventHandleV2 → dump hop. File granularity prunes I/O;
-    *   the tso gate is the exact boundary (decode is file-scoped because
-    *   TABLE_MAP state is declared per file).
-    */
-  def start(spark: SparkSession, wireDir: String,
-      tableCols: Map[(String, String), Seq[String]],
-      schemaName: String, tableName: String,
-      colTypes: Seq[(String, String)], keyCols: Seq[String],
-      seqCol: String, targetDir: String, checkpointDir: String,
-      nBuckets: Int, txnsPerCommit: Int = 8,
-      continuous: Option[String] = None,
-      maxFilesPerTrigger: Int = 16,
-      fromTso: Option[Long] = None): StreamingQuery =
-    startRouted(spark, wireDir, tableCols,
-      Seq(TableTarget(schemaName, tableName, colTypes, keyCols, seqCol,
-        targetDir, nBuckets)),
-      checkpointDir, txnsPerCommit, continuous, maxFilesPerTrigger,
-      fromTso)
-
-  /** Start the wire replica for a SET of replicated tables off one
-    * stream — each micro-batch decodes the wire files once and routes
-    * per-table through [[applyRouted]]. The decoded batch is staged
-    * through [[stageRouted]] (under the checkpoint dir), whose write
-    * observes every target's apply input, so N targets read the stage,
-    * never re-run the wire decode; a replayed trigger overwrites the
-    * stage byte-identically, and every target's own position gate drops
-    * what it already applied — see [[applyRouted]] for the crash-safety
-    * argument. */
-  def startRouted(spark: SparkSession, wireDir: String,
-      tableCols: Map[(String, String), Seq[String]],
-      targets: Seq[TableTarget], checkpointDir: String,
-      txnsPerCommit: Int = 8,
-      continuous: Option[String] = None,
-      maxFilesPerTrigger: Int = 16,
-      fromTso: Option[Long] = None,
-      ddlInStream: Boolean = false): StreamingQuery = {
-    // misconfiguration fails at START, not on the first trigger
-    validateTargets(targets)
-    val startFile = fromTso.map { t =>
-      graft.sinks.BinlogCatalog.seekTso(spark, wireDir, t)._1
-    }.filter(_.nonEmpty)
-    val decoded = BinlogWire.tailBinlogFiles(spark, wireDir, tableCols,
-      maxFilesPerTrigger, minFileName = startFile)
-    val trigger = continuous match {
-      case Some(interval) => Trigger.ProcessingTime(interval)
-      case None => Trigger.AvailableNow()
-    }
-    decoded.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // no isEmpty pre-check: it would decode every wire file a first
-        // time just to count; bootstrap is schema-only (limit 0) and an
-        // empty stage probes no table, so no apply runs
-        val input =
-          stageRouted(batch, s"$checkpointDir/_route_stage", targets)
-        if (ddlInStream)
-          applyRoutedWithDdl(input, targets, txnsPerCommit, fromTso)
-        else applyRouted(input, targets, txnsPerCommit, fromTso)
-        ()
+  /** One standing replica trigger, the step both runners share
+    * (`graft.streaming.CdcReplica`'s micro-batch body and
+    * [[LiveReplicaJob.run]]):
+    *  1. [[applyRouted]] in `applyMode` — Auto by default: the standing
+    *     consumer is exactly the workload whose COW applies go O(n²) once
+    *     a target grows (uniform keys touch every bucket every trigger;
+    *     see `TxnApplier.applyBatchDelta`), while a SMALL table's COW
+    *     apply beats delta's fixed per-trigger cost, so the mode flips
+    *     per table at the measured size crossover;
+    *  2. the wire name registry's evolution by the batch's DDL, saved to
+    *     `registryDir` ([[RegistrySidecar]]) — the NEXT trigger's decode
+    *     reads it, and it lands before the caller commits its own
+    *     position, so a crash between the two replays the DDL against
+    *     the evolved names;
+    *  3. every `maintainEvery`-th trigger (0 = never; `trigger` is the
+    *     runner's trigger number, Spark's monotonic batchId for the
+    *     streaming replica), each target's delta chains fold
+    *     (`compactBuckets`, bounded by `compactMaxBuckets`) and then
+    *     vacuum reclaims the superseded versions — a chain references
+    *     every dir it overlays, so vacuum alone reclaims nothing from it,
+    *     and a rebuild-triggering DDL doubles a target on disk until
+    *     vacuum runs. Both no-op on un-bootstrapped targets. */
+  def applyTrigger(batch: RoutedBatch, targets: Seq[TableTarget],
+      tableCols: Map[(String, String), Seq[String]], registryDir: String,
+      trigger: Long, txnsPerCommit: Int, fromTso: Option[Long],
+      maintainEvery: Long,
+      applyMode: TxnApplier.ApplyMode = TxnApplier.ApplyMode.Auto(),
+      compactAfter: Int = 32,
+      compactMaxBuckets: Int = Int.MaxValue): Unit = {
+    applyRouted(batch, targets, txnsPerCommit, fromTso,
+      applyMode = applyMode, compactAfter = compactAfter,
+      compactMaxBuckets = compactMaxBuckets)
+    val reg = RegistrySidecar.resume(registryDir, tableCols)
+    val evolved = RegistrySidecar.evolve(batch.ddls, reg)
+    if (evolved != reg) RegistrySidecar.save(registryDir, evolved)
+    if (maintainEvery > 0 && (trigger + 1) % maintainEvery == 0)
+      targets.foreach { t =>
+        TxnApplier.compactBuckets(batch.frame.sparkSession, t.targetDir,
+          compactMaxBuckets)
+        TxnApplier.vacuum(t.targetDir)
       }
-      .start()
   }
 
   private[jobs] def validateTargets(targets: Seq[TableTarget]): Unit = {

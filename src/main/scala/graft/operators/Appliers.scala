@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Set-based merge primitives of the RPL appliers: last-image collapse,
-  * upsert onto a target snapshot, and the key-hash bucket id.
+/** Set-based merge primitives of the RPL appliers: last-image collapse
+  * and the key-hash bucket id.
   *
   * Reference semantics (polardbx-cdc-rpl/.../applier/): MergeApplier
   * collapses the batch to final images per PK, then batch REPLACE INTO /
@@ -36,20 +36,6 @@ object Appliers {
           .when(col("__has_insert") === 1, lit("REPLACE"))
           .otherwise(lit("UPDATE")))
       .drop("__rn", "__has_insert")
-  }
-
-  /** Set-based upsert: apply final images to a target snapshot.
-    * target ∪ batch resolved per key: DELETE removes, REPLACE/UPDATE
-    * supersedes, untouched target rows carry over. One full-outer-free
-    * formulation: anti-join target to touched keys, union survivors. */
-  def upsert(target: DataFrame, finalImages: DataFrame, keyCols: Seq[String],
-      opCol: String = "effective_op"): DataFrame = {
-    val dataCols = target.columns.toSeq
-    val untouched = target.join(
-      finalImages.select(keyCols.map(col): _*), keyCols, "left_anti")
-    val upserts = finalImages.filter(col(opCol) =!= "DELETE")
-      .select(dataCols.map(col): _*)
-    untouched.unionByName(upserts)
   }
 
   /** Key-hash bucket id — the bucketed target's partition column. Stable

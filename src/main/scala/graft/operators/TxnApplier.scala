@@ -20,7 +20,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * that audit transactional consistency — the reference's bank-transfer
   * QA asserts a constant total balance at every observable target state
   * (polardbx-cdc-transfer/.../Bank.java:90-92,175-198). A plain merge
-  * apply (Appliers.mergeToFinalImages + upsert over a batch) converges to
+  * apply (final images per key over a whole batch, the specs' converge
+  * oracle) converges to
   * the same final state but can expose half of txn A with half of txn B
   * when a batch boundary splits a transaction.
   *
@@ -368,10 +369,10 @@ object TxnApplier {
     * name, the older names it has carried (newest first). The row
     * apply reads a renamed column through this fallback chain, so
     * string images decoded under a STALE registry (a consumer whose
-    * tableCols predate the rename — e.g. the file-tail streaming
-    * replica across batches) still land their values instead of
+    * tableCols predate the rename — e.g. a wire-file tail across
+    * batches) still land their values instead of
     * silently nulling out. Maintained by the DDL fold
-    * (WireReplicaJob.applyRoutedWithDdl): renames append, and ADDing
+    * (WireReplicaJob.applyRouted): renames append, and ADDing
     * a column whose name an old chain holds evicts that name (the
     * name is REUSED for a different column; old images under it must
     * no longer feed the renamed one). */
@@ -412,7 +413,7 @@ object TxnApplier {
     * in the evolved schema too — the replica semantics (MySQL's
     * instant ADD COLUMN renders old rows with the new column as well).
     * Safe moves only: callers must not rename or re-type columns this
-    * way (old files would mis-read) — `WireReplicaJob.applyRoutedWithDdl`
+    * way (old files would mis-read) — `WireReplicaJob.applyRouted`
     * enforces the restriction loudly. */
   def evolveSchema(dir: String, newSchema: StructType): Unit = {
     val root = new Path(dir)

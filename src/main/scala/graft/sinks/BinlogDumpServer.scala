@@ -57,6 +57,9 @@ final class BinlogDumpServer(wireDir: String, user: String,
   private val accepter = new Thread(() => {
     try while (!server.isClosed) {
       val sock = server.accept()
+      // a caught-up dump flushes as several small packets: without this
+      // each waits out the client's delayed ACK (~40 ms per dial)
+      sock.setTcpNoDelay(true)
       sessionsServed.incrementAndGet()
       val t = new Thread(() => serve(sock), s"binlog-dump-${sock.getPort}")
       t.setDaemon(true)

@@ -79,7 +79,7 @@ object RegistrySidecar {
     * (tso, schemaName, ddl) into `reg`. The rows come from the batch's
     * staging write ([[graft.jobs.WireReplicaJob.stageRouted]], or the
     * Global Binlog's own stage observation) in (tso, ddl) order — the
-    * SAME order as applyRoutedWithDdl's target-side fold, so equal-tso
+    * SAME order as applyRouted's target-side fold, so equal-tso
     * statements cannot fold differently into registry vs target schema
     * across a restart. */
   def evolve(ddls: Seq[(Long, String, String)],

@@ -407,6 +407,9 @@ object BinlogDumpClient {
       coverage: Option[(graft.model.GtidSet, graft.model.GtidSet)] = None)
       : (Array[Byte], Boolean) = {
     val sock = new java.net.Socket()
+    // no Nagle: the dialogue is small request/answer packets, and a
+    // delayed ACK would hold each for ~40 ms
+    sock.setTcpNoDelay(true)
     sock.connect(new java.net.InetSocketAddress(host, port), soTimeoutMs)
     sock.setSoTimeout(soTimeoutMs)
     try {

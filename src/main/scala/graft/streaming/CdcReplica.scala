@@ -5,7 +5,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.jobs.WireReplicaJob
 import graft.operators.TxnApplier
-import graft.sinks.RegistrySidecar
 
 /** THE GTID standing replica: the `graft-cdc` source wired to the
   * routed transaction-preserving apply as ONE checkpointed
@@ -16,27 +15,27 @@ import graft.sinks.RegistrySidecar
   * runner in `graft.jobs` (the refusal names it).
   *
   * Per micro-batch: the decoded multi-table change batch stages once
-  * ([[WireReplicaJob.stageRouted]], so the multi-pass DDL-aware routing
-  * never re-reads the source), and that one staging write also observes
-  * each routed table's (tso, bucket) pairs and the DDL rows, so routing,
-  * both DDL folds and every table's commit plan run no job of their
-  * own. The batch applies through
-  * [[WireReplicaJob.applyRoutedWithDdl]] (per-table committed-TSO gates
-  * make replayed batches exactly-once; in-stream ADD/DROP evolve
-  * metadata-only, MODIFY/CHANGE/RENAME rebuild in place), the wire name
-  * registry's evolution persists to the `registryDir` sidecar (the NEXT
-  * batch's decode reads it through the source's registryDir option),
-  * and an optional vacuum schedule reclaims rebuild-superseded target
-  * versions. What remains per trigger is the source poll, the staging
-  * write and one write query per present table.
+  * ([[WireReplicaJob.stageRouted]]), and that one staging write also
+  * observes each routed table's (tso, bucket) pairs and the DDL rows, so
+  * routing, both DDL folds and every table's commit plan run no job of
+  * their own. The batch then runs the standing replicas' one trigger
+  * step, [[WireReplicaJob.applyTrigger]]: the DDL-aware routed apply
+  * (per-table committed-TSO gates make replayed batches exactly-once;
+  * in-stream ADD/DROP evolve metadata-only, MODIFY/CHANGE/RENAME rebuild
+  * in place) in `applyMode` (Auto by default), the wire name registry's
+  * evolution persisted to the `registryDir` sidecar (the NEXT batch's
+  * decode reads it through the source's registryDir option), and an
+  * optional maintenance cadence that folds delta chains and vacuums.
+  * What remains per trigger is the source poll, the staging write and
+  * one write query per present table.
   *
   * Restart story: kill the query, start it again with the same
   * `checkpointDir` — the offset log holds the per-DN executed GTID
   * sets, so the replica resumes at the last committed batch; repoint
   * `endpoints` at a promoted source across the restart and the same
   * checkpoint keeps the position (GTID cursors name transactions, not
-  * files). The registry sidecar ([[RegistrySidecar]]) carries column
-  * renames across the restart.
+  * files). The registry sidecar ([[graft.sinks.RegistrySidecar]])
+  * carries column renames across the restart.
   *
   * Liveness: a [[StallMonitor]] added with `spark.streams.addListener`
   * counts an idle trigger whose every dialed DN answered with a
@@ -98,39 +97,13 @@ object CdcReplica {
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val staged = WireReplicaJob.stageRouted(batch, stagingDir, targets)
-        // applyMode defaults AUTO here — the standing consumer is
-        // exactly the workload whose COW applies go O(n²) once the
-        // target grows (uniform keys touch every bucket every trigger;
-        // see TxnApplier.applyBatchDelta), but a SMALL table's COW
-        // apply beats delta's fixed per-trigger pipeline cost, so the
-        // mode flips per table at the measured size crossover
-        WireReplicaJob.applyRoutedWithDdl(staged, targets, txnsPerCommit,
-          fromTso = None, applyMode = applyMode,
-          compactAfter = compactAfter,
-          compactMaxBuckets = compactMaxBuckets)
-        val reg0 = RegistrySidecar.resume(registryDir, tableCols)
-        val evolved = RegistrySidecar.evolve(staged.ddls, reg0)
-        if (evolved != reg0) RegistrySidecar.save(registryDir, evolved)
-        // cadence off Spark's MONOTONIC batchId (not a closure counter,
-        // which would reset on every query restart and drift the
-        // schedule): vacuum fires on batches k-1, 2k-1, … regardless of
-        // how many restarts the run absorbed
-        if (vacuumEveryBatches > 0 &&
-            (batchId + 1) % vacuumEveryBatches == 0)
-          targets.foreach { t =>
-            // delta chains reference every dir they overlay — fold them
-            // first so vacuum has superseded dirs to reclaim (compaction
-            // otherwise only fires at the compactAfter bound); the fold
-            // honors compactMaxBuckets so a bounded-pause deployment
-            // doesn't cliff at vacuum cadence either (unreclaimed
-            // chains just wait for the next cadence); no-ops on
-            // plain/COW and un-bootstrapped targets
-            TxnApplier.compactBuckets(spark, t.targetDir,
-              compactMaxBuckets)
-            TxnApplier.vacuum(t.targetDir)
-          }
-        ()
+        // the maintenance cadence runs off Spark's MONOTONIC batchId (not
+        // a closure counter, which would reset on every query restart and
+        // drift the schedule)
+        WireReplicaJob.applyTrigger(
+          WireReplicaJob.stageRouted(batch, stagingDir, targets), targets,
+          tableCols, registryDir, batchId, txnsPerCommit, None,
+          vacuumEveryBatches, applyMode, compactAfter, compactMaxBuckets)
       }
       .trigger(trigger)
       .start()

@@ -80,12 +80,8 @@ class GapRepairJobSpec extends SparkSpec {
     val target = WireReplicaJob.TableTarget("db", "t",
       Seq("k" -> "bigint", "seq" -> "bigint", "v" -> "string"),
       Seq("k"), "seq", s"$root/target", 2)
-    def consume(): Unit = {
-      val q = WireReplicaJob.start(spark, out, reg, "db", "t",
-        target.colTypes, target.keyCols, target.seqCol,
-        target.targetDir, s"$root/replica-ckpt", target.nBuckets)
-      q.awaitTermination()
-    }
+    def consume(): Unit = WireTail.replicate(spark, out, reg,
+      Seq(target), s"$root/replica-ckpt")
     def state(): Map[Long, String] =
       TxnApplier.readCurrent(spark, target.targetDir)
         .select($"k", $"v").as[(Long, String)].collect().toMap

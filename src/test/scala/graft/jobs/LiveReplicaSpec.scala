@@ -76,7 +76,8 @@ class LiveReplicaSpec extends SparkSpec {
         "repl", "pw", "binlog.000000", 4L))
       def trigger(eps: Seq[BinlogDumpClient.Endpoint]) =
         LiveReplicaJob.pollApplyOnceRouted(spark, eps, tableCols,
-          Seq(accounts(target)), staging, txnsPerCommit = 2)
+          Seq(accounts(target)), staging, WireReplicaJob.applyRouted(_,
+            Seq(accounts(target)), txnsPerCommit = 2))
 
       // trigger 1: the first two files apply; cursor lands on the
       // successor the rotate chain names
@@ -112,7 +113,9 @@ class LiveReplicaSpec extends SparkSpec {
       var advanced = true
       while (advanced && triggers < 32) {
         val next = LiveReplicaJob.pollApplyOnceRouted(spark, eps,
-          tableCols, Seq(accounts(target2)), staging2, txnsPerCommit = 2,
+          tableCols, Seq(accounts(target2)), staging2,
+          WireReplicaJob.applyRouted(_, Seq(accounts(target2)),
+            txnsPerCommit = 2),
           maxBytesPerPoll = 400L)
         advanced = next != eps
         eps = next
@@ -166,7 +169,8 @@ class LiveReplicaSpec extends SparkSpec {
         srv.port, "repl", "pw", "binlog.000000", 4L))
       def poll(eps: Seq[BinlogDumpClient.Endpoint]) =
         LiveReplicaJob.pollApplyOnceRouted(spark, eps, tableCols2,
-          targets, s"$root/stage", txnsPerCommit = 2)
+          targets, s"$root/stage",
+          WireReplicaJob.applyRouted(_, targets, txnsPerCommit = 2))
       poll(ep0) // ONE dial, both tables land
       def accounts() = TxnApplier.readCurrent(spark, s"$root/t_accounts")
         .select($"acct", $"balance").as[(Long, Long)].collect().toMap
@@ -278,5 +282,88 @@ class LiveReplicaSpec extends SparkSpec {
         .select($"tso").as[Long].collect().toSet
       assert(stagedTsos == Set(5L, 6L, 7L, 8L), s"staged $stagedTsos")
     } finally srv.close()
+  }
+
+  test("(file, pos) runner, defaults: a middle column dropped in trigger 1 leaves trigger 2's cells under their own columns") {
+    val root = java.nio.file.Files.createTempDirectory("graft-run-drop")
+    val served = s"$root/served"
+    val v1 = Map(("app", "t") -> Seq("k", "seq", "mid", "v"))
+    val v2 = Map(("app", "t") -> Seq("k", "seq", "v"))
+    def ev(rows: Seq[(Long, String, Map[String, String], String)]) =
+      rows.map { case (tso, op, after, ddl) =>
+        (tso, tso, op, "app", "t", Map.empty[String, String], after, ddl,
+          1700000000L)
+      }.toDF("tso", "txnId", "op", "schemaName", "tableName", "before",
+        "after", "ddl", "tsoTime").coalesce(1).sortWithinPartitions("tso")
+    // binlog.000000 (the producer's v1 shape): a row, then DROP COLUMN
+    // mid; its ROTATE names binlog.000001, not served yet
+    BinlogWire.writeChangeStreamBinlogFiles(ev(Seq(
+      (1L, "INSERT", Map("k" -> "1", "seq" -> "1", "mid" -> "m1",
+        "v" -> "a"), null),
+      (2L, "DDL", Map.empty, "ALTER TABLE t DROP COLUMN mid"))),
+      v1, served, checksummed = true, rotateChain = true)
+    val srv = new graft.sinks.BinlogDumpServer(served, "repl", "pw")
+    try {
+      val ep0 = Seq(BinlogDumpClient.Endpoint("dn1", "localhost", srv.port,
+        "repl", "pw", "binlog.000000", 4L))
+      val targets = Seq(WireReplicaJob.TableTarget("app", "t",
+        Seq("k" -> "long", "seq" -> "long", "mid" -> "string",
+          "v" -> "string"), Seq("k"), "seq", s"$root/t", 2))
+      def trigger(): Unit = LiveReplicaJob.run(spark, ep0, v1, targets,
+        s"$root/stage", s"$root/cursors", intervalMs = 0, maxTriggers = 1)
+      trigger()
+      // binlog.000001: the producer writes the v2 shape, three cells
+      val d = java.nio.file.Files.createTempDirectory("graft-run-drop-w")
+      BinlogWire.writeChangeStreamBinlogFiles(ev(Seq(
+        (3L, "INSERT", Map("k" -> "2", "seq" -> "1", "v" -> "b"), null))),
+        v2, d.toString, checksummed = true)
+      java.nio.file.Files.copy(d.resolve("binlog.000000"),
+        java.nio.file.Paths.get(served, "binlog.000001"))
+      trigger()
+      val cur = TxnApplier.readCurrent(spark, s"$root/t")
+      assert(cur.select($"k", $"v").as[(Long, String)].collect().toMap ==
+        Map(1L -> "a", 2L -> "b"))
+      assert(!cur.columns.contains("mid"), cur.columns.mkString(","))
+    } finally srv.close()
+  }
+
+  test("(file, pos) runner's maintenance cadence folds delta chains before vacuum") {
+    val root = java.nio.file.Files.createTempDirectory("graft-run-fold")
+    val served = s"$root/served"
+    val reg = Map(("app", "t") -> Seq("k", "seq", "v"))
+    val rows = (1L to 4L).map(i => (i, i, "INSERT", "app", "t",
+      Map.empty[String, String],
+      Map("k" -> s"$i", "seq" -> "1", "v" -> s"v$i"), 1700000000L))
+      .toDF("tso", "txnId", "op", "schemaName", "tableName", "before",
+        "after", "tsoTime")
+    BinlogWire.writeChangeStreamBinlogFiles(
+      rows.coalesce(1).sortWithinPartitions("tso"), reg, served,
+      checksummed = true)
+    val target = WireReplicaJob.TableTarget("app", "t",
+      Seq("k" -> "long", "seq" -> "long", "v" -> "string"), Seq("k"),
+      "seq", s"$root/t", 2)
+    // the target already holds the log as delta commits, one per txn
+    WireReplicaJob.applyRouted(routed(rows, Seq(target)), Seq(target),
+      txnsPerCommit = 1, applyMode = TxnApplier.ApplyMode.Delta)
+    assert(TxnApplier.maxChainLength(target.targetDir) > 1)
+    def dataDirs() = new java.io.File(s"${target.targetDir}/data")
+      .listFiles().count(_.isDirectory)
+    val before = dataDirs()
+    val srv = new graft.sinks.BinlogDumpServer(served, "repl", "pw")
+    try {
+      // one caught-up trigger (cursor at the log's end): no rows, only
+      // the cadence
+      val end = new java.io.File(served, "binlog.000000").length
+      LiveReplicaJob.run(spark,
+        Seq(BinlogDumpClient.Endpoint("dn1", "localhost", srv.port, "repl",
+          "pw", "binlog.000000", end)),
+        reg, Seq(target), s"$root/stage", s"$root/cursors",
+        intervalMs = 0, maxTriggers = 1, vacuumEvery = 1)
+    } finally srv.close()
+    assert(TxnApplier.maxChainLength(target.targetDir) == 1)
+    assert(dataDirs() < before, s"vacuum kept $before data dirs")
+    assert(TxnApplier.readCurrent(spark, target.targetDir)
+      .select($"k", $"v").as[(Long, String)].collect().toMap ==
+      (1L to 4L).map(i => i -> s"v$i").toMap)
   }
 }

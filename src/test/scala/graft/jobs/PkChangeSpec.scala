@@ -21,6 +21,10 @@ class PkChangeSpec extends SparkSpec {
   private val colTypes =
     Seq("k" -> "bigint", "seq" -> "bigint", "v" -> "string")
 
+  /** The table's replica target under `root`, 2 buckets. */
+  private def target(root: java.nio.file.Path) = WireReplicaJob.TableTarget(
+    "db", "t", colTypes, Seq("k"), "seq", s"$root/target", 2)
+
   private def row(tso: Long, op: String,
       before: Map[String, String], after: Map[String, String]) =
     (tso, tso, op, "db", "t", before, after, null: String, 1700000000L)
@@ -61,9 +65,8 @@ class PkChangeSpec extends SparkSpec {
       row(6L, "UPDATE",
         Map("k" -> "5", "seq" -> "2", "v" -> "e"),
         Map("k" -> "5", "seq" -> "6", "v" -> "E"))))
-    val q = WireReplicaJob.start(spark, s"$root/log", reg, "db", "t",
-      colTypes, Seq("k"), "seq", s"$root/target", s"$root/ckpt", 2)
-    q.awaitTermination()
+    WireTail.replicate(spark, s"$root/log", reg, Seq(target(root)),
+      s"$root/ckpt")
     assert(state(s"$root/target") ==
       Map(3L -> "c", 1L -> "z", 5L -> "E"),
       "old keys of moved rows must be erased, reuse and in-place " +
@@ -79,10 +82,8 @@ class PkChangeSpec extends SparkSpec {
       row(2L, "UPDATE",
         Map("k" -> "10", "seq" -> "1", "v" -> "x"),
         Map("k" -> "11", "seq" -> "2", "v" -> "y"))))
-    val q = WireReplicaJob.start(spark, s"$root/log", reg, "db", "t",
-      colTypes, Seq("k"), "seq", s"$root/target", s"$root/ckpt", 2,
-      txnsPerCommit = 1)
-    q.awaitTermination()
+    WireTail.replicate(spark, s"$root/log", reg, Seq(target(root)),
+      s"$root/ckpt", txnsPerCommit = 1)
     assert(state(s"$root/target") == Map(11L -> "y"))
     // NO committed version shows both keys (half-applied move) or
     // neither after the insert

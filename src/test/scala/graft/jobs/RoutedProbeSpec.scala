@@ -4,12 +4,12 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.{Appliers, TxnApplier}
+import graft.operators.{Appliers, TxnApplier, UpsertOracle}
 
 /** The routed apply's one write query per table trusts the (tso, bucket)
   * pairs that the staging write observed ([[WireReplicaJob.stageRouted]]).
   * These cases pin the probe against the in-memory converge fold
-  * (`Appliers.mergeToFinalImages` + `Appliers.upsert`, one transaction at
+  * (`Appliers.mergeToFinalImages` + `UpsertOracle.upsert`, one transaction at
   * a time in TSO order) for both apply modes, pin the guard that refuses
   * to publish rows whose pair the probe missed, and crash a staged
   * 2-table trigger between its durable steps. */
@@ -62,7 +62,7 @@ class RoutedProbeSpec extends SparkSpec {
       .foldLeft(empty) { case (state, (_, rows)) =>
         val txn = spark.createDataFrame(
           java.util.Arrays.asList(rows: _*), schema)
-        spark.createDataFrame(java.util.Arrays.asList(Appliers.upsert(state,
+        spark.createDataFrame(java.util.Arrays.asList(UpsertOracle.upsert(state,
           Appliers.mergeToFinalImages(txn, Seq("k"), "seq", "op"),
           Seq("k")).collect(): _*), empty.schema)
       }.collect().toSet
@@ -117,7 +117,7 @@ class RoutedProbeSpec extends SparkSpec {
       if (exchange) spark.conf.set(conf, "1")
       spark.listenerManager.register(listener)
       try Seq(batch1, batch2, batch2, batch3).foreach { b =>
-        WireReplicaJob.applyRoutedWithDdl(routed(decoded(b), targets),
+        WireReplicaJob.applyRouted(routed(decoded(b), targets),
           targets, txnsPerCommit = 3, applyMode = mode)
       } finally {
         org.apache.spark.TestListenerBus.drain(spark.sparkContext)

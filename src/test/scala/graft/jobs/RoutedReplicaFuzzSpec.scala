@@ -173,10 +173,10 @@ class RoutedReplicaFuzzSpec extends SparkSpec {
       var prev = Option.empty[Seq[(Long, Long, String, String, Long,
         String, String, String)]]
       batches.foreach { batch =>
-        WireReplicaJob.applyRoutedWithDdl(decodedOf(batch), targets,
+        WireReplicaJob.applyRouted(decodedOf(batch), targets,
           txnsPerCommit = 1 + rnd.nextInt(3))
         if (rnd.nextInt(3) == 0) // replay: gates must drop rows AND ddl
-          prev.foreach(p => WireReplicaJob.applyRoutedWithDdl(
+          prev.foreach(p => WireReplicaJob.applyRouted(
             decodedOf(p), targets, txnsPerCommit = 2))
         prev = Some(batch)
       }

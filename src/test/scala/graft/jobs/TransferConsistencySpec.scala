@@ -115,11 +115,11 @@ class TransferConsistencySpec extends SparkSpec {
       (0 until nAccounts).map(a => (a.toLong, 0L, 100L))
         .toDF("id", "seq", "balance"),
       Seq("id"), targetDir, 4)
-    val q2 = WireReplicaJob.start(spark, out, reg, "bank", "account",
-      Seq("id" -> "bigint", "seq" -> "bigint", "balance" -> "bigint"),
-      Seq("id"), "seq", targetDir, s"$root/replica-ckpt", 4,
-      txnsPerCommit = 1)
-    q2.awaitTermination()
+    WireTail.replicate(spark, out, reg,
+      Seq(WireReplicaJob.TableTarget("bank", "account",
+        Seq("id" -> "bigint", "seq" -> "bigint", "balance" -> "bigint"),
+        Seq("id"), "seq", targetDir, 4)),
+      s"$root/replica-ckpt", txnsPerCommit = 1)
 
     // final state matches the fixture's books exactly
     val finalState = TxnApplier.readCurrent(spark, targetDir)

@@ -39,7 +39,7 @@ class TriggerFloorSpec extends SparkSpec {
       targets: Seq[WireReplicaJob.TableTarget], mode: TxnApplier.ApplyMode,
       stage: String): Unit = {
     val staged = WireReplicaJob.stageRouted(batch, stage, targets)
-    WireReplicaJob.applyRoutedWithDdl(staged, targets, txnsPerCommit = 1,
+    WireReplicaJob.applyRouted(staged, targets, txnsPerCommit = 1,
       applyMode = mode)
     graft.sinks.RegistrySidecar.evolve(staged.ddls,
       tables.map(t => ("db", t) -> Seq("k", "seq", "v")).toMap)

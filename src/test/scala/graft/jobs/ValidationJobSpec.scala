@@ -2,7 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.operators.Appliers
+import graft.operators.{Appliers, UpsertOracle}
 
 class ValidationJobSpec extends SparkSpec {
   import spark.implicits._
@@ -37,7 +37,7 @@ class ValidationJobSpec extends SparkSpec {
     val recon = ValidationJob.reconciliationBatch(diffs)
       .withColumn("seq", lit(1L))
     val images = Appliers.mergeToFinalImages(recon, Seq("k"), "seq", "op")
-    val converged = Appliers.upsert(dst, images.select($"k", $"v", $"effective_op"),
+    val converged = UpsertOracle.upsert(dst, images.select($"k", $"v", $"effective_op"),
       Seq("k"))
     // converged == src exactly
     assert(converged.count() == src.count())

@@ -101,12 +101,10 @@ class WireReplicaSpec extends SparkSpec {
         ev.coalesce(1).sortWithinPartitions("tso", "txnId"), tableCols,
         wireDir, filePrefix = prefix, checksummed = true)
     }
-    def run(ck: String = ckpt): Unit = {
-      val q = WireReplicaJob.start(spark, wireDir, tableCols, "bank",
-        "accounts", colTypes, Seq("acct"), "seq", target, ck,
-        nBuckets = 4, txnsPerCommit = 3)
-      q.awaitTermination()
-    }
+    def run(ck: String = ckpt): Unit =
+      WireTail.replicate(spark, wireDir, tableCols,
+        Seq(WireReplicaJob.TableTarget("bank", "accounts", colTypes,
+          Seq("acct"), "seq", target, 4)), ck, txnsPerCommit = 3)
     def state(): Map[Long, Long] = TxnApplier.readCurrent(spark, target)
       .select($"acct", $"balance").as[(Long, Long)].collect().toMap
 
@@ -165,10 +163,10 @@ class WireReplicaSpec extends SparkSpec {
     // prefix leaks in (its accounts stay absent from the empty-bootstrap
     // replica)
     val fromTso = 4L
-    val q = WireReplicaJob.start(spark, wireDir, tableCols, "bank",
-      "accounts", colTypes, Seq("acct"), "seq", target, s"$root/ckpt",
-      nBuckets = 4, txnsPerCommit = 2, fromTso = Some(fromTso))
-    q.awaitTermination()
+    WireTail.replicate(spark, wireDir, tableCols,
+      Seq(WireReplicaJob.TableTarget("bank", "accounts", colTypes,
+        Seq("acct"), "seq", target, 4)), s"$root/ckpt",
+      txnsPerCommit = 2, fromTso = Some(fromTso))
     val expectedSuffix = images.filter(_._1 > fromTso)
       .groupBy(_._3).map { case (a, imgs) => a -> imgs.maxBy(_._2)._4 }
     val state = graft.operators.TxnApplier.readCurrent(spark, target)
@@ -236,16 +234,16 @@ class WireReplicaSpec extends SparkSpec {
       "bank", "accounts", "op", "ts", "tso", wireDir, checksummed = true)
     assert(files >= 2) // the feed is genuinely multi-file
 
-    val q = WireReplicaJob.start(spark, wireDir, tableCols, "bank",
-      "accounts", colTypes, Seq("acct"), "seq", target, s"$root/ckpt",
-      nBuckets = 4, txnsPerCommit = 2, maxFilesPerTrigger = 1)
-    q.awaitTermination()
+    WireTail.replicate(spark, wireDir, tableCols,
+      Seq(WireReplicaJob.TableTarget("bank", "accounts", colTypes,
+        Seq("acct"), "seq", target, 4)), s"$root/ckpt",
+      txnsPerCommit = 2, maxFilesPerTrigger = 1)
     val state = TxnApplier.readCurrent(spark, target)
       .select($"acct", $"balance").as[(Long, Long)].collect().toMap
     assert(state == expected)
   }
 
-  test("startRouted: one standing stream fans a two-table wire out to per-table targets, incrementally") {
+  test("wire tail: one standing stream fans a two-table wire out to per-table targets, incrementally") {
     val root = java.nio.file.Files.createTempDirectory("graft-wirerouted")
     val wireDir = s"$root/wire"
     val tableCols2 = Map(
@@ -268,11 +266,8 @@ class WireReplicaSpec extends SparkSpec {
         ev.coalesce(1).sortWithinPartitions("tso", "txnId"), tableCols2,
         wireDir, filePrefix = prefix, checksummed = true)
     }
-    def run(): Unit = {
-      val q = WireReplicaJob.startRouted(spark, wireDir, tableCols2,
-        targets, s"$root/ckpt", txnsPerCommit = 2)
-      q.awaitTermination()
-    }
+    def run(): Unit = WireTail.replicate(spark, wireDir, tableCols2,
+      targets, s"$root/ckpt", txnsPerCommit = 2)
     def accounts() = TxnApplier.readCurrent(spark, s"$root/t_accounts")
       .select($"acct", $"balance").as[(Long, Long)].collect().toMap
     def audit() = TxnApplier.readCurrent(spark, s"$root/t_audit")
@@ -306,9 +301,8 @@ class WireReplicaSpec extends SparkSpec {
     run()
     assert(accounts() == Map(1L -> 150L) && audit() == Map(11L -> "credit"))
 
-    // segment 3 carries a DDL ON THE WIRE: the standing stream with
-    // ddlInStream=true evolves the routed target, then applies the
-    // post-DDL row carrying the new column
+    // segment 3 carries a DDL ON THE WIRE: the routed apply evolves
+    // the target, then applies the post-DDL row carrying the new column
     val ev3 = Seq(
       (5L, 5L, "DDL", "bank", "accounts", Map.empty[String, String],
         Map.empty[String, String],
@@ -327,9 +321,8 @@ class WireReplicaSpec extends SparkSpec {
       ev3.coalesce(1).sortWithinPartitions("tso", "txnId"),
       tableCols2Evolved, wireDir, filePrefix = "binlog.c.",
       checksummed = true)
-    val q3 = WireReplicaJob.startRouted(spark, wireDir, tableCols2Evolved,
-      targets, s"$root/ckpt", txnsPerCommit = 2, ddlInStream = true)
-    q3.awaitTermination()
+    WireTail.replicate(spark, wireDir, tableCols2Evolved, targets,
+      s"$root/ckpt", txnsPerCommit = 2)
     val evolved = TxnApplier.readCurrent(spark, s"$root/t_accounts")
       .select($"acct", $"balance", $"note")
       .as[(Long, Long, Option[String])].collect()
@@ -372,10 +365,8 @@ class WireReplicaSpec extends SparkSpec {
     // one file per trigger: the rename and the stale-named row land in
     // SEPARATE batches — only the persisted `_renames` lineage can
     // carry the fallback across the batch boundary
-    val q = WireReplicaJob.startRouted(spark, wireDir, regV1, targets,
-      s"$root/ckpt", txnsPerCommit = 2, maxFilesPerTrigger = 1,
-      ddlInStream = true)
-    q.awaitTermination()
+    WireTail.replicate(spark, wireDir, regV1, targets, s"$root/ckpt",
+      txnsPerCommit = 2, maxFilesPerTrigger = 1)
     val cur = TxnApplier.readCurrent(spark, s"$root/t")
     assert(cur.columns.contains("v2") && !cur.columns.contains("v"))
     assert(cur.select($"acct", $"v2").as[(Long, String)].collect().toMap
@@ -383,7 +374,7 @@ class WireReplicaSpec extends SparkSpec {
     assert(TxnApplier.renameLineage(s"$root/t") == Map("v2" -> Seq("v")))
 
     // a LATER plain batch (no DDL anywhere near it) with another
-    // stale-named row: applyRouted reads the persisted lineage too
+    // stale-named row: the persisted lineage still reads it
     WireReplicaJob.applyRouted(routed(
       Seq((4L, "INSERT", "bank", "accounts", Map.empty[String, String],
         Map("acct" -> "3", "seq" -> "1", "v" -> "300")))
@@ -395,7 +386,7 @@ class WireReplicaSpec extends SparkSpec {
 
     // reusing the old NAME for a brand-new column evicts it from the
     // chain — images named "v" now feed the NEW column only
-    WireReplicaJob.applyRoutedWithDdl(routed(
+    WireReplicaJob.applyRouted(routed(
       Seq((5L, "DDL", "bank", "accounts", Map.empty[String, String],
         Map.empty[String, String],
         "ALTER TABLE accounts ADD COLUMN v VARCHAR(10)"),
@@ -415,7 +406,7 @@ class WireReplicaSpec extends SparkSpec {
     // renaming ONTO an existing column refuses — a duplicate-name
     // schema would misbind cells
     intercept[IllegalArgumentException] {
-      WireReplicaJob.applyRoutedWithDdl(routed(
+      WireReplicaJob.applyRouted(routed(
         Seq((7L, "DDL", "bank", "accounts", Map.empty[String, String],
           Map.empty[String, String],
           "ALTER TABLE accounts RENAME COLUMN v TO v2"))
@@ -450,7 +441,7 @@ class WireReplicaSpec extends SparkSpec {
         "note" -> "hi"), null),
       (5L, "UPDATE", Map("acct" -> "1", "seq" -> "2", "balance" -> "150",
         "note" -> "upd"), null)))
-    WireReplicaJob.applyRoutedWithDdl(batch1, targets, txnsPerCommit = 2)
+    WireReplicaJob.applyRouted(batch1, targets, txnsPerCommit = 2)
     val s1 = TxnApplier.readCurrent(spark, target)
       .select($"acct", $"balance", $"note")
       .as[(Long, Long, Option[String])].collect()
@@ -460,7 +451,7 @@ class WireReplicaSpec extends SparkSpec {
 
     // replay the whole batch: DDL no-ops, rows hit the position gate
     val versions = TxnApplier.versions(target).size
-    WireReplicaJob.applyRoutedWithDdl(batch1, targets, txnsPerCommit = 2)
+    WireReplicaJob.applyRouted(batch1, targets, txnsPerCommit = 2)
     assert(TxnApplier.versions(target).size == versions)
 
     // batch 2: DROP the added column + one more row
@@ -468,7 +459,7 @@ class WireReplicaSpec extends SparkSpec {
       (6L, "DDL", Map.empty, "ALTER TABLE accounts DROP COLUMN note"),
       (7L, "INSERT", Map("acct" -> "4", "seq" -> "1", "balance" -> "400"),
         null)))
-    WireReplicaJob.applyRoutedWithDdl(batch2, targets, txnsPerCommit = 2)
+    WireReplicaJob.applyRouted(batch2, targets, txnsPerCommit = 2)
     val cur = TxnApplier.readCurrent(spark, target)
     assert(!cur.columns.contains("note"))
     assert(cur.select($"acct", $"balance").as[(Long, Long)].collect().toMap
@@ -477,7 +468,7 @@ class WireReplicaSpec extends SparkSpec {
     // batch 3: re-type of a NON-key column REBUILDS the target in
     // place (TxnApplier.rebuildTarget) — the committed state survives
     // under the new type, and post-DDL rows apply against it
-    WireReplicaJob.applyRoutedWithDdl(decodedOf(Seq(
+    WireReplicaJob.applyRouted(decodedOf(Seq(
       (8L, "DDL", Map.empty,
         "ALTER TABLE accounts MODIFY COLUMN balance VARCHAR(10)"),
       (9L, "INSERT", Map("acct" -> "5", "seq" -> "1",
@@ -494,7 +485,7 @@ class WireReplicaSpec extends SparkSpec {
     // STRADDLE the rename in one batch land intact — the pre-DDL row
     // still carries the OLD name in its string image and applies
     // through the fallback chain
-    WireReplicaJob.applyRoutedWithDdl(decodedOf(Seq(
+    WireReplicaJob.applyRouted(decodedOf(Seq(
       (10L, "INSERT", Map("acct" -> "6", "seq" -> "1",
         "balance" -> "600"), null),
       (11L, "DDL", Map.empty,
@@ -513,7 +504,7 @@ class WireReplicaSpec extends SparkSpec {
     // version history are untouched (renamed-away column no-ops, rows
     // hit the position gate)
     val vAfter = TxnApplier.versions(target).size
-    WireReplicaJob.applyRoutedWithDdl(decodedOf(Seq(
+    WireReplicaJob.applyRouted(decodedOf(Seq(
       (10L, "INSERT", Map("acct" -> "6", "seq" -> "1",
         "balance" -> "600"), null),
       (11L, "DDL", Map.empty,
@@ -529,17 +520,17 @@ class WireReplicaSpec extends SparkSpec {
     // KEY/sequence columns still refuse loudly — the TableTarget
     // routing names them, so re-keying online would orphan the config
     intercept[IllegalArgumentException] {
-      WireReplicaJob.applyRoutedWithDdl(decodedOf(Seq((20L, "DDL",
+      WireReplicaJob.applyRouted(decodedOf(Seq((20L, "DDL",
         Map.empty,
         "ALTER TABLE accounts MODIFY COLUMN acct VARCHAR(10)"))),
         targets)
     }
     intercept[IllegalArgumentException] {
-      WireReplicaJob.applyRoutedWithDdl(decodedOf(Seq((21L, "DDL",
+      WireReplicaJob.applyRouted(decodedOf(Seq((21L, "DDL",
         Map.empty, "ALTER TABLE accounts DROP COLUMN acct"))), targets)
     }
     intercept[IllegalArgumentException] {
-      WireReplicaJob.applyRoutedWithDdl(decodedOf(Seq((22L, "DDL",
+      WireReplicaJob.applyRouted(decodedOf(Seq((22L, "DDL",
         Map.empty,
         "ALTER TABLE accounts RENAME COLUMN seq TO seqno"))), targets)
     }
@@ -547,11 +538,11 @@ class WireReplicaSpec extends SparkSpec {
     // the stream follow a new name the routing doesn't match would
     // stop replication without a sound
     intercept[IllegalArgumentException] {
-      WireReplicaJob.applyRoutedWithDdl(decodedOf(Seq((23L, "DDL",
+      WireReplicaJob.applyRouted(decodedOf(Seq((23L, "DDL",
         Map.empty, "RENAME TABLE accounts TO accounts2"))), targets)
     }
     intercept[IllegalArgumentException] {
-      WireReplicaJob.applyRoutedWithDdl(decodedOf(Seq((24L, "DDL",
+      WireReplicaJob.applyRouted(decodedOf(Seq((24L, "DDL",
         Map.empty, "ALTER TABLE accounts RENAME TO accounts2"))),
         targets)
     }
@@ -575,7 +566,7 @@ class WireReplicaSpec extends SparkSpec {
         "ddl"), targets)
 
     // batch 1 carries rows ONLY for accounts — audit is quiet, but the
-    // non-DDL routed apply must still bootstrap its schema sidecar
+    // routed apply must still bootstrap its schema sidecar
     WireReplicaJob.applyRouted(rowsFor("accounts", Seq(
       1L -> Map("acct" -> "1", "seq" -> "1", "balance" -> "100"))),
       targets, txnsPerCommit = 1, applyMode = TxnApplier.ApplyMode.Delta)
@@ -593,7 +584,7 @@ class WireReplicaSpec extends SparkSpec {
     assert(TxnApplier.compact(spark, s"$root/t_nowhere").isEmpty)
 
     // an ALTER for the never-carried-rows table evolves its sidecar
-    WireReplicaJob.applyRoutedWithDdl(routed(Seq(
+    WireReplicaJob.applyRouted(routed(Seq(
       (2L, "DDL", "bank", "audit", Map.empty[String, String],
         Map.empty[String, String],
         "ALTER TABLE audit ADD COLUMN severity VARCHAR(8)"))

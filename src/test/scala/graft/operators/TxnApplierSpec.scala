@@ -72,7 +72,7 @@ class TxnApplierSpec extends SparkSpec with TxnGroupingCheck {
     // splits a transaction
     val torn = transferBatch.filter($"seq" <= 6)
     val images = Appliers.mergeToFinalImages(torn, Seq("acct"), "seq", "op")
-    val s = Appliers.upsert(accounts.select($"acct", $"balance"), images,
+    val s = UpsertOracle.upsert(accounts.select($"acct", $"balance"), images,
       Seq("acct")).agg(sum($"balance")).head().getLong(0)
     assert(s != total, "torn prefix should break the invariant")
     assert(s == total - 30L) // txn 3's in-flight amount

@@ -631,6 +631,36 @@ class BinlogDumpClientSpec extends SparkSpec {
     } finally srv.close()
   }
 
+  test("no Nagle on the dialogue: 20 back-to-back caught-up GTID dumps finish in well under one delayed ACK each") {
+    // a caught-up dump answers with several small packets; with Nagle on
+    // either socket each dial waits out Linux's ~40 ms delayed ACK, so
+    // 20 dials would take >= 800 ms
+    val sid = java.util.UUID.fromString(
+      "0a1b2c3d-1111-2222-3333-4444555577bb")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-nodelay").toString
+    BinlogWire.writeTxnFramedBinlogFiles(
+      Seq((1L, "v1", "INSERT", 1L, 1L)).toDF("id", "v", "op", "tso", "seq")
+        .withColumn("ts", lit(1700000000L)),
+      specs, "app", "t", "op", "ts", "tso", dir, checksummed = true,
+      tsoCarrier = "sequence", gtidSid = Some(sid))
+    val all = BinlogCatalog.executedGtidSet(spark, dir)
+    val srv = new graft.sinks.BinlogDumpServer(dir, "repl", "pw")
+    try {
+      def dial(): Unit = {
+        val (_, next, caughtUp) =
+          BinlogDumpClient.dumpSegmentGtidWithCursorStatus(
+            "localhost", srv.port, "repl", "pw", all)
+        assert(next == all && caughtUp)
+      }
+      dial() // warm the classes and the server's file index
+      val t0 = System.nanoTime()
+      (1 to 20).foreach(_ => dial())
+      val ms = (System.nanoTime() - t0) / 1000000L
+      assert(ms < 600L, s"20 caught-up dials took $ms ms")
+    } finally srv.close()
+  }
+
   test("idle heartbeats feed the StallMonitor: a live-but-idle source never reads as silent") {
     import graft.jobs.{LiveReplicaJob, WireReplicaJob}
     val dir = java.nio.file.Files

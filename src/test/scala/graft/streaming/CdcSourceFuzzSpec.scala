@@ -168,7 +168,7 @@ class CdcSourceFuzzSpec extends SparkSpec {
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             val staged = WireReplicaJob.stageRouted(
               batch, s"$root/stage", targets)
-            WireReplicaJob.applyRoutedWithDdl(staged, targets,
+            WireReplicaJob.applyRouted(staged, targets,
               txnsPerCommit = 1 + rnd.nextInt(3))
             val reg0 = RegistrySidecar.resume(registryDir,
               regAt(renamed = false))
